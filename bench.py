@@ -187,6 +187,7 @@ def apply_once(spark, n_events: int, log_dir: str, n_files: int, workdir: str,
     from change_data_capturer_ms_spark.config import EngineConfig
     from change_data_capturer_ms_spark.lake.table import LakeTable
     from change_data_capturer_ms_spark.streaming import CDCPipeline
+    from change_data_capturer_ms_spark.streaming.pipeline import _hist_batch_id
 
     shutil.rmtree(workdir, ignore_errors=True)
     mft = max(1, math.ceil(n_files / n_batches))
@@ -204,9 +205,10 @@ def apply_once(spark, n_events: int, log_dir: str, n_files: int, workdir: str,
     # commit mtimes (each batch_<id>.json is written at its commit): batch i
     # wall ~= mtime(i) - mtime(i-1), batch 0 from t0. Zero probe overhead;
     # the droop diagnosis (is per-batch cost flat or growing across a replay?)
-    # reads these directly.
-    hist = sorted(glob.glob(f"{workdir}/table/_lease/batch_*.json"),
-                  key=lambda p: int(os.path.basename(p)[6:-5]))
+    # reads these directly. Ring names parse like the ring pruner's; a
+    # malformed batch_*.json is skipped, not fatal to the finished run.
+    hist = sorted((p for p in glob.glob(f"{workdir}/table/_lease/batch_*.json")
+                   if _hist_batch_id(p) >= 0), key=_hist_batch_id)
     mt = [os.path.getmtime(p) for p in hist]
     batch_walls = ([round(mt[0] - t0, 2)] if mt else []) + [
         round(b - a, 2) for a, b in zip(mt, mt[1:])]

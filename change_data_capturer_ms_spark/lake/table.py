@@ -31,6 +31,17 @@ Exactly-once: `merge(batch_id=...)` consults the manifest's committed-batch ledg
 turns re-delivered batches into no-ops (reference's idempotent transactional producer
 contract, /root/reference/src/queue/eventhub/utils.ts:28-39 → SURVEY.md §2.2 E21).
 
+One commit path: every snapshot — create, merge, merge_into, compact, rebucket,
+expire_tombstones, rollback — is produced by `_commit`, which allocates the version,
+derives the new manifest from its base, writes the data files through the one rewrite
+step (`_rewrite`: new bucket files under data/v{N}-<uuid>/ plus the carried untouched
+files), appends and prunes the ledger entry, strips blooms on widened columns and
+swaps the ref with the expected parent. The lease rule lives there too: a data commit
+(merge, merge_into) writes a NEW lease {id, lease, batch_id, lineage, metrics}; a
+maintenance commit (compact, rebucket, expire_tombstones) carries the parent's lease
+unchanged, so maintenance never moves the CDC cursor; rollback restores the target
+snapshot's full state — files, schema, lease and ledger alike.
+
 Schema evolution (E20): additive — a batch with new payload columns extends the
 manifest schema; old files are *not* rewritten, readers project them with NULLs via
 the explicit manifest schema (Spark parquet reader fills absent columns) — and
@@ -46,16 +57,19 @@ Time travel: `read(version=N)` reads any retained snapshot (replay verification)
 
 from __future__ import annotations
 
+import dataclasses
 import glob
 import os
 import uuid
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from change_data_capturer_ms_spark.errors import MissingResourceError
-from change_data_capturer_ms_spark.lake.manifest import FileEntry, Manifest, ManifestStore
+from change_data_capturer_ms_spark.lake.manifest import (
+    FileEntry, Manifest, ManifestStore, prune_ledger)
 from change_data_capturer_ms_spark.operators.dedupe import lww_dedupe
 
 SEQ_META_COL = "_last_seq"
@@ -211,6 +225,17 @@ def _evolved_schema(
     return T.StructType(fields), schema_version + 1
 
 
+def _data_lease(source_id: str, batch_id, token: str, metrics: dict,
+                lineage: list[dict] | None = None) -> dict:
+    """A data commit's NEW lease: the reference's ContinuationTokenItem
+    {id, lease} (reference src/factory/types.ts:7-12; id = the
+    collection/container id, cosmos.ts:92-104) plus batch id, lineage and
+    metrics. The caller fills `metrics` in its write step, once the write job
+    has observed the winner counts."""
+    return {"id": source_id, "lease": token, "batch_id": batch_id,
+            "lineage": lineage or [], "metrics": metrics}
+
+
 def bucket_expr(key_cols: list[str], n_buckets: int):
     """Deterministic bucket id — pure function of the key (never random), so dedupe
     and co-location survive any repartitioning (SURVEY.md §7.3 salting note)."""
@@ -301,8 +326,8 @@ class LakeTable:
             list(schema.fields)
             + [f for f in extra if f.name not in schema.fieldNames()]
         )
-        m = Manifest(
-            version=0,
+        return self._commit(None, base=Manifest(
+            version=0,  # version and parent are assigned by _commit
             parent=None,
             schema_json=schema.json(),
             schema_version=0,
@@ -314,9 +339,7 @@ class LakeTable:
             write_mode=self._write_mode,
             bloom_cols=self._bloom_cols,
             bucket_cols=self._bucket_cols,
-        )
-        self.store.commit(m, expected_parent=None)
-        return m
+        ))
 
     def get_or_create(self, schema: T.StructType) -> Manifest:
         return self.manifest() if self.exists() else self.create(schema)
@@ -476,23 +499,7 @@ class LakeTable:
         cur = self.manifest()
         if version == cur.version:
             return {"skipped": True, "version": cur.version}
-        tgt = self.manifest(version)
-        new = Manifest(
-            version=self.store.next_version(),
-            parent=cur.version,
-            schema_json=tgt.schema_json,
-            schema_version=tgt.schema_version,
-            n_buckets=tgt.n_buckets,
-            key_cols=list(tgt.key_cols),
-            files=list(tgt.files),
-            committed_batches=list(tgt.committed_batches),
-            lease=dict(tgt.lease),
-            batch_watermarks=dict(tgt.batch_watermarks),
-            write_mode=tgt.write_mode,
-            bloom_cols=list(tgt.bloom_cols),
-            bucket_cols=list(tgt.bucket_cols),
-        )
-        self.store.commit(new, expected_parent=cur.version, branch=self._branch)
+        new = self._commit(cur, base=self.manifest(version))
         return {"skipped": False, "version": new.version, "restored": version}
 
     def _frame(self, m: Manifest, files: list[FileEntry],
@@ -749,50 +756,47 @@ class LakeTable:
         delete_op: str = "delete",
         tiebreakers: list[str] | None = None,
         lineage: list[dict] | None = None,
-        planning_df: DataFrame | None = None,
         planning_stats: list[tuple[int, int, int]] | None = None,
     ) -> dict:
-        """MERGE the micro-batch into the table; returns commit metrics.
+        """MERGE the micro-batch into the table; returns commit metrics and
+        the committed lease.
 
         WHEN MATCHED AND op='delete' THEN DELETE / WHEN MATCHED UPDATE /
         WHEN NOT MATCHED INSERT — resolved as union + per-key LWW (see module doc).
 
         Idempotent on (source_id, batch_id): a re-delivered batch is a no-op and
         returns {"skipped": True} (E21 exactly-once).
+
+        The lease's resume cursor covers every event read and never
+        regresses: the max of the parent's cursor, the merged max_seq and
+        `lease_token` — the max seq of events the caller read but did not
+        pass in (e.g. quarantined ones).
         """
         m = self.manifest()
-        ledger_key = f"{source_id}:{batch_id}"
         if m.is_committed(source_id, batch_id):
             return {"skipped": True, "version": m.version, "batch_id": batch_id}
 
         keys = m.key_cols
         n_buckets = m.n_buckets
-        old_schema = m.schema
         payload_cols = [c for c in batch.columns if c not in (seq_col, op_col)]
-        schema, schema_version = _evolved_schema(old_schema, m.schema_version,
+        schema, schema_version = _evolved_schema(m.schema, m.schema_version,
                                                  batch.schema, payload_cols,
                                                  bucket_key=m.bucket_key)
         batch = _normalize_key_types(batch, keys, schema, "merge")
-        if planning_df is not None:
-            planning_df = _normalize_key_types(planning_df, keys, schema,
-                                               "merge")
-        out_cols = [f.name for f in schema.fields]
 
         # 1) cheap planning job: affected buckets + input metrics from the RAW
         #    key/op/seq columns only — Catalyst prunes every derived column (incl.
         #    pandas-UDF projections), so the expensive transform pipeline does NOT
         #    execute here. Distinct buckets of the raw batch equal distinct buckets
         #    of the deduped batch (dedupe keeps ≥1 row per key), so pruning is exact.
-        #    `planning_df` (same rows as batch, pre-transform) lets the caller skip
-        #    even the transform stage's repartition in this job; `planning_stats`
-        #    = precomputed [(bucket, n, max_seq)] skips the job entirely (the
-        #    pipeline folds it into its lineage aggregation — one job, not two).
+        #    `planning_stats` = precomputed [(bucket, n, max_seq)] skips the job
+        #    entirely (the pipeline folds it into its lineage aggregation — one
+        #    job, not two).
         if planning_stats is not None:
             agg = [{"_bucket": b, "n": n, "max_seq": s} for b, n, s in planning_stats]
         else:
             agg = (
-                (planning_df if planning_df is not None else batch)
-                .select(*keys, op_col, seq_col)
+                batch.select(*keys, op_col, seq_col)
                 .withColumn("_bucket", bucket_expr(m.bucket_key, n_buckets))
                 .groupBy("_bucket")
                 .agg(
@@ -801,30 +805,31 @@ class LakeTable:
                 )
                 .collect()
             )  # bounded by n_buckets rows — never data-proportional
-        if not agg:
-            # carry the parent's max_seq forward: an empty commit must not reset
-            # the incremental-read watermark, or read_incremental(since_version=V)
-            # on this snapshot falls back to -1 and re-emits the whole table.
-            # Explicit None check — `or -1` would clobber a legitimate max_seq=0
-            parent_ms = m.lease.get("metrics", {}).get("max_seq")
-            metrics = {"rows": 0, "upserts": 0, "deletes": 0,
-                       "max_seq": -1 if parent_ms is None else int(parent_ms)}
-            v = self._commit(m, m.files, schema, schema_version, ledger_key,
-                             source_id, batch_id, lease_token, metrics, lineage)
-            return {"skipped": False, "version": v, "batch_id": batch_id,
-                    "metrics": metrics}
-        affected = {int(r["_bucket"]) for r in agg}
-        batch_rows = sum(r["n"] for r in agg)
         # monotone high watermark: micro-batches are not seq-contiguous (file
         # batching / DLQ replay), and a batch of older seqs must not regress
         # the resume cursor — re-reading from a regressed token is safe
         # (idempotent MERGE) but wasteful. Incremental consumers that must see
         # out-of-order changes use snapshot_diff (version-based), not the
-        # seq-watermark feed.
-        max_seq = max(r["max_seq"] for r in agg)
+        # seq-watermark feed. An empty commit carries the parent's max_seq
+        # forward, or read_incremental(since_version=V) on it falls back to -1
+        # and re-emits the whole table (explicit None checks: max_seq=0 is legal).
         parent_ms = m.lease.get("metrics", {}).get("max_seq")
+        seqs = [int(r["max_seq"]) for r in agg]
         if parent_ms is not None:
-            max_seq = max(int(max_seq), int(parent_ms))
+            seqs.append(int(parent_ms))
+        max_seq = max(seqs, default=-1)
+        metrics: dict = {}
+        cursor = max(max_seq, int(m.lease.get("lease", -1)),
+                     -1 if lease_token is None else int(lease_token))
+        lease = _data_lease(source_id, batch_id, str(cursor), metrics, lineage)
+        commit = dict(lease=lease, ledger_key=f"{source_id}:{batch_id}",
+                      schema_json=schema.json(), schema_version=schema_version)
+        if not agg:
+            metrics.update(rows=0, upserts=0, deletes=0, max_seq=max_seq)
+            new = self._commit(m, **commit)
+            return {"skipped": False, "version": new.version,
+                    "batch_id": batch_id, "metrics": metrics, "lease": lease}
+        affected = {int(r["_bucket"]) for r in agg}
 
         # 2) existing rows in affected buckets only (bucket-pruned snapshot scan),
         #    INCLUDING tombstones — a stored delete must keep outranking older seqs.
@@ -832,19 +837,18 @@ class LakeTable:
         #    appended as delta files and readers/compaction resolve LWW later, so
         #    the write job is O(batch) instead of O(affected bucket contents)
         mor = m.write_mode == "mor"
-        has_existing = (not mor) and any(f.bucket in affected for f in m.files)
         incoming = batch.withColumn("_prio", F.lit(1))
-        if has_existing:
-            existing = self.read(buckets=affected, include_deleted=True)
+        if not mor and any(f.bucket in affected for f in m.files):
             existing = (
-                existing
+                self._frame(m, [f for f in m.files if f.bucket in affected], True)
                 .withColumn(seq_col, F.col(SEQ_META_COL))
                 .withColumn(op_col, F.col(OP_META_COL))
                 .withColumn("_prio", F.lit(0))
                 .drop(SEQ_META_COL, OP_META_COL)
             )
+            merged = existing.unionByName(incoming, allowMissingColumns=True)
         else:
-            existing = None  # first batch / untouched buckets: nothing to merge
+            merged = incoming  # first batch / untouched buckets: nothing to merge
 
         # 3) union (schema-aligned) → ONE per-key LWW → drop delete-winners.
         #    max_by is associative, so deduping the raw batch together with the
@@ -855,16 +859,10 @@ class LakeTable:
         #    batch win seq ties against existing rows. The Arrow-UDF transform
         #    upstream of `batch` executes exactly once, inside the write job.
         #    Winner metrics ride the same job via observe() — no extra pass.
-        merged = (
-            existing.unionByName(incoming, allowMissingColumns=True)
-            if existing is not None else incoming
-        )
         winners = lww_dedupe(
             merged, keys, seq_col=seq_col,
             tiebreakers=["_prio"] + (tiebreakers or []),
         )
-        from pyspark.sql import Observation
-
         obs = Observation()
         winners = winners.observe(
             obs,
@@ -873,6 +871,7 @@ class LakeTable:
                 .otherwise(0)
             ).alias("delete_winners"),
             F.sum(F.when(F.col("_prio") == 1, 1).otherwise(0)).alias("batch_winners"),
+            F.count(F.lit(1)).alias("rows_written"),
         )
         # delete-winners are KEPT as tombstones (see read() docstring); they leave
         # the table only via expire_tombstones() once the low-watermark passes.
@@ -892,32 +891,28 @@ class LakeTable:
                 return F.col(c).cast(schema[c].dataType).alias(c)
             return F.col(c)
 
-        final = aligned.select(*[_out(c) for c in out_cols])
+        final = aligned.select(*[_out(c) for c in schema.fieldNames()])
 
-        # 5) cow: rewrite affected buckets; mor: append the deltas, keep all files
-        nv = self.store.next_version()
-        new_files = self._write_buckets(final, m.bucket_key, n_buckets, nv,
-                                        len(affected), bloom_cols=m.bloom_cols)
-        carried = (list(m.files) if mor
-                   else [f for f in m.files if f.bucket not in affected])
-        rows_written = sum(f.rows for f in new_files)
-        wm = obs.get
-        batch_winners = int(wm.get("batch_winners") or 0)
-        batch_deletes = int(wm.get("delete_winners") or 0)
-        metrics = {
-            "rows": int(batch_rows),
-            "upserts": int(batch_winners - batch_deletes),
-            "deletes": int(batch_deletes),
-            "rows_written": int(rows_written),
-            "buckets_rewritten": len(affected),
-            "buckets_total": n_buckets,
-            "max_seq": int(max_seq),
-        }
-        self._commit(m, carried + new_files, schema, schema_version, ledger_key,
-                     source_id, batch_id, lease_token, metrics, lineage,
-                     version=nv)
-        return {"skipped": False, "version": nv, "batch_id": batch_id,
-                "metrics": metrics}
+        # 4) cow: rewrite affected buckets; mor: append the deltas, keep all
+        #    files. The lease's metrics fill in once the write job has run.
+        def write(snap: Manifest) -> list[FileEntry]:
+            files = self._rewrite(m, snap, final, affected, append=mor)
+            seen = obs.get
+            deletes = int(seen.get("delete_winners") or 0)
+            metrics.update(
+                rows=sum(int(r["n"]) for r in agg),
+                upserts=int(seen.get("batch_winners") or 0) - deletes,
+                deletes=deletes,
+                rows_written=int(seen.get("rows_written") or 0),
+                buckets_rewritten=len(affected),
+                buckets_total=n_buckets,
+                max_seq=max_seq,
+            )
+            return files
+
+        new = self._commit(m, write=write, **commit)
+        return {"skipped": False, "version": new.version, "batch_id": batch_id,
+                "metrics": metrics, "lease": lease}
 
     def merge_into(
         self,
@@ -981,7 +976,6 @@ class LakeTable:
         if isinstance(when_matched_update, str) and when_matched_update != "all":
             raise ValueError("when_matched_update: expected 'all', a dict, or None")
         m = self.manifest()
-        ledger_key = f"{source_id}:{batch_id}"
         if m.is_committed(source_id, batch_id):
             return {"skipped": True, "version": m.version, "batch_id": batch_id}
         keys = m.key_cols
@@ -1024,15 +1018,20 @@ class LakeTable:
                 .groupBy("_bucket").agg(F.count(F.lit(1)).alias("n"))
                 .collect()
             )
+        metrics: dict = {}
+        lease = _data_lease(source_id, batch_id,
+                            str(seq_val if agg else parent_ms), metrics)
+        commit = dict(lease=lease, ledger_key=f"{source_id}:{batch_id}",
+                      schema_json=schema.json(), schema_version=schema_version)
         if not agg:
-            metrics = {"rows": 0, "upserts": 0, "deletes": 0, "max_seq": parent_ms}
-            v = self._commit(m, m.files, schema, schema_version, ledger_key,
-                             source_id, batch_id, None, metrics, None)
-            return {"skipped": False, "version": v,
+            metrics.update(rows=0, upserts=0, deletes=0, max_seq=parent_ms)
+            new = self._commit(m, **commit)
+            return {"skipped": False, "version": new.version,
                     "batch_id": batch_id, "metrics": metrics}
         affected = {int(r["_bucket"]) for r in agg}
 
-        existing = self.read(buckets=affected, include_deleted=True)
+        existing = self._frame(m, [f for f in m.files if f.bucket in affected],
+                               include_deleted=True)
         t = existing.withColumn("_t", F.lit(1)).alias("t")
         s = source.withColumn("_s", F.lit(1)).alias("s")
         joined = t.join(s, keys, "full_outer")
@@ -1104,8 +1103,6 @@ class LakeTable:
         mor = m.write_mode == "mor"
         if mor:
             out = out.filter(F.col("_action") != "carry")  # deltas: O(changed)
-        from pyspark.sql import Observation
-
         obs = Observation()
         out = out.observe(
             obs,
@@ -1113,28 +1110,26 @@ class LakeTable:
               for a in ("insert", "update", "delete")],
         )
         final = out.drop("_action").select(*[f.name for f in schema.fields])
-        nv = self.store.next_version()
-        new_files = self._write_buckets(final, m.bucket_key, m.n_buckets, nv,
-                                        len(affected), bloom_cols=m.bloom_cols)
-        carried = (list(m.files) if mor
-                   else [f for f in m.files if f.bucket not in affected])
-        got = obs.get
-        inserts = int(got.get("inserts") or 0)
-        updates = int(got.get("updates") or 0)
-        deletes = int(got.get("deletes") or 0)
-        metrics = {
-            "rows": int(sum(r["n"] for r in agg)),
-            "upserts": inserts + updates,
-            "inserts": inserts,
-            "updates": updates,
-            "deletes": deletes,
-            "buckets_rewritten": len(affected),
-            "buckets_total": m.n_buckets,
-            "max_seq": seq_val,
-        }
-        self._commit(m, carried + new_files, schema, schema_version, ledger_key,
-                     source_id, batch_id, None, metrics, None, version=nv)
-        return {"skipped": False, "version": nv, "batch_id": batch_id,
+
+        def write(snap: Manifest) -> list[FileEntry]:
+            files = self._rewrite(m, snap, final, affected, append=mor)
+            got = obs.get
+            inserts = int(got.get("inserts") or 0)
+            updates = int(got.get("updates") or 0)
+            metrics.update(
+                rows=int(sum(r["n"] for r in agg)),
+                upserts=inserts + updates,
+                inserts=inserts,
+                updates=updates,
+                deletes=int(got.get("deletes") or 0),
+                buckets_rewritten=len(affected),
+                buckets_total=m.n_buckets,
+                max_seq=seq_val,
+            )
+            return files
+
+        new = self._commit(m, write=write, **commit)
+        return {"skipped": False, "version": new.version, "batch_id": batch_id,
                 "metrics": metrics}
 
     # -- maintenance ----------------------------------------------------------
@@ -1303,40 +1298,15 @@ class LakeTable:
 
             df = df.withColumn("_zkey", zorder_key(df, zorder_cols))
             sort_cols, drop_after_sort = ["_zkey"], ["_zkey"]
-        nv = self.store.next_version()
-        new_files = self._write_buckets(df, m.bucket_key, m.n_buckets,
-                                        nv, len(victims),
-                                        sort_cols=sort_cols,
-                                        drop_after_sort=drop_after_sort,
-                                        bloom_cols=m.bloom_cols)
-        carried = [f for f in m.files if f.bucket not in victims]
-        # maintenance commit: same atomic protocol, but the resume lease is
-        # carried over untouched — compaction must never move the CDC cursor
-        from change_data_capturer_ms_spark.lake.manifest import prune_ledger
-
-        batches, watermarks = prune_ledger(
-            m.committed_batches + [f"maintenance:compact-v{nv}"],
-            m.batch_watermarks,
-        )
-        new = Manifest(
-            version=nv,
-            parent=m.version,
-            schema_json=m.schema_json,
-            schema_version=m.schema_version,
-            n_buckets=m.n_buckets,
-            key_cols=m.key_cols,
-            files=carried + new_files,
-            committed_batches=batches,
-            lease=dict(m.lease),
-            batch_watermarks=watermarks,
-            write_mode=m.write_mode,
-            bloom_cols=m.bloom_cols,
-            bucket_cols=list(m.bucket_cols),
-        )
-        self.store.commit(new, expected_parent=m.version, branch=self._branch)
-        return {"compacted_buckets": len(victims), "version": nv,
+        # maintenance commit: the resume lease is carried over untouched —
+        # compaction must never move the CDC cursor
+        new = self._commit(m, maintenance="compact",
+                           write=lambda snap: self._rewrite(
+                               m, snap, df, set(victims), sort_cols=sort_cols,
+                               drop_after_sort=drop_after_sort))
+        return {"compacted_buckets": len(victims), "version": new.version,
                 "files_before": sum(len(v) for v in victims.values()),
-                "files_after": len(new_files)}
+                "files_after": sum(f.bucket in victims for f in new.files)}
 
     def stats(self, version: int | None = None, top_n: int = 10) -> dict:
         """Layout health from the manifest alone — ZERO Spark jobs (at 100 TB
@@ -1551,35 +1521,12 @@ class LakeTable:
             return {"rebucketed": False, "version": m.version,
                     "n_buckets": m.n_buckets}
         df = self.read(include_deleted=True)
-        nv = self.store.next_version()
-        new_files = self._write_buckets(df, m.bucket_key, new_n_buckets,
-                                        nv, new_n_buckets,
-                                        bloom_cols=m.bloom_cols)
-        from change_data_capturer_ms_spark.lake.manifest import prune_ledger
-
-        batches, watermarks = prune_ledger(
-            m.committed_batches + [f"maintenance:rebucket-v{nv}"],
-            m.batch_watermarks,
-        )
-        new = Manifest(
-            version=nv,
-            parent=m.version,
-            schema_json=m.schema_json,
-            schema_version=m.schema_version,
-            n_buckets=new_n_buckets,
-            key_cols=m.key_cols,
-            files=new_files,
-            committed_batches=batches,
-            lease=dict(m.lease),
-            batch_watermarks=watermarks,
-            write_mode=m.write_mode,
-            bloom_cols=m.bloom_cols,
-            bucket_cols=list(m.bucket_cols),
-        )
-        self.store.commit(new, expected_parent=m.version, branch=self._branch)
-        return {"rebucketed": True, "version": nv,
+        new = self._commit(m, maintenance="rebucket", n_buckets=new_n_buckets,
+                           write=lambda snap: self._rewrite(
+                               m, snap, df, set(range(new_n_buckets))))
+        return {"rebucketed": True, "version": new.version,
                 "n_buckets": new_n_buckets,
-                "files": len(new_files)}
+                "files": len(new.files)}
 
     def expire_tombstones(self, min_seq: int) -> dict:
         """Drop delete tombstones with `_last_seq < min_seq`.
@@ -1625,34 +1572,9 @@ class LakeTable:
         if not victims:
             return {"expired": 0, "version": m.version}
         keep = self.read(buckets=victims, include_deleted=True).filter(~expirable)
-        nv = self.store.next_version()
-        new_files = self._write_buckets(keep, m.bucket_key, m.n_buckets,
-                                        nv, len(victims),
-                                        bloom_cols=m.bloom_cols)
-        carried = [f for f in m.files if f.bucket not in victims]
-        from change_data_capturer_ms_spark.lake.manifest import prune_ledger
-
-        batches, watermarks = prune_ledger(
-            m.committed_batches + [f"maintenance:expire-tombstones-v{nv}"],
-            m.batch_watermarks,
-        )
-        new = Manifest(
-            version=nv,
-            parent=m.version,
-            schema_json=m.schema_json,
-            schema_version=m.schema_version,
-            n_buckets=m.n_buckets,
-            key_cols=m.key_cols,
-            files=carried + new_files,
-            committed_batches=batches,
-            lease=dict(m.lease),
-            batch_watermarks=watermarks,
-            write_mode=m.write_mode,
-            bloom_cols=m.bloom_cols,
-            bucket_cols=list(m.bucket_cols),
-        )
-        self.store.commit(new, expected_parent=m.version, branch=self._branch)
-        return {"expired_buckets": len(victims), "version": nv}
+        new = self._commit(m, maintenance="expire-tombstones",
+                           write=lambda snap: self._rewrite(m, snap, keep, victims))
+        return {"expired_buckets": len(victims), "version": new.version}
 
     def expire_snapshots(self, keep_last: int = 2,
                          orphan_grace_sec: float = 3600.0) -> dict:
@@ -1920,56 +1842,75 @@ class LakeTable:
             if e.bucket in blooms:
                 e.bloom = blooms[e.bucket]
 
-    def _commit(self, parent: Manifest, files: list[FileEntry], schema: T.StructType,
-                schema_version: int, ledger_key: str, source_id: str,
-                batch_id, lease_token, metrics: dict, lineage,
-                version: int | None = None) -> int:
-        lease = {
-            "id": source_id,  # reference: collection/container id (cosmos.ts:92-104)
-            "lease": lease_token if lease_token is not None
-                     else str(metrics.get("max_seq", parent.lease.get("lease", ""))),
-            "batch_id": batch_id,
-            "lineage": lineage or [],
-            "metrics": metrics,
-        }
-        from change_data_capturer_ms_spark.lake.manifest import prune_ledger
+    def _rewrite(self, base: Manifest, new: Manifest, df: DataFrame,
+                 buckets: set[int], append: bool = False,
+                 **write_kw) -> list[FileEntry]:
+        """The rewrite step of every data-writing commit: write `df` — the
+        rows of `buckets` under `new`'s bucket layout — as fresh files under
+        data/v{new.version}-<uuid>/, and carry the untouched files: all of the
+        base's when `append` (merge-on-read deltas), none when the bucket
+        count changes (rebucket), else those outside `buckets`."""
+        written = self._write_buckets(df, new.bucket_key, new.n_buckets,
+                                      new.version, len(buckets),
+                                      bloom_cols=new.bloom_cols, **write_kw)
+        if append:
+            carried = list(base.files)
+        elif new.n_buckets != base.n_buckets:
+            carried = []
+        else:
+            carried = [f for f in base.files if f.bucket not in buckets]
+        return carried + written
 
-        batches, watermarks = prune_ledger(
-            parent.committed_batches + [ledger_key], parent.batch_watermarks
-        )
-        # a type-widening commit invalidates existing bloom bitmaps for the
-        # widened columns: xxhash64 is type-sensitive, so probing an int-built
-        # bitmap with the new bigint hash yields false "definitely absent" —
-        # files wrongly pruned, rows silently unreadable. Strip those columns'
-        # blooms from this commit's entries (pruning degrades to zone maps for
-        # them; later rewrites rebuild blooms under the new type).
-        old_types = {f.name: f.dataType for f in parent.schema.fields}
-        changed = {f.name for f in schema.fields
-                   if f.name in old_types and f.dataType != old_types[f.name]}
-        if changed and any(f.bloom and (changed & f.bloom.keys())
-                           for f in files):
-            from dataclasses import replace as _dc_replace
-            files = [
-                _dc_replace(f, bloom={c: b for c, b in f.bloom.items()
-                                      if c not in changed} or None)
+    def _commit(self, parent: Manifest | None, base: Manifest | None = None,
+                lease: dict | None = None, ledger_key: str | None = None,
+                maintenance: str | None = None,
+                write: Callable[[Manifest], list[FileEntry]] | None = None,
+                **changes) -> Manifest:
+        """The one snapshot-commit path (module doc): the new manifest is
+        `base` (default `parent`) with `changes` applied, a freshly allocated
+        version, and `parent` — the head this handle's ref must still point
+        at when the pointer swaps (None only for create) — as its parent.
+
+        - files: `write(new)` is the rewrite step (`_rewrite`) returning the
+          new snapshot's complete file list; it runs once the version is
+          allocated, so data files land under data/v{N}-<uuid>/. Without it
+          the base's files carry over.
+        - lease: `lease` for a data commit; None carries the base's lease —
+          the parent's for maintenance, the target's for rollback.
+        - ledger: `ledger_key` (a data commit's `source:batch`) or
+          `maintenance` (recorded as `maintenance:<kind>-v<N>`) is appended
+          and the ledger pruned; with neither, the base's ledger is kept.
+        """
+        base = base or parent
+        new = dataclasses.replace(
+            base, **changes, version=self.store.next_version(),
+            parent=None if parent is None else parent.version)
+        if lease is not None:
+            new.lease = lease
+        entry = ledger_key
+        if maintenance is not None:
+            entry = f"maintenance:{maintenance}-v{new.version}"
+        if entry is not None:
+            new.committed_batches, new.batch_watermarks = prune_ledger(
+                base.committed_batches + [entry], base.batch_watermarks)
+        if write is not None:
+            new.files = write(new)
+        if new.schema_json != base.schema_json:
+            # a type-widening commit invalidates existing bloom bitmaps for the
+            # widened columns: xxhash64 is type-sensitive, so probing an
+            # int-built bitmap with the new bigint hash yields false
+            # "definitely absent" — files wrongly pruned, rows silently
+            # unreadable. Strip those columns' blooms from this commit's
+            # entries (pruning degrades to zone maps for them; later rewrites
+            # rebuild blooms under the new type).
+            old_types = {f.name: f.dataType for f in base.schema.fields}
+            changed = {f.name for f in new.schema.fields
+                       if f.name in old_types and f.dataType != old_types[f.name]}
+            new.files = [
+                dataclasses.replace(f, bloom={c: b for c, b in f.bloom.items()
+                                              if c not in changed} or None)
                 if f.bloom and (changed & f.bloom.keys()) else f
-                for f in files
+                for f in new.files
             ]
-        new = Manifest(
-            version=version if version is not None else self.store.next_version(),
-            parent=parent.version,
-            schema_json=schema.json(),
-            schema_version=schema_version,
-            n_buckets=parent.n_buckets,
-            key_cols=parent.key_cols,
-            files=files,
-            committed_batches=batches,
-            lease=lease,
-            batch_watermarks=watermarks,
-            write_mode=parent.write_mode,
-            bloom_cols=parent.bloom_cols,
-            bucket_cols=list(parent.bucket_cols),
-        )
-        self.store.commit(new, expected_parent=parent.version,
-                          branch=self._branch)
-        return new.version
+        self.store.commit(new, expected_parent=new.parent, branch=self._branch)
+        return new

@@ -73,10 +73,15 @@ def signbit_bucket(vec, bits: int = 4, stride: int = 4):
     Axis-aligned hyperplanes — crude but fully deterministic and oracle-rederivable;
     production swaps in seeded random hyperplanes (same plan shape, a dot product
     per bit).
+
+    A bit whose index falls past the vector's end reads as 0: try_element_at
+    yields NULL there, where element_at throws under ANSI mode (e.g. semdedup's
+    8-bit sub-split of dim < 30 vectors).
     """
     bucket = F.lit(0)
     for j in range(bits):
-        bucket = bucket + F.when(F.element_at(vec, j * stride + 1) > 0, F.lit(2 ** j)).otherwise(F.lit(0))
+        bit = F.try_element_at(vec, F.lit(j * stride + 1)) > 0
+        bucket = bucket + F.when(bit, F.lit(2 ** j)).otherwise(F.lit(0))
     return bucket.cast("int")
 
 

@@ -23,7 +23,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from change_data_capturer_ms_spark.config import EngineConfig
@@ -279,28 +279,35 @@ class CDCPipeline:
         # (a) append its invalid rows to the DLQ a second time — every
         # still-quarantined row counted and replayed twice forever — and
         # (b) burn the full validate + planning scan before merge() no-ops.
-        if self.table.exists():
-            m0 = self.table.manifest()
-            if m0.is_committed(self.source_id, batch_id):
-                return {"skipped": True, "version": m0.version,
-                        "batch_id": batch_id}
+        # The manifest is read ONCE here (ledger check, bucket layout); merge
+        # re-reads it for its optimistic-concurrency check and returns the
+        # lease it committed.
+        m = self.table.manifest() if self.table.exists() else None
+        if m is not None and m.is_committed(self.source_id, batch_id):
+            return {"skipped": True, "version": m.version, "batch_id": batch_id}
+        quarantined = None
         if self.quarantine_dir:
             # schema-on-read enforcement (reference io-ts decode-or-Left,
-            # cosmos/utils.ts:76-91): invalid rows go to the DLQ, valid rows on
+            # cosmos/utils.ts:76-91): invalid rows go to the DLQ, valid rows on.
+            # The DLQ write also observes the max quarantined seq: the resume
+            # cursor must cover it, or an invalid event ending this batch is
+            # read — and quarantined — again by the next run_batch.
             from change_data_capturer_ms_spark.functions.validate import validate_batch
 
             batch_df, quarantine = validate_batch(batch_df)
-            (quarantine.withColumn("_batch_id", F.lit(batch_id))
+            quarantined = Observation()
+            (quarantine.observe(quarantined, F.max(F.col("seq").cast("long")).alias("hi"))
+             .withColumn("_batch_id", F.lit(batch_id))
              .write.mode("append").parquet(self.quarantine_dir))
         prepared = prepare_batch(batch_df, self.cfg, self.use_pandas_udfs,
                                  flatten_props=self.flatten_props)
-        if not self.table.exists():
+        if m is None:
             # CREATE TABLE IF NOT EXISTS semantics (reference getOrCreateMongoCollection,
             # /root/reference/src/capturer/mongo/utils.ts:51-70): payload schema =
             # prepared minus the seq/op control columns
             from pyspark.sql import types as T
             payload = [f for f in prepared.schema.fields if f.name not in ("seq", "op")]
-            self.table.create(T.StructType(payload))
+            m = self.table.create(T.StructType(payload))
 
         # ONE cheap planning job over pruned raw columns yields BOTH the
         # per-input-partition lineage (north_star) and the per-bucket stats the
@@ -312,8 +319,7 @@ class CDCPipeline:
         # (columns pruned) and runs only in the MERGE write job.
         from change_data_capturer_ms_spark.lake.table import bucket_expr
 
-        m = self.table.manifest()  # bucket layout is the manifest's, not cfg's
-        keys = m.key_cols
+        keys = m.key_cols  # bucket layout is the manifest's, not cfg's
         pre = (
             batch_df.filter(F.col("op").isin(*self.cfg.captured_ops))
             .select(*keys, "seq")
@@ -339,12 +345,16 @@ class CDCPipeline:
             (int(r["_bucket"]), int(r["n"]), int(r["hi"]))
             for r in rows if r["gid"] == 2
         ]
+        # observed metrics arrive asynchronously: read them after the
+        # planning job, by when they have landed, so get() does not block
+        hi = None if quarantined is None else quarantined.get["hi"]
 
         merge_kwargs = dict(
             seq_col="seq",
             op_col="op",
             batch_id=batch_id,
             source_id=self.source_id,
+            lease_token=None if hi is None else str(hi),
             tiebreakers=["token"],
             lineage=lineage,
             planning_stats=planning_stats,
@@ -394,7 +404,7 @@ class CDCPipeline:
                         "version": parent, "batch_id": batch_id,
                         "metrics": {"rows": 0, "upserts": 0, "deletes": 0}}
         if not result.get("skipped"):
-            lease = self.table.lease()
+            lease = dict(result["lease"])
             if self.monitor_cols:
                 captured = batch_df.filter(F.col("op").isin(*self.cfg.captured_ops))
                 lease["monitor"] = self._monitor_summary(captured)
@@ -519,7 +529,7 @@ class CDCPipeline:
                     "reason": f"replay_id {replay_id!r} already committed — "
                               "pass a fresh replay_id to replay the current "
                               "quarantine"}
-        self._write_lease(self.table.lease())
+        self._write_lease(result["lease"])
 
         shutil.rmtree(old, ignore_errors=True)
         os.rename(qdir, old)

@@ -1,0 +1,64 @@
+"""Pipeline resume cursor and per-batch manifest traffic."""
+
+from pyspark.sql import functions as F
+
+from change_data_capturer_ms_spark.config import EngineConfig
+from change_data_capturer_ms_spark.lake.manifest import ManifestStore
+from change_data_capturer_ms_spark.lake.table import LakeTable
+from change_data_capturer_ms_spark.sources import gen_changelog, write_changelog
+from change_data_capturer_ms_spark.streaming import CDCPipeline
+
+
+def _pipe(spark, d, **kw):
+    table = LakeTable(spark, f"{d}/t", key_cols=["repo", "path"], n_buckets=4)
+    return CDCPipeline(spark, f"{d}/log", table, f"{d}/ckpt",
+                       cfg=EngineConfig(n_buckets=4), use_pandas_udfs=False,
+                       **kw)
+
+
+def test_invalid_event_ending_a_batch_is_quarantined_once(spark, tmpdir_path):
+    """The resume cursor covers every event the batch READ, quarantined ones
+    included: an invalid event at the end of a batch must not be read again
+    (and appended to the DLQ again) by the next run_batch."""
+    pipe = _pipe(spark, tmpdir_path, quarantine_dir=f"{tmpdir_path}/dlq")
+    first = gen_changelog(spark, 200, seed=31, n_repos=5, paths_per_repo=3)
+    bad_seqs = [50, 199]  # one mid-batch, one ending the batch
+    first = first.withColumn(
+        "op", F.when(F.col("seq").isin(*bad_seqs), F.lit("upsert-typo"))
+        .otherwise(F.col("op")))
+    write_changelog(first, f"{tmpdir_path}/log", files_per_bucket=1)
+    pipe.run_batch()
+
+    write_changelog(gen_changelog(spark, 100, seed=31, n_repos=5,
+                                  paths_per_repo=3, start_seq=200),
+                    f"{tmpdir_path}/log", files_per_bucket=1)
+    res = pipe.run_batch()
+    assert res["skipped"] is False and res["metrics"]["rows"] == 100
+    dlq = spark.read.parquet(f"{tmpdir_path}/dlq")
+    assert sorted(r["seq"] for r in dlq.collect()) == bad_seqs
+    assert pipe.current_lease()["lease"] == "299"
+
+
+def test_apply_batch_loads_the_manifest_at_most_twice(spark, tmpdir_path,
+                                                      monkeypatch):
+    """One manifest read by the pipeline (ledger check, bucket layout) plus
+    merge's optimistic-concurrency read; the committed lease comes back in
+    merge's result instead of a re-read."""
+    pipe = _pipe(spark, tmpdir_path, quarantine_dir=f"{tmpdir_path}/dlq")
+    log = gen_changelog(spark, 400, seed=32, n_repos=5, paths_per_repo=3)
+    pipe.apply_batch(log.filter(F.col("seq") < 200), batch_id=0)
+
+    loads = []
+    real = ManifestStore.load
+
+    def counting(self, version=None):
+        loads.append(version)
+        return real(self, version)
+
+    monkeypatch.setattr(ManifestStore, "load", counting)
+    res = pipe.apply_batch(log.filter(F.col("seq") >= 200), batch_id=1)
+    monkeypatch.undo()
+    assert res["skipped"] is False
+    assert len(loads) <= 2, loads
+    assert pipe.current_lease()["lease"] == "399"
+    assert pipe.current_lease() == pipe.table.lease()

@@ -149,6 +149,18 @@ def test_semdedup_cell_cap_bounds_pair_join(spark):
     assert kept_under == [0]
 
 
+def test_semdedup_cell_cap_short_vectors(spark):
+    """Default sub_bits=8 with stride 4 probes element 29; dim-8 vectors in an
+    over-cap cell must read the out-of-range sign bits as 0 instead of
+    failing under ANSI mode. The in-range bits still split the cell."""
+    rows = [(i, [0.01 if i < 10 else -0.01, 1.0, 1.0, 1.0,
+                 1.0, 1.0, 1.0, 1.0]) for i in range(20)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    kept = sorted(r["vec_id"] for r in
+                  semdedup(df, tau=0.999, n_cells=1, cell_cap=5).collect())
+    assert kept == [0, 10]
+
+
 def test_semdedup_auto_n_cells(spark):
     """n_cells=None auto-scales: clamp(ceil(rows/1024), 8, 4096) — 20 rows
     -> 8 cells; identical result to passing 8 explicitly."""
