@@ -23,10 +23,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from change_data_capturer_ms_spark.functions.hashing import custom_id
-from change_data_capturer_ms_spark.functions.hashing2 import (
+from change_data_capturer_ms_spark.functions.hashing import (
     MINHASH_P,
     MINHASH_PERMS,
+    custom_id,
     md5_long56_sql,
     minhash_perm_sql,
 )
@@ -1096,7 +1096,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 # -- DuckDB oracles ----------------------------------------------------------
 
-_H = md5_long56_sql  # cross-engine 56-bit md5 hash (see functions/hashing2.py)
+_H = md5_long56_sql  # cross-engine 56-bit md5 hash (see functions/hashing.py)
 
 _SHINGLES_CTE = """
 words AS (

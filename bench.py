@@ -11,14 +11,22 @@ JSON flatten → LWW dedupe → bucketed tombstone-correct MERGE commit) on a sy
 change log scaled to the sf dir. A warm-up apply runs first so the number reflects
 steady state, not JVM/codegen/Python-worker cold start.
 
-`python bench.py --scaling` measures the same job at local[2] and local[8] (the
-under-capacity N→4N pair; local[32] is probed too as the informational headline) on
-identical input — each parallelism level in its OWN subprocess (fresh JVM, own
-warm-up; a shared JVM would hand the second run warmed codegen and rig the ratio) —
-and writes BENCH/BASELINE.md with throughput at both plus N→4N scaling efficiency
-(target ≥ 0.8, BASELINE.json north_rule).
+Modes (each probe runs in its OWN fresh process, strictly one at a time — a
+shared JVM would hand the second config warmed codegen and rig the ratio):
 
-`python bench.py --apply-probe CORES N_EVENTS WORKDIR` is the subprocess worker.
+  [--scaling]             headline JSON; --scaling then runs `--campaign pairs`
+  --consolidate           rebuild BENCH/BASELINE.md from BENCH/*.jsonl (no Spark)
+  --campaign PIECE [N]    N rounds (default 1) of one piece, consolidating after
+                          each: pairs (2,8 then 1,4 @16M), full (pairs + 32@16M
+                          + 32@64M), big (32@128M), writemode (cow/mor @16M),
+                          pruning, skew (salted 16 vs unsalted 1, rows asserted
+                          equal); `--skew` is `--campaign skew`
+  workers, one JSON line each (the campaign records it):
+    --apply-probe CORES N_EVENTS WORKDIR [REPEATS]
+    --skew-probe CORES N_EVENTS SALT_BUCKETS LOG_DIR WORKDIR [REPEATS]
+    --writemode-probe CORES N_EVENTS cow|mor WORKDIR [REPEATS]
+    --pruning-probe CORES N_EVENTS WORKDIR
+    --index-scale-probe CORES WORKDIR   (records its own history)
 """
 
 from __future__ import annotations
@@ -28,6 +36,7 @@ import json
 import math
 import os
 import shutil
+import statistics
 import subprocess
 import sys
 import time
@@ -106,6 +115,77 @@ def _sf_tag(sf_dir: str) -> float:
         return 0.1
 
 
+# Session-spanning sample histories, one JSON record per line, next to this
+# file (never the cwd). Minima over MANY interleaved samples are the
+# capability estimate on this noisy host — one pass of 2 samples per config
+# can land entirely inside a noise wave.
+BENCH_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH")
+PROBE_HISTORY = "probes.jsonl"
+SKEW_HISTORY = "skew_probes.jsonl"
+WRITEMODE_HISTORY = "writemode_probes.jsonl"
+PRUNING_HISTORY = "pruning_probes.jsonl"
+INDEX_SCALE_HISTORY = "index_scale_probes.jsonl"
+QUERY_HISTORY = "query_probes.jsonl"
+
+
+def read_history(name: str, stamped: bool = False):
+    """Yield the records of BENCH/<name>, skipping malformed lines; nothing
+    for a missing file. stamped=True keeps only records that may fold
+    (_stamp_ok)."""
+    path = os.path.join(BENCH_DIR, name)
+    if not os.path.exists(path):
+        return
+    with open(path) as f:
+        for line in f:
+            try:
+                h = json.loads(line)
+            except ValueError:
+                continue
+            if isinstance(h, dict) and (not stamped or _stamp_ok(h)):
+                yield h
+
+
+def record(name: str, rec: dict) -> None:
+    """Append one record to BENCH/<name>, stamped with the engine semantics,
+    the bench protocol and the time."""
+    os.makedirs(BENCH_DIR, exist_ok=True)
+    with open(os.path.join(BENCH_DIR, name), "a") as f:
+        f.write(json.dumps({**rec, "engine": _engine_stamp(),
+                            "proto": BENCH_PROTO, "ts": time.time()}) + "\n")
+
+
+def read_host_cpu_full() -> dict:
+    """Full /proc/stat tick breakdown — lets a probe stamp user/sys/steal
+    shares over its own window. The SYS share matters as much as steal here:
+    nested-virt syscall cost makes kernel time the python-worker scaling tax
+    (see the same-window pairs section), and recording it per probe turns
+    that from anecdote into measurement."""
+    with open("/proc/stat") as f:
+        parts = f.readline().split()[1:]
+    vals = [int(x) for x in parts] + [0] * 8
+    return {"user": vals[0] + vals[1], "sys": vals[2] + vals[5] + vals[6],
+            "steal": vals[7], "total": sum(vals[:8])}
+
+
+def run_probe(args: list, timeout: int = 7200) -> dict:
+    """Run one `bench.py` worker mode in a fresh process; return its last
+    JSON line stamped with the host's steal/sys/user CPU shares over that run
+    (/proc/stat delta). RuntimeError if the worker printed no JSON."""
+    c0 = read_host_cpu_full()
+    out = subprocess.run(
+        [sys.executable, os.path.abspath(__file__)] + [str(a) for a in args],
+        capture_output=True, text=True, timeout=timeout,
+    )
+    c1 = read_host_cpu_full()
+    tot = max(c1["total"] - c0["total"], 1)
+    stamp = {f"{k}_pct": round(100.0 * (c1[k] - c0[k]) / tot, 2)
+             for k in ("steal", "sys", "user")}
+    for line in reversed(out.stdout.strip().splitlines()):
+        if line.strip().startswith("{"):
+            return {**json.loads(line), **stamp}
+    raise RuntimeError(f"probe failed ({args}):\n{out.stderr[-1500:]}")
+
+
 def _session(cores: int, app: str):
     from change_data_capturer_ms_spark.session import get_spark
 
@@ -118,25 +198,21 @@ def _session(cores: int, app: str):
         "spark.driver.memory": "48g",
         "spark.sql.ui.retainedExecutions": "20",
     }
-    # A/B experiment hook: JSON dict of Spark conf overrides. Overridden runs
-    # are excluded from the official probe history (_record_probe) so
-    # experiments can't contaminate the consolidated baseline.
-    if os.environ.get("CDC_BENCH_EXTRA_CONF"):
-        extra.update(json.loads(os.environ["CDC_BENCH_EXTRA_CONF"]))
-    return get_spark(
+    spark = get_spark(
         app_name=app,
         master=f"local[{cores}]",
         shuffle_partitions=max(cores * 2, 16),
         extra_conf=extra,
     )
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
 
 
 def gen_log(spark, n_events: int, log_dir: str, body_repeat: int = 1,
-            n_files: int = 16, hot_repo_fraction: float = 0.2,
-            reuse: bool = False) -> int:
+            n_files: int = 16, hot_repo_fraction: float = 0.2) -> int:
     """Write the deterministic bench log once; returns actual file count.
 
-    reuse=True keeps an existing log IF its param stamp matches (same seed =>
+    An existing log is kept IF its param stamp matches (same seed =>
     byte-identical content), so probe subprocesses sharing a log dir skip the
     multi-GB regeneration; a stamp mismatch (changed shape between sessions)
     regenerates rather than timing against a stale log. The stamp includes a
@@ -155,7 +231,7 @@ def gen_log(spark, n_events: int, log_dir: str, body_repeat: int = 1,
               "n_files": n_files, "hot_repo_fraction": hot_repo_fraction,
               "seed": 42, "paths_per_repo": 50, "gen_src": gen_src}
     stamp = f"{log_dir}/_gen_params.json"
-    if reuse and os.path.exists(stamp):
+    if os.path.exists(stamp):
         try:
             if json.load(open(stamp)) == params:
                 existing = glob.glob(f"{log_dir}/seq_bucket=*/*.parquet")
@@ -222,26 +298,64 @@ def apply_once(spark, n_events: int, log_dir: str, n_files: int, workdir: str,
     }
 
 
-def bench_apply(spark, n_events: int, workdir: str, n_batches: int = 4,
-                body_repeat: int = 1, n_files: int = 16) -> dict:
-    """gen + timed apply (headline-mode convenience)."""
-    n = gen_log(spark, n_events, f"{workdir}/log", body_repeat, n_files,
-                reuse=True)
-    return apply_once(spark, n_events, f"{workdir}/log", n, workdir + "/run",
-                      n_batches=n_batches)
-
-
 SCALING_BODY_REPEAT = 6   # ~1 KB contents for the scaling run (real-file-sized)
 SCALING_FILES = 64        # >= 2 tasks per core at 32 cores in every scan stage
 
 
+def _drop_repeat(spark, workdir: str) -> None:
+    """Untimed cleanup between repeats. Timed lakes are pure measurement
+    residue; at 128M events a previous repeat's lake plus the cached logs
+    squeezed /tmp below the next run's shuffle-spill headroom
+    (DiskBlockObjectWriter flush died mid-spill). Forcing a GC makes
+    ContextCleaner drop the finished repeat's shuffle files now (they are
+    only deleted on GC of their ShuffleDependency; a 128M repeat otherwise
+    leaves ~50 GB of dead spill in blockmgr for the next repeat to collide
+    with — see session.py periodicGC note)."""
+    shutil.rmtree(workdir, ignore_errors=True)
+    spark.sparkContext._jvm.System.gc()
+    time.sleep(2)
+
+
+def best_of(spark, cores: int, workdir: str, repeats: int, warm_events: int,
+            run, **warm_log) -> dict:
+    """Warm-up apply, then best-of-`repeats` timed `run(dir)` in THIS process;
+    returns the fastest run's stats plus `cores` and every run's wall.
+
+    The warm-up (an untimed apply over a smaller log shaped by `warm_log`)
+    takes JVM/codegen/Python-worker cold start out of the timed runs, so the
+    number reflects steady state. Best-of-N because the sandbox host is
+    shared: load average sits at 15-20 with zero local processes, and
+    identical runs vary 15s-240s from neighbor stalls (noise comes in
+    multi-minute waves). The minimum is the engine's capability; the spread
+    is host weather."""
+    warm = f"{workdir}/warm"
+    n_files = gen_log(spark, warm_events, f"{warm}/log", **warm_log)
+    apply_once(spark, warm_events, f"{warm}/log", n_files, f"{warm}/run",
+               n_batches=2)
+    shutil.rmtree(warm, ignore_errors=True)
+    runs = []
+    for i in range(repeats):
+        runs.append(run(f"{workdir}/timed{i}"))
+        _drop_repeat(spark, f"{workdir}/timed{i}")
+    stats = min(runs, key=lambda r: r["wall_sec"])
+    stats["cores"] = cores
+    stats["all_wall_sec"] = [r["wall_sec"] for r in runs]
+    return stats
+
+
+def _wall(fn, n: int = 1) -> tuple[float, object]:
+    """Best-of-`n` wall of `fn()` (see best_of for why best-of) and the
+    result of its last call."""
+    best, out = float("inf"), None
+    for _ in range(n):
+        t0 = time.time()
+        out = fn()
+        best = min(best, time.time() - t0)
+    return best, out
+
+
 def apply_probe(cores: int, n_events: int, workdir: str, repeats: int = 1) -> dict:
     """Warm-up + best-of-`repeats` timed apply in THIS process; one JSON line.
-
-    Best-of-N because the sandbox host is shared: load average sits at 15-20
-    with zero local processes, and identical runs vary 15s-240s from neighbor
-    stalls (noise comes in multi-minute waves). The minimum is the engine's
-    capability; the spread is host weather.
 
     Scaling-run shape: ~1 KB per-event contents, 64 input files, large
     micro-batches CAPPED at 32M events each (2 batches up to 64M input, 4 at
@@ -256,70 +370,16 @@ def apply_probe(cores: int, n_events: int, workdir: str, repeats: int = 1) -> di
     generated once and shared across repeats (generation is untimed).
     """
     spark = _session(cores, f"cdc-probe-{cores}")
-    spark.sparkContext.setLogLevel("ERROR")
-    bench_apply(spark, max(200_000, n_events // 16), f"{workdir}/warm", n_batches=2,
-                body_repeat=SCALING_BODY_REPEAT, n_files=8)
-    shutil.rmtree(f"{workdir}/warm", ignore_errors=True)
-    n_files = gen_log(spark, n_events, f"{workdir}/log", SCALING_BODY_REPEAT,
-                      SCALING_FILES, reuse=True)
-    # timed lakes are pure measurement residue; at 128M events a previous
-    # repeat's lake plus the cached logs squeezed /tmp below the next run's
-    # shuffle-spill headroom (DiskBlockObjectWriter flush died mid-spill) —
-    # drop each repeat's output before starting the next
+    log_dir = f"{workdir}/log"
+    n_files = gen_log(spark, n_events, log_dir, SCALING_BODY_REPEAT,
+                      SCALING_FILES)
     n_batches = max(2, math.ceil(n_events / 32_000_000))
-    runs = []
-    for i in range(repeats):
-        runs.append(apply_once(spark, n_events, f"{workdir}/log", n_files,
-                               f"{workdir}/timed{i}", n_batches=n_batches))
-        shutil.rmtree(f"{workdir}/timed{i}", ignore_errors=True)
-        # untimed: force ContextCleaner to drop the finished repeat's shuffle
-        # files now (they are only deleted on GC of their ShuffleDependency;
-        # a 128M repeat otherwise leaves ~50 GB of dead spill in blockmgr for
-        # the next repeat to collide with — see session.py periodicGC note)
-        spark.sparkContext._jvm.System.gc()
-        time.sleep(2)
+    stats = best_of(spark, cores, workdir, repeats, max(200_000, n_events // 16),
+                    lambda d: apply_once(spark, n_events, log_dir, n_files, d,
+                                         n_batches=n_batches),
+                    body_repeat=SCALING_BODY_REPEAT, n_files=8)
     spark.stop()
-    stats = min(runs, key=lambda r: r["wall_sec"])
-    stats["cores"] = cores
-    stats["all_wall_sec"] = [r["wall_sec"] for r in runs]
     return stats
-
-
-def _probe_subprocess(cores: int, n_events: int, workdir: str) -> dict:
-    out = subprocess.run(
-        [sys.executable, os.path.abspath(__file__), "--apply-probe",
-         str(cores), str(n_events), workdir],
-        capture_output=True, text=True, timeout=3600,
-    )
-    for line in reversed(out.stdout.strip().splitlines()):
-        line = line.strip()
-        if line.startswith("{"):
-            return json.loads(line)
-    raise RuntimeError(f"probe failed (cores={cores}):\n{out.stderr[-2000:]}")
-
-
-def _interleaved_probes(configs: tuple[int, ...], n_events: int,
-                        rounds: int = 2) -> dict[int, dict]:
-    """best-of-`rounds` per config, INTERLEAVED across configs.
-
-    Running each config's repeats back-to-back hands every config a different
-    slice of host weather (a noise wave during one config's slot wrecks the
-    scaling ratio — observed: a local[2]-quiet/local[8]-stormy pass measured
-    'efficiency' 0.43 where interleaved passes measure ~0.84). Interleaving
-    2,8,32, 2,8,32 ... gives every config a sample from each weather window;
-    best-of per config then compares like with like.
-    """
-    results: dict[int, dict] = {}
-    for i in range(rounds):
-        for c in configs:
-            r = _probe_subprocess(c, n_events, f"/tmp/cdc_bench_scale_{c}_{i}")
-            _record_probe(r, n_events)
-            prev = results.get(c)
-            walls = (prev["all_wall_sec"] if prev else []) + r["all_wall_sec"]
-            if prev is None or r["wall_sec"] < prev["wall_sec"]:
-                results[c] = r
-            results[c]["all_wall_sec"] = walls
-    return results
 
 
 def skew_probe(cores: int, n_events: int, salt_buckets: int,
@@ -338,43 +398,15 @@ def skew_probe(cores: int, n_events: int, salt_buckets: int,
     salted run spreads it over 16. Identical final_rows, different wall.
     The log is generated once and shared across probes (deterministic seed)."""
     spark = _session(cores, f"cdc-skew-{salt_buckets}")
-    spark.sparkContext.setLogLevel("ERROR")
-    bench_apply(spark, max(200_000, n_events // 16), f"{workdir}/warm",
-                n_batches=2, n_files=8)
     n_files = gen_log(spark, n_events, log_dir, body_repeat=1,
-                      n_files=SCALING_FILES, hot_repo_fraction=0.5, reuse=True)
-    runs = []
-    for i in range(repeats):
-        runs.append(apply_once(spark, n_events, log_dir, n_files,
-                               f"{workdir}/run{i}", n_batches=2,
-                               salt_buckets=salt_buckets))
-        shutil.rmtree(f"{workdir}/run{i}", ignore_errors=True)
+                      n_files=SCALING_FILES, hot_repo_fraction=0.5)
+    stats = best_of(spark, cores, workdir, repeats, max(200_000, n_events // 16),
+                    lambda d: apply_once(spark, n_events, log_dir, n_files, d,
+                                         n_batches=2, salt_buckets=salt_buckets),
+                    n_files=8)
     spark.stop()
-    shutil.rmtree(f"{workdir}/warm", ignore_errors=True)
-    stats = min(runs, key=lambda r: r["wall_sec"])
-    stats["cores"] = cores
     stats["salt_buckets"] = salt_buckets
-    stats["all_wall_sec"] = [r["wall_sec"] for r in runs]
     return stats
-
-
-def _skew_subprocess(cores: int, n_events: int, salt_buckets: int,
-                     log_dir: str, workdir: str) -> dict:
-    out = subprocess.run(
-        [sys.executable, os.path.abspath(__file__), "--skew-probe",
-         str(cores), str(n_events), str(salt_buckets), log_dir, workdir],
-        capture_output=True, text=True, timeout=3600,
-    )
-    for line in reversed(out.stdout.strip().splitlines()):
-        line = line.strip()
-        if line.startswith("{"):
-            return json.loads(line)
-    raise RuntimeError(f"skew probe failed (salt={salt_buckets}):\n"
-                       f"{out.stderr[-2000:]}")
-
-
-WRITEMODE_HISTORY = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                                 "BENCH", "writemode_probes.jsonl")
 
 
 def _du(path: str) -> int:
@@ -413,9 +445,8 @@ def writemode_probe(cores: int, n_events: int, mode: str, workdir: str,
     from change_data_capturer_ms_spark.streaming.pipeline import prepare_batch
 
     spark = _session(cores, f"cdc-wm-{mode}")
-    spark.sparkContext.setLogLevel("ERROR")
     n_files = gen_log(spark, n_events, f"{workdir}/log", SCALING_BODY_REPEAT,
-                      SCALING_FILES, reuse=True)
+                      SCALING_FILES)
     # pre-materialize the incremental waves once (untimed). The waves churn a
     # ~2% hot subset of the base repos (ids are a prefix of the base id
     # space, so every merge hits existing keys): a uniform wave over the
@@ -453,19 +484,12 @@ def writemode_probe(cores: int, n_events: int, mode: str, workdir: str,
              "inc_bytes": _du(f"{d}/table/data") - base_bytes,
              "base_bytes": base_bytes,
              "final_rows": tbl.read().count()}
-        t0 = time.time()
-        tbl.read().count()
-        r["read_sec"] = round(time.time() - t0, 2)
+        r["read_sec"] = round(_wall(lambda: tbl.read().count())[0], 2)
         if mode == "mor":
-            t0 = time.time()
-            tbl.compact()
-            r["compact_sec"] = round(time.time() - t0, 2)
-            t0 = time.time()
-            r["post_compact_rows"] = tbl.read().count()
-            r["post_compact_read_sec"] = round(time.time() - t0, 2)
-        shutil.rmtree(d, ignore_errors=True)
-        spark.sparkContext._jvm.System.gc()
-        time.sleep(2)
+            r["compact_sec"] = round(_wall(tbl.compact)[0], 2)
+            t, r["post_compact_rows"] = _wall(lambda: tbl.read().count())
+            r["post_compact_read_sec"] = round(t, 2)
+        _drop_repeat(spark, d)
         runs.append(r)
     spark.stop()
     stats = min(runs, key=lambda x: x["inc_wall_sec"])
@@ -474,9 +498,8 @@ def writemode_probe(cores: int, n_events: int, mode: str, workdir: str,
         "n_inc": n_inc, "inc_events": inc_events,
         "all_inc_wall_sec": [x["inc_wall_sec"] for x in runs],
         "read_sec": min(x["read_sec"] for x in runs),
-        "wall_sec": min(x["inc_wall_sec"] for x in runs),  # campaign log line
-        "events_per_sec": round(n_inc * inc_events
-                                / min(x["inc_wall_sec"] for x in runs), 1),
+        "wall_sec": stats["inc_wall_sec"],  # campaign log line
+        "events_per_sec": round(n_inc * inc_events / stats["inc_wall_sec"], 1),
     })
     if mode == "mor":
         stats["compact_sec"] = min(x["compact_sec"] for x in runs)
@@ -491,31 +514,24 @@ def _writemode_section() -> str:
     records timed the full-coverage base build, where both modes write
     ~identical bytes by construction; they stay in history, excluded here)."""
     per: dict[str, dict] = {}
-    try:
-        for line in open(WRITEMODE_HISTORY):
-            try:
-                h = json.loads(line)
-            except ValueError:
-                continue
-            if not _stamp_ok(h) or h.get("probe_ver") != 2:
-                continue
-            # fold keyed by (mode, probe shape): a future probe at a different
-            # (n_events, n_inc, inc_events) must not merge into these minima
-            md = (h["write_mode"], h["n_events"], h["n_inc"], h["inc_events"])
-            r = per.setdefault(md, {"walls": [], "reads": [], "compacts": [],
-                                    "bytes": [], "final_rows": h["final_rows"],
-                                    "n_events": h["n_events"],
-                                    "n_inc": h["n_inc"],
-                                    "inc_events": h["inc_events"],
-                                    "base_bytes": h["base_bytes"]})
-            r["walls"] += h.get("all_inc_wall_sec") or [h["inc_wall_sec"]]
-            r["reads"].append(h["read_sec"])
-            r["bytes"].append(h["inc_bytes"])
-            if "compact_sec" in h:
-                r["compacts"].append(h["compact_sec"]
-                                     + h.get("post_compact_read_sec", 0.0))
-    except FileNotFoundError:
-        return ""
+    for h in read_history(WRITEMODE_HISTORY, stamped=True):
+        if h.get("probe_ver") != 2:
+            continue
+        # fold keyed by (mode, probe shape): a future probe at a different
+        # (n_events, n_inc, inc_events) must not merge into these minima
+        md = (h["write_mode"], h["n_events"], h["n_inc"], h["inc_events"])
+        r = per.setdefault(md, {"walls": [], "reads": [], "compacts": [],
+                                "bytes": [], "final_rows": h["final_rows"],
+                                "n_events": h["n_events"],
+                                "n_inc": h["n_inc"],
+                                "inc_events": h["inc_events"],
+                                "base_bytes": h["base_bytes"]})
+        r["walls"] += h.get("all_inc_wall_sec") or [h["inc_wall_sec"]]
+        r["reads"].append(h["read_sec"])
+        r["bytes"].append(h["inc_bytes"])
+        if "compact_sec" in h:
+            r["compacts"].append(h["compact_sec"]
+                                 + h.get("post_compact_read_sec", 0.0))
     # render the most-sampled shape that has BOTH modes
     shapes = sorted(
         {k[1:] for k in per if k[0] == "cow"} & {k[1:] for k in per if k[0] == "mor"},
@@ -570,10 +586,6 @@ def _writemode_section() -> str:
     )
 
 
-PRUNING_HISTORY = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "BENCH", "pruning_probes.jsonl")
-
-
 def pruning_probe(cores: int, n_events: int, workdir: str,
                   n_buckets: int = 1024) -> dict:
     """Measure the metadata-pruning stack on a lake bucketed the way the 100 TB
@@ -595,9 +607,8 @@ def pruning_probe(cores: int, n_events: int, workdir: str,
     from change_data_capturer_ms_spark.streaming.pipeline import prepare_batch
 
     spark = _session(cores, "cdc-pruning")
-    spark.sparkContext.setLogLevel("ERROR")
     n_files = gen_log(spark, n_events, f"{workdir}/log", SCALING_BODY_REPEAT,
-                      SCALING_FILES, reuse=True)
+                      SCALING_FILES)
     d = f"{workdir}/lake"
     apply_once(spark, n_events, f"{workdir}/log", n_files, d, n_batches=2,
                n_buckets=n_buckets)
@@ -625,50 +636,36 @@ def pruning_probe(cores: int, n_events: int, workdir: str,
     # point-lookup pruning: driver-side bucket + zone maps, per key
     from change_data_capturer_ms_spark.functions.xxh64 import xxhash64_cols
     types = {f.name: f.dataType.simpleString() for f in m.schema.fields}
-    cand_counts = []
+
     # bucket hashes MUST come from m.bucket_key (resolves [] -> key_cols),
     # never m.key_cols: a bucket_cols table would hash the wrong columns
-    for kv in keys[:50]:
-        h = xxhash64_cols([kv[k] for k in m.bucket_key],
-                          [types[k] for k in m.bucket_key])
-        cand_counts.append(len(tbl.candidate_files(
-            [(k, "=", kv[k]) for k in m.key_cols],
-            buckets={h % m.n_buckets})))
+    def bucket(kv):
+        return xxhash64_cols([kv[k] for k in m.bucket_key],
+                             [types[k] for k in m.bucket_key]) % m.n_buckets
+
+    cand_counts = [len(tbl.candidate_files(
+        [(k, "=", kv[k]) for k in m.key_cols], buckets={bucket(kv)}))
+        for kv in keys[:50]]
     lookup_frac = (sum(cand_counts) / len(cand_counts)) / total_files
 
     # incremental read after the small batch: max_seq stats leave cold
     # buckets' files unopened (read_incremental's exact pruning rule)
     old_ms = int(tbl.manifest(v_pre).lease["metrics"]["max_seq"])
     inc_files = len(tbl.candidate_files([("_last_seq", ">", old_ms)]))
-    t_inc = float("inf")
-    for _ in range(2):
-        t0 = time.time()
-        inc_rows = tbl.read_incremental(v_pre).count()
-        t_inc = min(t_inc, time.time() - t0)
+    t_inc, inc_rows = _wall(lambda: tbl.read_incremental(v_pre).count(), 2)
 
     # batched point lookups vs naive full-scan broadcast join
     out_n: dict[int, dict] = {}
     for n_k in (100, 1000):
         sub = keys[:n_k]
-        bks = set()
-        for kv in sub:
-            h = xxhash64_cols([kv[k] for k in m.bucket_key],
-                              [types[k] for k in m.bucket_key])
-            bks.add(h % m.n_buckets)
+        bks = {bucket(kv) for kv in sub}
         lm_files = len({f.path for f in m.files if f.bucket in bks})
-        t_lm = t_naive = float("inf")
-        for _ in range(2):
-            t0 = time.time()
-            lm_rows = tbl.lookup_many(sub).count()
-            t_lm = min(t_lm, time.time() - t0)
+        t_lm, lm_rows = _wall(lambda: tbl.lookup_many(sub).count(), 2)
         key_df = spark.createDataFrame(
             [(kv["repo"], kv["path"]) for kv in sub],
             "repo string, path string")
-        for _ in range(2):
-            t0 = time.time()
-            naive_rows = (tbl.read().join(F.broadcast(key_df),
-                                          ["repo", "path"], "inner").count())
-            t_naive = min(t_naive, time.time() - t0)
+        t_naive, naive_rows = _wall(lambda: tbl.read().join(
+            F.broadcast(key_df), ["repo", "path"], "inner").count(), 2)
         assert lm_rows == naive_rows, (n_k, lm_rows, naive_rows)
         out_n[n_k] = {"files": lm_files,
                       "files_frac": round(lm_files / total_files, 4),
@@ -691,26 +688,17 @@ def pruning_probe(cores: int, n_events: int, workdir: str,
 def _pruning_section() -> str:
     """Pruning-stack evidence from BENCH/pruning_probes.jsonl."""
     best = None
-    try:
-        for line in open(PRUNING_HISTORY):
-            try:
-                h = json.loads(line)
-            except ValueError:
-                continue
-            if not _stamp_ok(h):
-                continue
-            if best is None:
-                best = dict(h)
-            else:  # fold timing minima; structural fields are deterministic
-                best["incremental_sec"] = min(best["incremental_sec"],
-                                              h["incremental_sec"])
-                for n_k, b in h.get("batched", {}).items():
-                    tgt = best["batched"].get(n_k)
-                    if tgt:
-                        for k in ("lookup_many_sec", "naive_scan_sec"):
-                            tgt[k] = min(tgt[k], b[k])
-    except FileNotFoundError:
-        return ""
+    for h in read_history(PRUNING_HISTORY, stamped=True):
+        if best is None:
+            best = dict(h)
+        else:  # fold timing minima; structural fields are deterministic
+            best["incremental_sec"] = min(best["incremental_sec"],
+                                          h["incremental_sec"])
+            for n_k, b in h.get("batched", {}).items():
+                tgt = best["batched"].get(n_k)
+                if tgt:
+                    for k in ("lookup_many_sec", "naive_scan_sec"):
+                        tgt[k] = min(tgt[k], b[k])
     if best is None:
         return ""
     lines = []
@@ -745,10 +733,6 @@ def _pruning_section() -> str:
         "pruned paths stay O(matching files + N); the bucket count is the "
         "knob that keeps N point lookups from covering every bucket.\n"
     )
-
-
-INDEX_SCALE_HISTORY = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                                   "BENCH", "index_scale_probes.jsonl")
 
 
 def _synth_docs(spark, n: int, id_offset: int = 0, salt: int = 0):
@@ -796,7 +780,8 @@ def index_scale_probe(cores: int, workdir: str,
     and probe 200 items after every merge. If maintenance is O(batch) the
     per-batch wall is ~flat across the two corpus sizes; if it secretly
     rescans the corpus it grows ~10x. Probe walls while merges run land in
-    the same records. One JSON record per (kind, corpus)."""
+    the same records. One history record per (kind, corpus), written here:
+    the worker is run directly, not through a campaign piece."""
     from pyspark.sql import functions as F
 
     from change_data_capturer_ms_spark.operators import (
@@ -805,8 +790,6 @@ def index_scale_probe(cores: int, workdir: str,
     )
 
     spark = _session(cores, "cdc-index-scale")
-    spark.sparkContext.setLogLevel("ERROR")
-    recs: list[dict] = []
 
     def run(kind, corpus_n, batch_size):
         d = f"{workdir}/{kind}_{corpus_n}"
@@ -815,19 +798,17 @@ def index_scale_probe(cores: int, workdir: str,
             idx = MinHashLSHIndex(spark, f"{d}/idx", n_buckets=64)
             gen, id_c, old_c, new_c, val_c = (
                 _synth_docs, "doc_id", "old_text", "new_text", "text")
-            null_t = "string"
+            null_t, probe_kw = "string", {}
         else:
             idx = EmbeddingANNIndex(spark, f"{d}/idx", bits=4, n_buckets=32)
             gen, id_c, old_c, new_c, val_c = (
                 _synth_vecs, "vec_id", "old_vec", "new_vec", "embedding")
-            null_t = "array<double>"
+            null_t, probe_kw = "array<double>", {"k": 5}
         base = gen(spark, corpus_n)
         boot = base.select(
             id_c, F.lit(None).cast(null_t).alias(old_c),
             F.col(val_c).alias(new_c), "seq")
-        t0 = time.time()
-        idx.update(boot, batch_id=0)
-        boot_sec = time.time() - t0
+        boot_sec = _wall(lambda: idx.update(boot, batch_id=0))[0]
         probe_src = gen(spark, 200)
         n_upd = batch_size // 5
         n_ins = batch_size - n_upd
@@ -847,36 +828,25 @@ def index_scale_probe(cores: int, workdir: str,
                 new.select(id_c, F.col(val_c).alias(new_c)), id_c).select(
                 id_c, old_c, new_c, (F.col("seq") + seq_base).alias("seq"))
             changes = ins.unionByName(upd)
-            t0 = time.time()
-            idx.update(changes, batch_id=b + 1)
-            batch_walls.append(round(time.time() - t0, 3))
-            t0 = time.time()
-            if kind == "lsh":
-                idx.probe(probe_src).count()
-            else:
-                idx.probe(probe_src, k=5).count()
-            probe_walls.append(round(time.time() - t0, 3))
+            batch_walls.append(round(_wall(
+                lambda: idx.update(changes, batch_id=b + 1))[0], 3))
+            probe_walls.append(round(_wall(
+                lambda: idx.probe(probe_src, **probe_kw).count())[0], 3))
         shutil.rmtree(d, ignore_errors=True)
         return {"probe_ver": 1, "kind": kind, "cores": cores,
                 "corpus": corpus_n, "batch_size": batch_size,
                 "n_batches": n_batches,
                 "bootstrap_sec": round(boot_sec, 3),
                 "items_per_sec": round(corpus_n / boot_sec, 1),
-                "batch_walls": batch_walls, "probe_walls": probe_walls,
-                "engine": _engine_stamp(), "proto": BENCH_PROTO,
-                "ts": time.time()}
+                "batch_walls": batch_walls, "probe_walls": probe_walls}
 
     # interleave sizes (small, big, small, big) so a host-noise wave cannot
     # land entirely on one corpus size
-    for corpus_n in lsh_sizes:
-        recs.append(run("lsh", corpus_n, lsh_batch))
-    for corpus_n in ann_sizes:
-        recs.append(run("ann", corpus_n, ann_batch))
+    recs = ([run("lsh", c, lsh_batch) for c in lsh_sizes]
+            + [run("ann", c, ann_batch) for c in ann_sizes])
     spark.stop()
-    os.makedirs(os.path.dirname(INDEX_SCALE_HISTORY), exist_ok=True)
-    with open(INDEX_SCALE_HISTORY, "a") as f:
-        for r in recs:
-            f.write(json.dumps(r) + "\n")
+    for r in recs:
+        record(INDEX_SCALE_HISTORY, r)
     return recs
 
 
@@ -885,25 +855,16 @@ def _index_scale_section() -> str:
     per (kind, corpus, batch_size), fold batch/probe walls across history and
     report medians; the flatness ratio compares the largest vs smallest
     corpus at the same batch size."""
-    import statistics
-
     per: dict[tuple, dict] = {}
-    try:
-        for line in open(INDEX_SCALE_HISTORY):
-            try:
-                h = json.loads(line)
-            except ValueError:
-                continue
-            if not _stamp_ok(h) or h.get("probe_ver") != 1:
-                continue
-            key = (h["kind"], h["corpus"], h["batch_size"])
-            r = per.setdefault(key, {"batch_walls": [], "probe_walls": [],
-                                     "boot": float("inf")})
-            r["batch_walls"] += h["batch_walls"]
-            r["probe_walls"] += h["probe_walls"]
-            r["boot"] = min(r["boot"], h["bootstrap_sec"])
-    except FileNotFoundError:
-        return ""
+    for h in read_history(INDEX_SCALE_HISTORY, stamped=True):
+        if h.get("probe_ver") != 1:
+            continue
+        key = (h["kind"], h["corpus"], h["batch_size"])
+        r = per.setdefault(key, {"batch_walls": [], "probe_walls": [],
+                                 "boot": float("inf")})
+        r["batch_walls"] += h["batch_walls"]
+        r["probe_walls"] += h["probe_walls"]
+        r["boot"] = min(r["boot"], h["bootstrap_sec"])
     if not per:
         return ""
     lines = ["| index | corpus | batch size | bootstrap s | batch wall s "
@@ -911,7 +872,6 @@ def _index_scale_section() -> str:
              "| --- | --- | --- | --- | --- | --- |"]
     flat = []
     for kind in ("lsh", "ann"):
-        sizes = sorted(k[1] for k in per if k[0] == kind)
         for (k, c, bs), r in sorted(per.items()):
             if k != kind:
                 continue
@@ -920,14 +880,19 @@ def _index_scale_section() -> str:
                 f"| {statistics.median(r['batch_walls']):.2f} "
                 f"(n={len(r['batch_walls'])}) "
                 f"| {statistics.median(r['probe_walls']):.2f} |")
-        if len(sizes) >= 2:
-            lo = next(r for (k, c, _), r in per.items()
-                      if k == kind and c == sizes[0])
-            hi = next(r for (k, c, _), r in per.items()
-                      if k == kind and c == sizes[-1])
-            flat.append(
-                f"{kind}: {statistics.median(hi['batch_walls']) / statistics.median(lo['batch_walls']):.2f}x "
-                f"batch wall at {sizes[-1] // sizes[0]}x corpus")
+        # flatness compares corpus sizes within ONE batch size: a ratio
+        # across batch sizes would price the batch, not the corpus
+        batch_sizes = sorted({bs for k, _c, bs in per if k == kind})
+        for bs in batch_sizes:
+            sizes = sorted(c for k, c, b in per if k == kind and b == bs)
+            if len(sizes) < 2:
+                continue
+            lo, hi = per[kind, sizes[0], bs], per[kind, sizes[-1], bs]
+            label = f"{kind} (batch {bs})" if len(batch_sizes) > 1 else kind
+            ratio = (statistics.median(hi["batch_walls"])
+                     / statistics.median(lo["batch_walls"]))
+            flat.append(f"{label}: {ratio:.2f}x batch wall at "
+                        f"{sizes[-1] // sizes[0]}x corpus")
     return (
         "\n**Incremental-index maintenance at 10x corpus** — each index "
         "bootstrapped at two corpus sizes (deterministic synthetic docs/"
@@ -949,50 +914,14 @@ def _index_scale_section() -> str:
     )
 
 
-SKEW_HISTORY = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                            "BENCH", "skew_probes.jsonl")
-
-
-def run_skew_bench(n_events: int = 16_000_000, rounds: int = 2) -> dict:
-    """Interleaved salted(16)/unsalted(1) hot-skew probes; records history and
-    rebuilds BENCH/BASELINE.md with the skew section."""
-    log_dir = f"/tmp/cdc_skew_log_{n_events}"
-    results: dict[int, dict] = {}
-    os.makedirs(os.path.dirname(SKEW_HISTORY), exist_ok=True)
-    for i in range(rounds):
-        for salt in (16, 1):
-            r = _skew_subprocess(CPUS, n_events, salt, log_dir,
-                                 f"/tmp/cdc_skew_{salt}_{i}")
-            with open(SKEW_HISTORY, "a") as f:
-                f.write(json.dumps({**r, "n_events": n_events,
-                                    "engine": _engine_stamp(),
-                                    "proto": BENCH_PROTO,
-                                    "ts": time.time()}) + "\n")
-            prev = results.get(salt)
-            if prev is None or r["wall_sec"] < prev["wall_sec"]:
-                results[salt] = r
-    rows = {s: r["final_rows"] for s, r in results.items()}
-    assert len(set(rows.values())) == 1, f"salted != unsalted rows: {rows}"
-    return results
-
-
 def _skew_section() -> str:
     """Hot-key skew evidence folded from BENCH/skew_probes.jsonl."""
     per: dict[int, dict] = {}
-    try:
-        for line in open(SKEW_HISTORY):
-            try:
-                h = json.loads(line)
-            except ValueError:
-                continue
-            if not _stamp_ok(h):
-                continue
-            s = int(h["salt_buckets"])
-            r = per.setdefault(s, {"walls": [], "final_rows": h["final_rows"],
-                                   "n_events": h["n_events"]})
-            r["walls"] += h.get("all_wall_sec") or [h["wall_sec"]]
-    except FileNotFoundError:
-        return ""
+    for h in read_history(SKEW_HISTORY, stamped=True):
+        s = int(h["salt_buckets"])
+        r = per.setdefault(s, {"walls": [], "final_rows": h["final_rows"],
+                               "n_events": h["n_events"]})
+        r["walls"] += h.get("all_wall_sec") or [h["wall_sec"]]
     # the rendered comparison is salted-16 vs unsalted-1; other salt values
     # may exist in history (the CLI accepts any) — require the pair, don't
     # crash every consolidate over an experimental sample
@@ -1024,98 +953,10 @@ def _skew_section() -> str:
     )
 
 
-PROBE_HISTORY = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                             "BENCH", "probes.jsonl")
-
-
-def _record_probe(r: dict, n_events: int, extra: dict | None = None) -> None:
-    """Append the probe to the session-spanning sample history. Minima over
-    MANY interleaved samples are the capability estimate on this noisy host —
-    one pass of 2 samples per config can land entirely inside a noise wave.
-
-    Samples taken under a CDC_BENCH_EXTRA_CONF override are NOT official
-    engine numbers — they stay out of the history so experiments can't
-    contaminate the consolidated baseline."""
-    if os.environ.get("CDC_BENCH_EXTRA_CONF"):
-        return
-    os.makedirs(os.path.dirname(PROBE_HISTORY), exist_ok=True)
-    rec = {"n_events": n_events, "cores": r["cores"],
-           "walls": r["all_wall_sec"],
-           "final_rows": r["final_rows"],
-           "engine": _engine_stamp(),
-           "proto": BENCH_PROTO,
-           "ts": time.time()}
-    if r.get("batch_walls"):
-        rec["batch_walls"] = r["batch_walls"]  # best run's per-micro-batch walls
-    if extra:
-        rec.update(extra)
-    with open(PROBE_HISTORY, "a") as f:
-        f.write(json.dumps(rec) + "\n")
-
-
-def read_host_cpu() -> tuple[int, int]:
-    """(steal_ticks, total_ticks) from /proc/stat — hypervisor weather gauge.
-
-    Delta steal/total across a probe quantifies how much CPU the neighbors
-    took during THAT sample, turning 'the 8→32 pair collapses under host
-    noise' from an inference into a measurement."""
-    with open("/proc/stat") as f:
-        parts = f.readline().split()[1:]
-    vals = [int(x) for x in parts]
-    steal = vals[7] if len(vals) > 7 else 0
-    return steal, sum(vals)
-
-
-def read_host_cpu_full() -> dict:
-    """Full /proc/stat tick breakdown — lets a probe stamp user/sys/steal
-    shares over its own window. The SYS share matters as much as steal here:
-    nested-virt syscall cost makes kernel time the python-worker scaling tax
-    (see the same-window pairs section), and recording it per probe turns
-    that from anecdote into measurement."""
-    with open("/proc/stat") as f:
-        parts = f.readline().split()[1:]
-    vals = [int(x) for x in parts] + [0] * 8
-    return {"user": vals[0] + vals[1], "sys": vals[2] + vals[5] + vals[6],
-            "idle": vals[3], "iowait": vals[4], "steal": vals[7],
-            "total": sum(vals[:8])}
-
-
-def _merge_history(results: dict[int, dict], n_events: int) -> dict[int, dict]:
-    """Fold historical same-input probes into the per-config run lists/minima."""
-    if not os.path.exists(PROBE_HISTORY):
-        return results
-    for line in open(PROBE_HISTORY):
-        try:
-            h = json.loads(line)
-        except ValueError:
-            continue
-        c = h.get("cores")
-        if h.get("n_events") != n_events or c not in results:
-            continue
-        if not _stamp_ok(h):
-            continue  # different per-event work OR different bench protocol
-        if h.get("final_rows") != results[c]["final_rows"]:
-            continue  # different engine semantics — not comparable
-        known = set(results[c]["all_wall_sec"])
-        extra = [w for w in h.get("walls", []) if w not in known]
-        if not extra:
-            continue
-        results[c]["all_wall_sec"] += extra
-        best = min(extra)
-        if best < results[c]["wall_sec"]:
-            results[c]["wall_sec"] = best
-            results[c]["events_per_sec"] = round(n_events / best, 1)
-    return results
-
-
-QUERY_HISTORY = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                             "BENCH", "query_probes.jsonl")
-
-
 def bench_queries(spark, sf_dir: str) -> tuple[dict[str, float], dict[str, float]]:
     """Returns (folded best-of-history per query, this run's best-of-2).
 
-    Same methodology as the apply fold (_fold_apply_history): the driver
+    Same methodology as the apply fold (fold_apply_history): the driver
     samples ONCE per round, and a single neighbor-noise wave mid-query records
     2-6x the demonstrated capability (observed: dedup_minhash_lsh 5.1 s and
     9.8 s for the identical query in different weather). History folds only on
@@ -1136,37 +977,30 @@ def bench_queries(spark, sf_dir: str) -> tuple[dict[str, float], dict[str, float
     this_run: dict[str, float] = {}
     rows_by_q: dict[str, int] = {}
     for name in HEADLINE:
-        fn = qs[name]
         # best-of-2: single samples on this shared host routinely double when a
-        # neighbor-noise wave passes mid-query (documented in apply_probe)
-        best, rows = float("inf"), 0
-        for _ in range(2):
-            t0 = time.time()
-            rows = fn(spark, sf_dir).count()  # materialize
-            best = min(best, time.time() - t0)
+        # neighbor-noise wave passes mid-query (documented in best_of)
+        best, rows = _wall(lambda: qs[name](spark, sf_dir).count(), 2)  # materialize
         this_run[name] = round(best, 3)
         rows_by_q[name] = rows
-    # record raw samples first, then fold prior sessions' minima
-    os.makedirs(os.path.dirname(QUERY_HISTORY), exist_ok=True)
-    with open(QUERY_HISTORY, "a") as f:
-        for name, t in this_run.items():
-            f.write(json.dumps({"name": name, "sf": sf,
-                                "rows": rows_by_q[name], "best": t,
-                                "qv": QUERY_VER.get(name, 1),
-                                "ts": time.time()}) + "\n")
-    times = dict(this_run)
-    for line in open(QUERY_HISTORY):
-        try:
-            h = json.loads(line)
-        except ValueError:
-            continue
+    return _fold_queries(sf, this_run, rows_by_q), this_run
+
+
+def _fold_queries(sf: float, best: dict[str, float],
+                  rows: dict[str, int]) -> dict[str, float]:
+    """Record this run's per-query bests, then fold them with every history
+    sample of the same (name, sf, result rows, plan version)."""
+    for name, t in best.items():
+        record(QUERY_HISTORY, {"name": name, "sf": sf, "rows": rows[name],
+                               "best": t, "qv": QUERY_VER.get(name, 1)})
+    folded = dict(best)
+    for h in read_history(QUERY_HISTORY):
         name = h.get("name")
-        if (name in times and h.get("sf") == sf
-                and h.get("rows") == rows_by_q.get(name)
+        if (name in folded and h.get("sf") == sf
+                and h.get("rows") == rows[name]
                 and h.get("qv", 1) == QUERY_VER.get(name, 1)
                 and isinstance(h.get("best"), (int, float))):
-            times[name] = min(times[name], round(float(h["best"]), 3))
-    return times, this_run
+            folded[name] = min(folded[name], round(float(h["best"]), 3))
+    return folded
 
 
 def bench_merge_cold(spark, sf_dir: str) -> dict:
@@ -1186,28 +1020,13 @@ def bench_merge_cold(spark, sf_dir: str) -> dict:
     tag = os.path.basename(os.path.normpath(sf_dir))
     path = f"/tmp/cdc_q_merge_{entrymod._VER}_{tag}"
     fn = entrymod.queries()["merge_upsert"]
-    samples, rows = [], 0
+    samples = []
     for _ in range(2):
         shutil.rmtree(path, ignore_errors=True)
-        t0 = time.time()
-        rows = fn(spark, sf_dir).count()
-        samples.append(round(time.time() - t0, 3))
-    best = min(samples)
-    os.makedirs(os.path.dirname(QUERY_HISTORY), exist_ok=True)
-    with open(QUERY_HISTORY, "a") as f:
-        f.write(json.dumps({"name": "merge_upsert_cold", "sf": sf,
-                            "rows": rows, "best": best,
-                            "ts": time.time()}) + "\n")
-    folded = best
-    for line in open(QUERY_HISTORY):
-        try:
-            h = json.loads(line)
-        except ValueError:
-            continue
-        if (h.get("name") == "merge_upsert_cold" and h.get("sf") == sf
-                and h.get("rows") == rows
-                and isinstance(h.get("best"), (int, float))):
-            folded = min(folded, round(float(h["best"]), 3))
+        t, rows = _wall(lambda: fn(spark, sf_dir).count())
+        samples.append(round(t, 3))
+    folded = _fold_queries(sf, {"merge_upsert_cold": min(samples)},
+                           {"merge_upsert_cold": rows})["merge_upsert_cold"]
     return {"cold_build_sec": folded, "this_run": samples, "rows": rows,
             "note": "teardown + create + 2 MERGE batches + read; the "
                     "HEADLINE merge_upsert is the warm read-back"}
@@ -1227,86 +1046,90 @@ def bench_indexes(spark, sf_dir: str) -> dict:
         MinHashLSHIndex,
     )
 
+    def table(name, id_col, val_col):
+        return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet")).select(
+            F.col(id_col).cast("string").alias(id_col), val_col,
+            F.col(id_col).cast("long").alias("seq"))
+
+    docs = table("documents", "doc_id", "text")
+    vecs = table("embeddings", "vec_id", "embedding")
+    # name: (items, count/rate keys, index factory, bootstrap changes, probe)
+    specs = {
+        "lsh_text": (
+            docs, "docs", "docs_per_sec",
+            lambda d: MinHashLSHIndex(spark, d, n_buckets=32),
+            docs.select("doc_id", F.lit(None).cast("string").alias("old_text"),
+                        F.col("text").alias("new_text"), "seq"),
+            lambda idx: idx.probe(docs.limit(200))),
+        "ann_embed": (
+            vecs, "vectors", "vecs_per_sec",
+            lambda d: EmbeddingANNIndex(spark, d, bits=4, n_buckets=16),
+            vecs.select("vec_id",
+                        F.lit(None).cast("array<double>").alias("old_vec"),
+                        F.col("embedding").cast("array<double>").alias("new_vec"),
+                        "seq"),
+            lambda idx: idx.probe(vecs.limit(200), k=5)),
+    }
     out: dict = {}
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text",
-        F.col("doc_id").cast("long").alias("seq"))
-    n_docs = docs.count()
-    best_u = best_p = float("inf")
-    for _ in range(2):
-        d = tempfile.mkdtemp(prefix="cdc_bench_lsh_")
-        idx = MinHashLSHIndex(spark, f"{d}/idx", n_buckets=32)
-        ch = docs.select(
-            "doc_id", F.lit(None).cast("string").alias("old_text"),
-            F.col("text").alias("new_text"), "seq")
-        t0 = time.time()
-        idx.update(ch, batch_id=0)
-        best_u = min(best_u, time.time() - t0)
-        t0 = time.time()
-        idx.probe(docs.limit(200)).count()
-        best_p = min(best_p, time.time() - t0)
-        shutil.rmtree(d, ignore_errors=True)
-    out["lsh_text"] = {"docs": n_docs, "bootstrap_sec": round(best_u, 3),
-                       "docs_per_sec": round(n_docs / best_u, 1),
-                       "probe200_sec": round(best_p, 3)}
-    vecs = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet")).select(
-        F.col("vec_id").cast("string").alias("vec_id"), "embedding",
-        F.col("vec_id").cast("long").alias("seq"))
-    n_vecs = vecs.count()
-    best_u = best_p = float("inf")
-    for _ in range(2):
-        d = tempfile.mkdtemp(prefix="cdc_bench_eidx_")
-        idx = EmbeddingANNIndex(spark, f"{d}/idx", bits=4, n_buckets=16)
-        ch = vecs.select(
-            "vec_id",
-            F.lit(None).cast("array<double>").alias("old_vec"),
-            F.col("embedding").cast("array<double>").alias("new_vec"), "seq")
-        t0 = time.time()
-        idx.update(ch, batch_id=0)
-        best_u = min(best_u, time.time() - t0)
-        t0 = time.time()
-        idx.probe(vecs.limit(200), k=5).count()
-        best_p = min(best_p, time.time() - t0)
-        shutil.rmtree(d, ignore_errors=True)
-    out["ann_embed"] = {"vectors": n_vecs, "bootstrap_sec": round(best_u, 3),
-                        "vecs_per_sec": round(n_vecs / best_u, 1),
-                        "probe200_sec": round(best_p, 3)}
+    for name, (items, n_key, rate_key, make, changes, probe) in specs.items():
+        n = items.count()
+        best_u = best_p = float("inf")
+        for _ in range(2):
+            d = tempfile.mkdtemp(prefix=f"cdc_bench_{name}_")
+            idx = make(f"{d}/idx")
+            best_u = min(best_u, _wall(lambda: idx.update(changes, batch_id=0))[0])
+            best_p = min(best_p, _wall(lambda: probe(idx).count())[0])
+            shutil.rmtree(d, ignore_errors=True)
+        out[name] = {n_key: n, "bootstrap_sec": round(best_u, 3),
+                     rate_key: round(n / best_u, 1),
+                     "probe200_sec": round(best_p, 3)}
     return out
 
 
-def _fold_apply_history(apply_stats: dict, n_events: int, cores: int) -> dict:
-    """Fold same-shaped historical headline applies into the reported best.
+def _apply_record(r: dict, n_events: int) -> None:
+    """Record one apply probe's walls (and its host-CPU stamp, when it ran
+    through run_probe) in BENCH/probes.jsonl."""
+    rec = {"n_events": n_events, "cores": r["cores"],
+           "walls": r["all_wall_sec"], "final_rows": r["final_rows"]}
+    if r.get("batch_walls"):
+        rec["batch_walls"] = r["batch_walls"]  # best run's per-micro-batch walls
+    rec.update({k: r[k] for k in ("steal_pct", "sys_pct", "user_pct") if k in r})
+    record(PROBE_HISTORY, rec)
 
-    The driver samples bench.py ONCE per round; a neighbor-noise wave during
-    that slot records 5-10x the engine's demonstrated capability (observed:
-    11.75 s and 114.86 s for the identical job in different weather). All
-    history entries are real measurements of the same deterministic job on
-    this host (same n_events AND same final_rows ⇒ identical input + engine
-    semantics); the minimum over many samples is the capability estimate —
-    same methodology as the scaling probes (BENCH/BASELINE.md)."""
-    this_run = dict(apply_stats)
-    if os.path.exists(PROBE_HISTORY):
-        for line in open(PROBE_HISTORY):
-            try:
-                h = json.loads(line)
-            except ValueError:
-                continue
-            if (h.get("n_events") != n_events or h.get("cores") != cores
-                    or not _stamp_ok(h)
-                    or h.get("final_rows") != apply_stats["final_rows"]):
-                continue
-            walls = h.get("walls", [])
-            if walls and min(walls) < apply_stats["wall_sec"]:
-                apply_stats["wall_sec"] = min(walls)
-                apply_stats["events_per_sec"] = round(n_events / min(walls), 1)
-            apply_stats["all_wall_sec"] = sorted(
-                set(apply_stats["all_wall_sec"]) | set(walls))
-    apply_stats["this_run"] = {k: this_run[k]
-                               for k in ("wall_sec", "events_per_sec")}
-    apply_stats["best_is_from"] = (
-        "this_run" if apply_stats["wall_sec"] == this_run["wall_sec"]
-        else "session_history")
-    return apply_stats
+
+def fold_apply_history(n_events: int,
+                       final_rows: int | None = None) -> dict[int, dict]:
+    """Per-cores {cores, final_rows, all_wall_sec, wall_sec, events_per_sec}
+    over every foldable `n_events` apply probe (only those of `final_rows`,
+    if given). The minimum is the capability estimate: one slot can land in
+    a noise wave that records 5-10x the demonstrated capability (observed:
+    11.75 s and 114.86 s for the identical job in different weather)."""
+    per: dict[int, dict] = {}
+    for h in read_history(PROBE_HISTORY, stamped=True):
+        if h.get("n_events") != n_events or not h.get("walls"):
+            continue
+        if final_rows is not None and h.get("final_rows") != final_rows:
+            continue
+        c = int(h["cores"])
+        r = per.setdefault(c, {"cores": c, "final_rows": h["final_rows"],
+                               "all_wall_sec": [], "wall_sec": float("inf")})
+        assert h["final_rows"] == r["final_rows"], "mixed engine semantics"
+        r["all_wall_sec"] += h["walls"]
+        r["wall_sec"] = min(r["wall_sec"], *h["walls"])
+    for r in per.values():
+        r["events_per_sec"] = round(n_events / r["wall_sec"], 1)
+        r["all_wall_sec"] = sorted(r["all_wall_sec"])
+    return per
+
+
+N4N_PAIRS = ((1, 4), (2, 8), (8, 32))
+
+
+def _pair_effs(walls: dict[int, float]) -> dict[tuple[int, int], float]:
+    """N→4N scaling efficiency of every pair measured at both ends: the 4N
+    config's speed-up over N, divided by 4 (1.0 = linear)."""
+    return {(lo, hi): walls[lo] / (4 * walls[hi])
+            for lo, hi in N4N_PAIRS if lo in walls and hi in walls}
 
 
 def _input_linearity_section(base_events: int) -> str:
@@ -1317,31 +1140,22 @@ def _input_linearity_section(base_events: int) -> str:
     per: dict[int, float] = {}
     counts: dict[int, int] = {}
     bwalls: dict[int, list] = {}  # best record's per-micro-batch walls
-    try:
-        for line in open(PROBE_HISTORY):
-            try:
-                h = json.loads(line)
-            except ValueError:
-                continue
-            if int(h.get("cores", 0)) != 32 or h.get("n_events", 0) < 16_000_000:
-                continue
-            if not _stamp_ok(h):
-                continue
-            if len(h.get("walls", [])) < 2:
-                # crashed probe (empty) or a single-repeat record: the first
-                # apply in a fresh JVM pays a fixed ~100 s warm-state cost,
-                # so a repeats=1 wall is a first-run sample — folding it into
-                # the steady-state minima would contradict the table's stated
-                # methodology (ADVICE r4: the 128M 167.05 single-wall record)
-                continue
-            n = int(h["n_events"])
-            if h.get("batch_walls"):
-                bwalls.setdefault(n, []).append(
-                    (min(h["walls"]), h["batch_walls"]))
-            per[n] = min(per.get(n, float("inf")), *h["walls"])
-            counts[n] = counts.get(n, 0) + len(h["walls"])
-    except FileNotFoundError:
-        return ""
+    for h in read_history(PROBE_HISTORY, stamped=True):
+        if int(h.get("cores", 0)) != 32 or h.get("n_events", 0) < 16_000_000:
+            continue
+        if len(h.get("walls", [])) < 2:
+            # crashed probe (empty) or a single-repeat record: the first
+            # apply in a fresh JVM pays a fixed ~100 s warm-state cost,
+            # so a repeats=1 wall is a first-run sample — folding it into
+            # the steady-state minima would contradict the table's stated
+            # methodology (ADVICE r4: the 128M 167.05 single-wall record)
+            continue
+        n = int(h["n_events"])
+        if h.get("batch_walls"):
+            bwalls.setdefault(n, []).append(
+                (min(h["walls"]), h["batch_walls"]))
+        per[n] = min(per.get(n, float("inf")), *h["walls"])
+        counts[n] = counts.get(n, 0) + len(h["walls"])
     if len(per) < 2:
         return ""
     rows = "".join(
@@ -1419,24 +1233,16 @@ def _droop_attribution(bwalls: dict[int, list]) -> str:
 def _steal_section(n_events: int) -> str:
     """Measured host-weather evidence: probes recorded since r3-session-D
     carry the /proc/stat steal%% observed across that probe's subprocess
-    (tools/campaign_r3c.py). This turns the 'the 8→32 pair collapses under
+    (run_probe). This turns the 'the 8→32 pair collapses under
     hypervisor noise' inference into a measurement: pair efficiencies are
     recomputed over QUIET samples only (steal < 5%%) and reported next to the
     all-weather numbers."""
     per: dict[int, list[tuple[float, float]]] = {}
-    try:
-        for line in open(PROBE_HISTORY):
-            try:
-                h = json.loads(line)
-            except ValueError:
-                continue
-            if (h.get("n_events") == n_events and h.get("walls")
-                    and _stamp_ok(h)
-                    and "steal_pct" in h):
-                per.setdefault(int(h["cores"]), []).append(
-                    (h["steal_pct"], min(h["walls"])))
-    except FileNotFoundError:
-        return ""
+    for h in read_history(PROBE_HISTORY, stamped=True):
+        if (h.get("n_events") == n_events and h.get("walls")
+                and "steal_pct" in h):
+            per.setdefault(int(h["cores"]), []).append(
+                (h["steal_pct"], min(h["walls"])))
     if not per:
         return ""
     quiet = {c: [w for s, w in v if s < 5.0] for c, v in per.items()}
@@ -1447,17 +1253,14 @@ def _steal_section(n_events: int) -> str:
         + (f" | {min(quiet[c]):.2f} |" if quiet[c] else " | — |") + "\n"
         for c, v in sorted(per.items())
     )
-    pair_lines = []
-    for lo, hi in ((1, 4), (2, 8), (8, 32)):
-        if quiet.get(lo) and quiet.get(hi):
-            e = (min(quiet[lo]) / min(quiet[hi])) / 4
-            pair_lines.append(
-                f"- local[{lo}] → local[{hi}] (quiet samples only): "
-                f"**{e:.3f}**")
+    pair_lines = [
+        f"- local[{lo}] → local[{hi}] (quiet samples only): **{e:.3f}**"
+        for (lo, hi), e in _pair_effs(
+            {c: min(w) for c, w in quiet.items() if w}).items()]
     return (
         "\n**Measured host weather per probe** — each probe subprocess "
         "records the hypervisor steal% across its own run (/proc/stat "
-        "delta, tools/campaign_r3c.py). 'Quiet' = steal < 5%:\n\n"
+        "delta, `bench.py --campaign`). 'Quiet' = steal < 5%:\n\n"
         "| config | samples w/ steal | (steal → best wall) samples | "
         "quiet best wall s |\n|---|---|---|---|\n" + rows +
         ("\nQuiet-window N→4N efficiencies (same minima rule, quiet "
@@ -1476,21 +1279,12 @@ def _same_window_pairs_section(n_events: int) -> str:
     placements — which biases a cross-era ratio in either direction. A
     same-window ratio cancels the era entirely; the distribution over windows
     is the controlled measurement, reported alongside the all-time minima."""
-    recs: list[tuple[float, int, float]] = []
-    try:
-        for line in open(PROBE_HISTORY):
-            try:
-                h = json.loads(line)
-            except ValueError:
-                continue
-            if (h.get("n_events") == n_events and h.get("walls")
-                    and _stamp_ok(h) and h.get("ts")):
-                recs.append((h["ts"], int(h["cores"]), min(h["walls"])))
-    except FileNotFoundError:
-        return ""
-    recs.sort()
+    recs = sorted((h["ts"], int(h["cores"]), min(h["walls"]))
+                  for h in read_history(PROBE_HISTORY, stamped=True)
+                  if h.get("n_events") == n_events and h.get("walls")
+                  and h.get("ts"))
     lines = []
-    for lo, hi in ((1, 4), (2, 8), (8, 32)):
+    for lo, hi in N4N_PAIRS:
         los = [r for r in recs if r[1] == lo]
         his = [r for r in recs if r[1] == hi]
         # globally-closest matching: rank every (lo, hi) candidate within the
@@ -1513,14 +1307,14 @@ def _same_window_pairs_section(n_events: int) -> str:
                 continue
             used_lo.add(i)
             used_hi.add(j)
-            effs.append(round(los[i][2] / (4 * his[j][2]), 3))
+            effs.append(round(
+                _pair_effs({lo: los[i][2], hi: his[j][2]})[lo, hi], 3))
         if effs:
             effs.sort()
-            med = effs[len(effs) // 2] if len(effs) % 2 else round(
-                (effs[len(effs) // 2 - 1] + effs[len(effs) // 2]) / 2, 3)
             lines.append(
                 f"- local[{lo}] → local[{hi}]: best **{max(effs):.3f}**, "
-                f"median {med:.3f} over {len(effs)} windows — all: {effs}")
+                f"median {statistics.median(effs):.3f} over {len(effs)} "
+                f"windows — all: {effs}")
     if not lines:
         return ""
     return (
@@ -1539,27 +1333,25 @@ def _same_window_pairs_section(n_events: int) -> str:
     )
 
 
-def write_baseline_md(n_events: int, results: dict[int, dict], eff: float) -> None:
-    os.makedirs("BENCH", exist_ok=True)
+def write_baseline_md(n_events: int, results: dict[int, dict]) -> None:
+    """Render BENCH/BASELINE.md next to the histories it is folded from."""
     rows = "".join(
         f"| local[{c}] | {r['events_per_sec']:,.0f} | **{r['wall_sec']}** — all: "
         f"{sorted(round(w, 2) for w in r['all_wall_sec'])} | {r['final_rows']:,} |\n"
         for c, r in sorted(results.items())
     )
-    thr = {c: r["events_per_sec"] for c, r in results.items()}
-    pair_lines = []
-    for lo, hi in ((1, 4), (2, 8), (8, 32)):
-        if lo in thr and hi in thr:
-            e = (thr[hi] / thr[lo]) / 4
-            pair_lines.append(f"- local[{lo}] → local[{hi}]: **{e:.3f}**")
-    best32 = results.get(32, {}).get("wall_sec")
+    effs = _pair_effs({c: r["wall_sec"] for c, r in results.items()})
+    pair_lines = [f"- local[{lo}] → local[{hi}]: **{e:.3f}**"
+                  for (lo, hi), e in effs.items()]
     headline32 = (
         f"The local[32] row is informational: its best-window throughput "
-        f"(**{thr[32]:,.0f} events/s**) is the engine's single-node headline; "
-        f"replay-to-final-state = {best32} s for {n_events:,} events.\n\n"
+        f"(**{results[32]['events_per_sec']:,.0f} events/s**) is the engine's "
+        f"single-node headline; replay-to-final-state = "
+        f"{results[32]['wall_sec']} s for {n_events:,} events.\n\n"
         if 32 in results else ""
     )
-    with open("BENCH/BASELINE.md", "w") as f:
+    os.makedirs(BENCH_DIR, exist_ok=True)
+    with open(os.path.join(BENCH_DIR, "BASELINE.md"), "w") as f:
         f.write(
             "# BENCH — measured engine numbers\n\n"
             f"Input: deterministic synthetic change log, {n_events:,} events, "
@@ -1604,8 +1396,7 @@ def write_baseline_md(n_events: int, results: dict[int, dict], eff: float) -> No
             ("\n\n**Criterion met**: the best under-capacity N→4N pair "
              f"measures ≥ 0.8 (see list above; threshold from BASELINE.json "
              "north_rule).\n\n"
-             if any((thr[hi] / thr[lo]) / 4 >= 0.8
-                    for lo, hi in ((1, 4), (2, 8)) if lo in thr and hi in thr)
+             if any(e >= 0.8 for (lo, hi), e in effs.items() if hi < 32)
              else "\n\n") +
             "Only the 1→4 and 2→8 pairs keep N and 4N under the host's "
             "EFFECTIVE capacity (the validity requirement: an 8→32 ratio "
@@ -1625,7 +1416,7 @@ def write_baseline_md(n_events: int, results: dict[int, dict], eff: float) -> No
             _same_window_pairs_section(n_events) +
             _input_linearity_section(n_events) +
             "\n**Shuffle sizing at growing batch size** (r3 A/B, "
-            "tools/ab_64m.py, interleaved fresh-process runs; measured under "
+            "interleaved fresh-process runs; measured under "
             "the pre-r3c pipeline — the classify UDF was dead-code-pruned "
             "there, so the COMPARATIVE conclusion carries, not the absolute "
             "walls): with a flat "
@@ -1639,9 +1430,9 @@ def write_baseline_md(n_events: int, results: dict[int, dict], eff: float) -> No
             "stages pay the fan-out. At cluster scale this is the difference "
             "between re-tuning `spark.sql.shuffle.partitions` per input and "
             "letting the engine size reducers from actual map output.\n"
-            "\n**Compression codecs** (r3 A/B/C/D, tools/ab_codec.py, 64M "
+            "\n**Compression codecs** (r3 A/B/C/D, 64M "
             "events, interleaved fresh-process runs kept out of official "
-            "history via CDC_BENCH_EXTRA_CONF; pre-r3c pipeline — "
+            "history; pre-r3c pipeline — "
             "comparative result only, absolute walls are the lighter plan's): "
             "parquet-zstd (B), "
             "shuffle-io-zstd (C), and both (D) vs Spark defaults (A: snappy "
@@ -1657,7 +1448,7 @@ def write_baseline_md(n_events: int, results: dict[int, dict], eff: float) -> No
             "storage and shuffles cross a network — cluster profiles opt in "
             "via `get_spark(extra_conf={'spark.sql.parquet.compression."
             "codec': 'zstd'})`; identical `final_rows` under every codec.\n"
-            "\n**Arrow batch size** (r3 A/B, tools/ab_arrow_jvm.py, 16M "
+            "\n**Arrow batch size** (r3 A/B, 16M "
             "events on the CURRENT r3c pipeline, 3 interleaved fresh-process "
             "rounds, steady-state repeats, results in "
             "BENCH/ab_arrow_results.jsonl): 64k rows per Arrow batch beat "
@@ -1683,165 +1474,205 @@ def write_baseline_md(n_events: int, results: dict[int, dict], eff: float) -> No
 
 def consolidate(n_events: int = 16_000_000) -> None:
     """Rebuild BENCH/BASELINE.md from the probe history alone (no new runs)."""
-    per: dict[int, dict] = {}
-    for line in open(PROBE_HISTORY):
-        try:
-            h = json.loads(line)
-        except ValueError:
-            continue
-        if h.get("n_events") != n_events or not h.get("walls"):
-            continue
-        if not _stamp_ok(h):
-            continue  # different per-event work OR different bench protocol
-        c = int(h["cores"])
-        r = per.setdefault(c, {"cores": c, "final_rows": h["final_rows"],
-                               "all_wall_sec": [], "wall_sec": float("inf")})
-        assert h["final_rows"] == r["final_rows"], "mixed engine semantics"
-        r["all_wall_sec"] += h["walls"]
-        r["wall_sec"] = min(r["wall_sec"], *h["walls"])
-    for c, r in per.items():
-        r["events_per_sec"] = round(n_events / r["wall_sec"], 1)
-        r["all_wall_sec"] = sorted(r["all_wall_sec"])
-    effs = {
-        f"{lo}->{hi}": round((per[hi]["events_per_sec"] / per[lo]["events_per_sec"]) / 4, 3)
-        for lo, hi in ((1, 4), (2, 8), (8, 32)) if lo in per and hi in per
-    }
-    write_baseline_md(n_events, per, max(effs.values()) if effs else 0.0)
-    print(json.dumps({"eff_pairs": effs,
+    per = fold_apply_history(n_events)
+    write_baseline_md(n_events, per)
+    effs = _pair_effs({c: r["wall_sec"] for c, r in per.items()})
+    print(json.dumps({"eff_pairs": {f"{lo}->{hi}": round(e, 3)
+                                    for (lo, hi), e in effs.items()},
                       "best": {c: r["wall_sec"] for c, r in per.items()},
                       "n_samples": {c: len(r["all_wall_sec"]) for c, r in per.items()}}))
 
 
-def headline_probe(n_samples: int = 2) -> None:
-    """Accumulate headline-shape apply samples (2M events @ local[CPUS]) into
-    BENCH/probes.jsonl — the same sample pool `main()` folds into the driver's
-    recorded headline, so quiet-window capability survives a stormy driver slot."""
-    sf = _sf_tag(SF_DIR)
-    n_events = max(200_000, int(20_000_000 * sf))
-    spark = _session(CPUS, "cdc-headline-probe")
-    spark.sparkContext.setLogLevel("ERROR")
-    bench_apply(spark, max(100_000, n_events // 8), f"/tmp/cdc_hprobe_warm", n_batches=2)
-    n_files = gen_log(spark, n_events, "/tmp/cdc_hprobe_log", 1, 16, reuse=True)
-    runs = [apply_once(spark, n_events, "/tmp/cdc_hprobe_log", n_files,
-                       f"/tmp/cdc_hprobe_{i}", n_batches=4)
-            for i in range(n_samples)]
-    spark.stop()
-    stats = min(runs, key=lambda r: r["wall_sec"])
-    stats["cores"] = CPUS
-    stats["all_wall_sec"] = [r["wall_sec"] for r in runs]
-    _record_probe(stats, n_events)
-    print(json.dumps(stats))
+def step(tag: str, fn) -> None:
+    """Run one campaign step. An AssertionError is a violated correctness
+    invariant (salted == unsalted final_rows): downgrading it to a printed
+    line would let the campaign consolidate as if healthy, so it propagates
+    and kills the campaign. Any other failure (host weather, disk pressure)
+    costs only this step: the round's remaining shapes and the consolidate
+    are worth more than the lost sample."""
+    try:
+        r = fn()
+    except AssertionError:
+        raise
+    except Exception as exc:  # noqa: BLE001
+        print(f"[{tag}] FAILED: {exc}", flush=True)
+        return
+    if r:
+        print(f"[{time.strftime('%H:%M:%S')}] {tag}: wall={r.get('wall_sec')} "
+              f"ev/s={r.get('events_per_sec')} rows={r.get('final_rows')} "
+              f"steal={r.get('steal_pct', '?')}%", flush=True)
 
 
-def main() -> None:
-    if "--consolidate" in sys.argv:
-        consolidate()
-        return
-    if "--headline-probe" in sys.argv:
-        headline_probe()
-        return
-    if "--apply-probe" in sys.argv:
-        i = sys.argv.index("--apply-probe")
-        cores, n_events, workdir = int(sys.argv[i + 1]), int(sys.argv[i + 2]), sys.argv[i + 3]
-        reps = int(sys.argv[i + 4]) if len(sys.argv) > i + 4 else 1
-        print(json.dumps(apply_probe(cores, n_events, workdir, repeats=reps)))
-        return
-    if "--skew-probe" in sys.argv:
-        i = sys.argv.index("--skew-probe")
-        reps = int(sys.argv[i + 6]) if len(sys.argv) > i + 6 else 1
-        print(json.dumps(skew_probe(int(sys.argv[i + 1]), int(sys.argv[i + 2]),
-                                    int(sys.argv[i + 3]), sys.argv[i + 4],
-                                    sys.argv[i + 5], repeats=reps)))
-        return
-    if "--pruning-probe" in sys.argv:
-        i = sys.argv.index("--pruning-probe")
-        print(json.dumps(pruning_probe(int(sys.argv[i + 1]),
-                                       int(sys.argv[i + 2]),
-                                       sys.argv[i + 3])))
-        return
-    if "--index-scale-probe" in sys.argv:
-        i = sys.argv.index("--index-scale-probe")
-        print(json.dumps(index_scale_probe(int(sys.argv[i + 1]),
-                                           sys.argv[i + 2])))
-        return
-    if "--writemode-probe" in sys.argv:
-        i = sys.argv.index("--writemode-probe")
-        reps = int(sys.argv[i + 5]) if len(sys.argv) > i + 5 else 2
-        print(json.dumps(writemode_probe(int(sys.argv[i + 1]),
-                                         int(sys.argv[i + 2]),
-                                         sys.argv[i + 3], sys.argv[i + 4],
-                                         repeats=reps)))
-        return
-    if "--skew" in sys.argv:
-        res = run_skew_bench(rounds=int(os.environ.get("SPARK_GRAFT_SKEW_ROUNDS", "2")))
-        consolidate()
-        print(json.dumps({s: {"wall_sec": r["wall_sec"],
-                              "final_rows": r["final_rows"]}
-                          for s, r in res.items()}))
-        return
+SHARED_LOG = "/tmp/cdc_camp_32_16000000/log"
 
-    scaling_mode = "--scaling" in sys.argv
+
+def share_log(dirs) -> None:
+    """Symlink the local[32]-generated 16M scaling log into other probes'
+    workdirs.
+
+    The bench log is deterministic (seed-fixed) and its reuse stamp
+    (_gen_params.json) excludes cores, so every parallelism level times the
+    byte-identical input either way — but generating 2.7 GB inside a
+    local[1]/local[2] session wastes most of an hour per config per /tmp
+    wipe. Symlinks only ever REPLACE a missing/previous link, never a real
+    directory a probe already generated."""
+    if not os.path.exists(f"{SHARED_LOG}/_gen_params.json"):
+        return
+    for d in dirs:
+        os.makedirs(d, exist_ok=True)
+        link = f"{d}/log"
+        if os.path.islink(link) or not os.path.exists(link):
+            try:
+                os.symlink(SHARED_LOG, f"{link}.tmp_ln")
+                os.replace(f"{link}.tmp_ln", link)
+            except OSError:
+                pass
+
+
+def _campaign_apply(cores: int, n_events: int) -> dict:
+    r = run_probe(["--apply-probe", cores, n_events,
+                   f"/tmp/cdc_camp_{cores}_{n_events}", 2])
+    _apply_record(r, n_events)
+    return r
+
+
+def _pairs_round(i: int, full: bool = False) -> None:
+    """16M events: per-run fixed costs (planning jobs, commits, trigger
+    overhead) are a constant ~8-10 s; at 8M events they eat ~25% of the fast
+    config's wall but only ~9% of the slow one's, depressing the measured
+    ratio below the engine's true scaling (measured: 0.71 at 8M vs 0.84 at
+    16M, identical code)."""
+    if full:
+        step(f"r{i} 32@16M x2", lambda: _campaign_apply(32, 16_000_000))
+    share_log([f"/tmp/cdc_camp_{c}_16000000" for c in (1, 2, 4, 8)])
+    for c in (2, 8, 1, 4):
+        step(f"r{i} {c}@16M x2", lambda c=c: _campaign_apply(c, 16_000_000))
+    if full:
+        step(f"r{i} 32@64M x2", lambda: _campaign_apply(32, 64_000_000))
+
+
+def _writemode_round(i: int) -> None:
+    for mode in ("cow", "mor"):
+        def run(wd=f"/tmp/cdc_wm_{mode}", mode=mode):
+            share_log([wd])
+            r = run_probe(["--writemode-probe", 32, 16_000_000, mode, wd])
+            record(WRITEMODE_HISTORY, {**r, "n_events": 16_000_000})
+            return r
+        step(f"r{i} writemode {mode}", run)
+
+
+def _campaign_pruning() -> dict:
+    r = run_probe(["--pruning-probe", 32, 16_000_000, "/tmp/cdc_pruning"])
+    record(PRUNING_HISTORY, r)
+    return r
+
+
+def _skew_round(i: int) -> None:
+    def run():
+        rows = []
+        for salt in (16, 1):
+            r = run_probe(["--skew-probe", 32, 16_000_000, salt,
+                           "/tmp/cdc_skew_log_16000000",
+                           f"/tmp/cdc_skew_r3d_{salt}", 2])
+            record(SKEW_HISTORY, {**r, "n_events": 16_000_000})
+            rows.append(r["final_rows"])
+        assert rows[0] == rows[1], f"salted != unsalted rows: {rows}"
+        return r
+    step(f"r{i} skew", run)
+
+
+CAMPAIGN = {
+    "pairs": _pairs_round,
+    "full": lambda i: _pairs_round(i, full=True),
+    "big": lambda i: step(f"b{i} 32@128M x2",
+                          lambda: _campaign_apply(32, 128_000_000)),
+    "writemode": _writemode_round,
+    "pruning": lambda i: step("pruning", _campaign_pruning),
+    "skew": _skew_round,
+}
+
+
+def campaign(piece: str, n: int = 1) -> None:
+    """`n` rounds of one evidence piece (module docstring), consolidating
+    BENCH/BASELINE.md after each. Probes run strictly sequentially, each in
+    a fresh worker process, interleaved across configs inside a round so
+    every config samples each host-weather window (CLAUDE.md timing rule)."""
+    if piece not in CAMPAIGN:
+        raise SystemExit(f"unknown campaign piece {piece!r}; "
+                         f"one of {sorted(CAMPAIGN)}")
+    for i in range(n):
+        CAMPAIGN[piece](i)
+        step("consolidate", consolidate)
+    print(f"campaign piece={piece} done", flush=True)
+
+
+def headline() -> None:
+    """The default mode: headline queries, cold MERGE, index throughput and
+    the warm-up + best-of-2 apply at local[CPUS], each folded with history;
+    prints the one JSON line."""
     sf = _sf_tag(SF_DIR)
     n_events = max(200_000, int(20_000_000 * sf))
 
     spark = _session(CPUS, "cdc-bench")
-    spark.sparkContext.setLogLevel("ERROR")
     queries, queries_this_run = bench_queries(spark, SF_DIR)
     merge_cold = bench_merge_cold(spark, SF_DIR)
     index_stats = bench_indexes(spark, SF_DIR)
-    # warm-up then best-of-2 timed apply (steady-state; shared-host noise, see
-    # apply_probe docstring)
-    bench_apply(spark, max(100_000, n_events // 8), f"/tmp/cdc_bench_{CPUS}_warm",
-                n_batches=2)
-    apply_runs = [bench_apply(spark, n_events, f"/tmp/cdc_bench_{CPUS}_{i}")
-                  for i in range(2)]
+    workdir = f"/tmp/cdc_bench_{CPUS}"
+    n_files = gen_log(spark, n_events, f"{workdir}/log")
+    this_run = best_of(spark, CPUS, workdir, 2, max(100_000, n_events // 8),
+                       lambda d: apply_once(spark, n_events, f"{workdir}/log",
+                                            n_files, d, n_batches=4))
     spark.stop()
-    apply_stats = min(apply_runs, key=lambda r: r["wall_sec"])
-    apply_stats["all_wall_sec"] = [r["wall_sec"] for r in apply_runs]
-    apply_stats["cores"] = CPUS
-    _record_probe(apply_stats, n_events)  # before folding: history = raw samples
-    apply_stats = _fold_apply_history(apply_stats, n_events, CPUS)
-
-    extra = {"apply": apply_stats, "apply_events_per_sec": apply_stats["events_per_sec"],
-             "cpus": CPUS, "queries_this_run": queries_this_run,
-             "merge_upsert_cold": merge_cold,
-             "incremental_index": index_stats}
-
-    if scaling_mode:
-        # N -> 4N pair = local[2] vs local[8]: the sandbox host shows ~45% CPU
-        # steal (shared hypervisor), so local[32] cannot reliably obtain its 32
-        # vCPUs; 2 vs 8 threads stay under the host's effective capacity and
-        # measure the ENGINE's scaling, not the neighbors'. local[32] is
-        # reported as an informational extra.
-        # 16M-event floor: per-run fixed costs (planning jobs, commits, trigger
-        # overhead) are a constant ~8-10 s; at 8M events they eat ~25% of the
-        # fast config's wall but only ~9% of the slow one's, depressing the
-        # measured ratio below the engine's true scaling (measured: 0.71 at 8M
-        # vs 0.84 at 16M, identical code)
-        n_scale = max(16_000_000, n_events)
-        rounds = int(os.environ.get("SPARK_GRAFT_SCALE_ROUNDS", "2"))
-        results = _merge_history(
-            _interleaved_probes((2, 8, 32), n_scale, rounds=rounds), n_scale
-        )
-        thr2 = results[2]["events_per_sec"]
-        thr8 = results[8]["events_per_sec"]
-        eff = (thr8 / thr2) / 4
-        extra["scaling"] = {
-            "local2_events_per_sec": thr2,
-            "local8_events_per_sec": thr8,
-            "local32_events_per_sec": results[32]["events_per_sec"],
-            "efficiency_2_to_8": round(eff, 3),
-        }
-        write_baseline_md(n_scale, results, eff)
-
+    _apply_record(this_run, n_events)  # before folding: history = raw samples
+    folded = fold_apply_history(n_events, this_run["final_rows"])[CPUS]
+    apply_stats = {
+        **this_run,
+        **{k: folded[k] for k in ("wall_sec", "events_per_sec", "all_wall_sec")},
+        "this_run": {k: this_run[k] for k in ("wall_sec", "events_per_sec")},
+        "best_is_from": ("this_run" if folded["wall_sec"] == this_run["wall_sec"]
+                         else "session_history"),
+    }
     print(json.dumps({
         "metric": "cdc_merge_apply_suite",
         "value": round(sum(queries.values()) + apply_stats["wall_sec"], 2),
         "unit": "sec",
         "queries": queries,
         "sf": sf,
-        "extra": extra,
+        "extra": {"apply": apply_stats,
+                  "apply_events_per_sec": apply_stats["events_per_sec"],
+                  "cpus": CPUS, "queries_this_run": queries_this_run,
+                  "merge_upsert_cold": merge_cold,
+                  "incremental_index": index_stats},
     }))
+
+
+# worker mode -> (function, argument types); trailing arguments are optional
+WORKERS = {
+    "--apply-probe": (apply_probe, (int, int, str, int)),
+    "--skew-probe": (skew_probe, (int, int, int, str, str, int)),
+    "--writemode-probe": (writemode_probe, (int, int, str, str, int)),
+    "--pruning-probe": (pruning_probe, (int, int, str)),
+    "--index-scale-probe": (index_scale_probe, (int, str)),
+}
+
+
+def main(argv: list[str] | None = None) -> None:
+    args = sys.argv[1:] if argv is None else argv
+    mode = args[0] if args else ""
+    if mode == "--consolidate":
+        consolidate()
+    elif mode == "--campaign":
+        campaign(args[1] if len(args) > 1 else "pairs",
+                 int(args[2]) if len(args) > 2 else 1)
+    elif mode == "--skew":
+        campaign("skew")
+    elif mode in WORKERS:
+        fn, types = WORKERS[mode]
+        print(json.dumps(fn(*(t(a) for t, a in zip(types, args[1:])))))
+    else:
+        headline()
+        if mode == "--scaling":
+            campaign("pairs")
 
 
 if __name__ == "__main__":

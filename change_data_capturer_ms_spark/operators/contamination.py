@@ -8,7 +8,7 @@ thousands of items, the corpus is billions), so its distinct shingle-hash set
 is BROADCAST — the 100 TB corpus is scanned once, shingled map-side, and
 never shuffled for the membership probe; the only shuffles are the two
 per-doc-id aggregations (count + overlap), which AQE coalesces. Shingle
-hashes are md5-derived (`functions.hashing2`) so any engine — including the
+hashes are md5-derived (`functions.hashing`) so any engine — including the
 DuckDB oracle — rederives the flags bit-exactly.
 """
 
@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from change_data_capturer_ms_spark.functions.hashing2 import md5_long56
+from change_data_capturer_ms_spark.functions.hashing import md5_long56
 from change_data_capturer_ms_spark.operators.dedup_docs import word_shingles
 
 

@@ -7,7 +7,7 @@ compositions (no Python in the hot path), designed around the shuffles they impl
 - shingle explode → self-join is the quadratic danger at 100 TB; the LSH variants
   bound it: MinHash signatures are one aggregation, candidate pairs come from
   banded-bucket joins (only same-bucket docs meet), never an all-pairs join.
-- All token hashes are md5-derived (`functions.hashing2`) so results are
+- All token hashes are md5-derived (`functions.hashing`) so results are
   re-derivable by the DuckDB oracle — no engine-private hash leaves the plan.
 """
 
@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from change_data_capturer_ms_spark.functions.hashing2 import (
+from change_data_capturer_ms_spark.functions.hashing import (
     MINHASH_PERMS,
     md5_long56,
     minhash_perm,

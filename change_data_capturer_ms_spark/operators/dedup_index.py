@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from change_data_capturer_ms_spark.functions.hashing2 import (
+from change_data_capturer_ms_spark.functions.hashing import (
     MINHASH_PERMS,
     md5_long56,
     minhash_perm,

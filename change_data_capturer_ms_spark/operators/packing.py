@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from change_data_capturer_ms_spark.functions.hashing2 import md5_long56
+from change_data_capturer_ms_spark.functions.hashing import md5_long56
 
 
 def _shard_and_order(df: DataFrame, id_col: str, n_shards: int, salt: str):

@@ -9,7 +9,7 @@ train. A key-hash threshold is the standard fix (same trick as bucketed joins:
 the decision rides on the value, not on physical placement).
 
 The bucket hash is the cross-engine md5-derived 56-bit hash
-(functions/hashing2.md5_long56) so the DuckDB oracle rederives membership
+(functions/hashing.md5_long56) so the DuckDB oracle rederives membership
 bit-exactly; a salt string namespaces independent splits of the same corpus.
 
 Scale shape: one projection (md5 + mod + CASE), whole-stage codegen, no
@@ -30,7 +30,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.hashing2 import md5_long56
+from ..functions.hashing import md5_long56
 
 _BUCKETS = 10_000  # split/sample resolution: 0.01% granularity
 

@@ -230,7 +230,7 @@ def ivf_topk_det(
     """
     from pyspark.sql import Window
 
-    from change_data_capturer_ms_spark.functions.hashing2 import md5_long56
+    from change_data_capturer_ms_spark.functions.hashing import md5_long56
 
     c = corpus.select(F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("cv"))
     # deterministic "sample": n_cells corpus vectors by smallest id-hash
@@ -316,7 +316,7 @@ def pq_topk(
     """
     from pyspark.sql import Window
 
-    from change_data_capturer_ms_spark.functions.hashing2 import md5_long56
+    from change_data_capturer_ms_spark.functions.hashing import md5_long56
 
     c = corpus.select(F.col(id_col).alias("vec"), _as_double(vec_col).alias("v"))
     # L2-normalize before quantization: ADC ranks by euclidean distance, and
@@ -518,7 +518,7 @@ def semdedup(
     """
     from pyspark.sql import Window
 
-    from change_data_capturer_ms_spark.functions.hashing2 import md5_long56
+    from change_data_capturer_ms_spark.functions.hashing import md5_long56
     from change_data_capturer_ms_spark.operators.dedup_docs import (
         duplicate_clusters,
     )

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
-from change_data_capturer_ms_spark.functions.hashing2 import md5_long56
+from change_data_capturer_ms_spark.functions.hashing import md5_long56
 
 # tiny per-language stopword lists for the n-gram/stopword heuristic language ID.
 # The sandbox documents are synthetic word soup, so this doubles as a deterministic

@@ -24,12 +24,12 @@ PROFILES: dict[str, dict[str, str]] = {
     # Multi-executor cluster where the lake lives on object storage and
     # shuffles cross a real network — the regime where byte COUNT, not
     # compression CPU, is the binding cost. Both knobs measurably LOSE a few
-    # percent on the local bench (tools/ab_codec.py, 64M events: quiet-window
-    # walls A 73.4/76.6 s vs zstd variants 77-82 s) because this sandbox's
-    # lake is page-cache-resident and local shuffle IO is nearly free, so
-    # compression is pure CPU; but parquet-zstd shrank the same lake 41%
-    # (5.7 vs 9.6 GB, identical final_rows) — the winning trade once reads
-    # and shuffle bytes are network-priced. See BENCH/BASELINE.md codecs.
+    # percent on the local bench (BENCH/BASELINE.md compression codecs, 64M
+    # events: quiet-window walls A 73.4/76.6 s vs zstd variants 77-82 s)
+    # because this sandbox's lake is page-cache-resident and local shuffle
+    # IO is nearly free, so compression is pure CPU; but parquet-zstd shrank
+    # the same lake 41% (5.7 vs 9.6 GB, identical final_rows) — the winning
+    # trade once reads and shuffle bytes are network-priced.
     "cluster": {
         "spark.sql.parquet.compression.codec": "zstd",
         "spark.io.compression.codec": "zstd",
@@ -52,9 +52,9 @@ def build_conf(
     # measured at 64M events x ~1.2 KB (two ~38 GB batch shuffles): 64
     # partitions = ~600 MB each, wall 120.9/136.4 s; initialPartitionNum=512
     # = 93.6/112.9 s, 17-23% faster inside the same host-weather window,
-    # identical final_rows (tools/ab_64m.py). A flat shuffle=256 is NOT
-    # equivalent (89.2/155.2 s — unstable): splitting must come with AQE
-    # coalescing or small stages pay the fan-out.
+    # identical final_rows (BENCH/BASELINE.md shuffle sizing). A flat
+    # shuffle=256 is NOT equivalent (89.2/155.2 s — unstable): splitting
+    # must come with AQE coalescing or small stages pay the fan-out.
     if aqe_initial_partitions is None:
         aqe_initial_partitions = max(8 * shuffle_partitions, 256)
     conf = {
@@ -70,10 +70,11 @@ def build_conf(
         # write/read + framing per batch, heavy kernel time under nested
         # virt), not pandas compute — 6.4x fewer boundaries measured 8-20%
         # faster on the 16M-event apply in every interleaved round
-        # (tools/ab_arrow_jvm.py A vs B), identical final_rows. 256k was NOT
-        # better: per-worker peak memory spikes (~256 MB Arrow chunks at 1 KB
-        # rows x 32 workers) made walls erratic. ~64 MB per batch per worker
-        # stays comfortably inside executor memory at cluster scale.
+        # (BENCH/BASELINE.md Arrow batch size, A vs B), identical final_rows.
+        # 256k was NOT better: per-worker peak memory spikes (~256 MB Arrow
+        # chunks at 1 KB rows x 32 workers) made walls erratic. ~64 MB per
+        # batch per worker stays comfortably inside executor memory at
+        # cluster scale.
         "spark.sql.execution.arrow.maxRecordsPerBatch": "65536",
         "spark.sql.session.timeZone": "UTC",
         # parquet scan: vectorized reader + pushdown are defaults; keep explicit so a
