@@ -29,7 +29,9 @@ from pyspark.sql import types as T
 
 from change_data_capturer_ms_spark.operators.similarity import (
     _as_double,
-    cosine_sim,
+    _rank_by_cosine,
+    _vectors,
+    multiprobe_buckets,
     signbit_bucket,
 )
 
@@ -144,32 +146,12 @@ class EmbeddingANNIndex:
     ) -> DataFrame:
         """Top-k indexed neighbors per query: (query_id, neighbor_id, cosine,
         rank). Lake files whose bucket no probe hash maps to are never opened."""
-        from pyspark.sql import Window
-
-        q = queries.select(
-            F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")
-        ).withColumn("bucket", signbit_bucket(F.col("qv"), self.bits))
-        if multiprobe:
-            probes = F.array(
-                F.col("bucket"),
-                *[F.col("bucket").bitwiseXOR(F.lit(1 << j))
-                  for j in range(self.bits)],
-            )
-            q = q.withColumn("bucket", F.explode(probes))
+        q = multiprobe_buckets(_vectors(queries, id_col, vec_col, "query_id", "qv"),
+                               self.bits, multiprobe)
         rows = (q.select("bucket").distinct()
                  .limit(max_buckets + 1).collect())
         buckets = (None if len(rows) > max_buckets
                    else self._lake_buckets({r["bucket"] for r in rows}))
         idx = self.table.read(buckets=buckets).select(
             "bucket", F.col("id").alias("neighbor_id"), F.col("vec").alias("cv"))
-        scored = (
-            idx.join(F.broadcast(q), ["bucket"])
-            .filter(F.col("neighbor_id") != F.col("query_id"))
-            .withColumn("cosine", cosine_sim(F.col("qv"), F.col("cv")))
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cosine").desc(), F.col("neighbor_id"))
-        return (scored.withColumn("rank", F.row_number().over(w))
-                      .filter(F.col("rank") <= k)
-                      .select("query_id", "neighbor_id",
-                              F.round("cosine", 6).alias("cosine"), "rank"))
+        return _rank_by_cosine(idx.join(F.broadcast(q), ["bucket"]), k)

@@ -8,8 +8,12 @@ Scale design: brute force is a broadcast-join of the (small) query set against t
 full corpus — linear scan, embarrassingly parallel, the right baseline. The LSH
 variant buckets corpus + queries by deterministic sign-bit hyperplanes so each query
 only scans its bucket (~corpus/2^bits rows); recall is traded via `bits` and
-multi-probe (omitted here). An IVF variant would replace the bucketer with k-means
-centroids — same join shape.
+multi-probe. The IVF variants replace the bucketer with centroids — same join shape.
+
+Every operator is built from one copy of each mechanism: `_rank_by_cosine` (exact
+top-k over candidate pairs), `_top_n` (the only per-group window), `_argmin`
+(nearest centroid/code as a partial/final `min_by` aggregate), `_hash_seeds`
+(the deterministic centroid sample) and `_sqdist` (the one distance).
 """
 
 from __future__ import annotations
@@ -22,17 +26,120 @@ def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
 
 
+def _sqdist(a, b):
+    """Squared euclidean distance of two array<double> columns."""
+    return F.aggregate(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+                       F.lit(0.0), lambda acc, v: acc + v)
+
+
 def _norm(a):
     return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v))
 
 
 def cosine_sim(a, b):
-    """Cosine similarity of two array<double> columns, pure Catalyst expressions."""
-    return _dot(a, b) / (_norm(a) * _norm(b))
+    """Cosine similarity of two array<double> columns, pure Catalyst expressions.
+
+    A zero vector on either side has no direction: its cosine is NULL
+    (`try_divide`, so ANSI mode does not raise DIVIDE_BY_ZERO). NULL ranks
+    after every scored neighbour and fails every `>= threshold` filter."""
+    return F.try_divide(_dot(a, b), _norm(a) * _norm(b))
 
 
 def _as_double(col):
     return F.col(col).cast("array<double>") if isinstance(col, str) else col.cast("array<double>")
+
+
+def _vectors(df: DataFrame, id_col: str, vec_col: str, id_as: str, vec_as: str) -> DataFrame:
+    """(id_as, vec_as): the id column and the vector column cast to array<double>."""
+    return df.select(F.col(id_col).alias(id_as), _as_double(vec_col).alias(vec_as))
+
+
+def _with_unit(df: DataFrame, vec, out: str) -> DataFrame:
+    """Adds `_n` = the L2 norm of `vec` and `out` = vec / _n; zero vectors pass
+    through unchanged. The norm is projected ONCE as a column before the
+    transform (aggregate expressions get no CSE; a per-element lambda
+    referencing _norm(vec) would recompute the norm dim times)."""
+    return df.withColumn("_n", _norm(vec)).withColumn(
+        out, F.when(F.col("_n") == 0.0, vec).otherwise(F.transform(vec, lambda x: x / F.col("_n"))))
+
+
+def _subvectors(df: DataFrame, vec: str, m: int, w: int, *keep: str) -> DataFrame:
+    """(*keep, sub, sv): one row per subspace s < m, sv = `vec`'s width-w slice s."""
+    parts = [F.struct(F.lit(s).alias("sub"), F.slice(vec, s * w + 1, w).alias("sv"))
+             for s in range(m)]
+    return df.select(*keep, F.explode(F.array(*parts)).alias("x")).select(*keep, "x.sub", "x.sv")
+
+
+def _top_n(df: DataFrame, by, order: list, n: int, rank: str = "rank") -> DataFrame:
+    """The first `n` rows of every `by` group under `order`, numbered 1..n in
+    `rank`. Order ties must be broken by a unique column for determinism."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(by).orderBy(*order)
+    return df.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= n)
+
+
+def _argmin(df: DataFrame, by, keep: list, order: list) -> DataFrame:
+    """(*by, *keep): per `by` group, the `keep` columns of the row with the
+    smallest `order` tuple. `min_by` over structs plans as a partial/final
+    aggregate — one row per group per partition crosses the shuffle, not every
+    candidate row as a `row_number() == 1` window would."""
+    by = [by] if isinstance(by, str) else list(by)
+    best = F.min_by(F.struct(*keep), F.struct(*order)).alias("_best")
+    return df.groupBy(*by).agg(best).select(*by, "_best.*")
+
+
+def _hash_seeds(df: DataFrame, id_col: str, vec: str, n: int) -> DataFrame:
+    """(cell, centroid): the `n` rows with the smallest md5-derived id hash (a
+    seeded pseudo-random sample — the same trick a k-means++ seeding pass uses,
+    minus the iterations), numbered 0..n-1 in hash order. Closed-form, so the
+    DuckDB oracles re-derive it exactly."""
+    from pyspark.sql import Window
+
+    from change_data_capturer_ms_spark.functions.hashing import md5_long56
+
+    hashed = df.withColumn("h", md5_long56(F.col(id_col).cast("string")))
+    return hashed.orderBy("h", id_col).limit(n).select(
+        (F.row_number().over(Window.orderBy("h", id_col)) - 1).alias("cell"),
+        F.col(vec).alias("centroid"))
+
+
+def _cell_dists(df: DataFrame, vec: str, cent: DataFrame) -> DataFrame:
+    """`df` × the tiny (cell, centroid) table — a broadcast nested-loop — with
+    `dist` = the euclidean distance from `vec` to each centroid.
+
+    sqrt, not squared distance: the DuckDB oracle orders by list_distance
+    (euclidean) — near-tie squared distances can become EQUAL doubles after
+    sqrt, flipping the (dist, cell) tiebreak between engines unless both order
+    by the identical value."""
+    dist = F.sqrt(_sqdist(F.col(vec), F.col("centroid")))
+    return df.crossJoin(F.broadcast(cent)).withColumn("dist", dist)
+
+
+def _nearest_cell(c: DataFrame, id_col: str, vec: str, cent: DataFrame) -> DataFrame:
+    """(id_col, vec, cell): every row's nearest centroid, argmin by
+    (distance, cell) — ties break to the smaller cell id on both engines."""
+    return _argmin(_cell_dists(c, vec, cent), id_col, [vec, "cell"], ["dist", "cell"])
+
+
+def _rank_by_cosine(pairs: DataFrame, k: int, *extra: str) -> DataFrame:
+    """Exact top-k from candidate pairs (query_id, neighbor_id, qv, cv, ...):
+    self-hits dropped, cosine descending, ties to the smaller neighbor_id.
+    Output (query_id, neighbor_id, *extra, cosine rounded to 6 places, rank)."""
+    scored = pairs.filter(F.col("neighbor_id") != F.col("query_id")) \
+        .withColumn("cosine", cosine_sim(F.col("qv"), F.col("cv")))
+    return _top_n(scored, "query_id", [F.col("cosine").desc(), F.col("neighbor_id")], k) \
+        .select("query_id", "neighbor_id", *extra, F.round("cosine", 6).alias("cosine"), "rank")
+
+
+def _ivf_search(assigned: DataFrame, q: DataFrame, cent: DataFrame, k: int,
+                nprobe: int) -> DataFrame:
+    """IVF search: each query (query_id, qv) probes its `nprobe` nearest cells
+    (ties to the smaller cell id) and ranks the members of those inverted
+    lists (`assigned`: neighbor_id, cv, cell)."""
+    probes = _top_n(_cell_dists(q, "qv", cent), "query_id", ["dist", "cell"], nprobe, "pr") \
+        .select("query_id", "qv", "cell")
+    return _rank_by_cosine(assigned.join(F.broadcast(probes), ["cell"]), k, "cell")
 
 
 def brute_force_topk(
@@ -47,24 +154,9 @@ def brute_force_topk(
     queries is broadcast (the small side); ranking is a per-query window. Self-hits
     (same id) are excluded.
     """
-    from pyspark.sql import Window
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("cv")
-    )
-    scored = (
-        c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cosine", cosine_sim(F.col("qv"), F.col("cv")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rank")
-    )
+    q = _vectors(queries, id_col, vec_col, "query_id", "qv")
+    c = _vectors(corpus, id_col, vec_col, "neighbor_id", "cv")
+    return _rank_by_cosine(c.crossJoin(F.broadcast(q)), k)
 
 
 def signbit_bucket(vec, bits: int = 4, stride: int = 4):
@@ -85,6 +177,17 @@ def signbit_bucket(vec, bits: int = 4, stride: int = 4):
     return bucket.cast("int")
 
 
+def multiprobe_buckets(q: DataFrame, bits: int, multiprobe: bool) -> DataFrame:
+    """Queries (query_id, qv) plus their sign-bit `bucket`. multiprobe=True adds
+    one row per hamming-1 neighbour bucket (each sign bit flipped once), so a
+    query scans bits+1 buckets through the same bucket equi-join."""
+    q = q.withColumn("bucket", signbit_bucket(F.col("qv"), bits))
+    if not multiprobe:
+        return q
+    flips = [F.col("bucket").bitwiseXOR(F.lit(1 << j)) for j in range(bits)]
+    return q.withColumn("bucket", F.explode(F.array(F.col("bucket"), *flips)))
+
+
 def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -102,32 +205,10 @@ def lsh_topk(
     (each sign bit flipped once) — (bits+1)× the scan for a large recall lift,
     still a bucket equi-join (the classic multi-probe LSH trade; at scale you'd
     order the flips by |margin| and cap the probe count)."""
-    from pyspark.sql import Window
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")
-    ).withColumn("bucket", signbit_bucket(F.col("qv"), bits))
-    if multiprobe:
-        probes = F.array(
-            F.col("bucket"),
-            *[F.col("bucket").bitwiseXOR(F.lit(1 << j)) for j in range(bits)],
-        )
-        q = q.withColumn("bucket", F.explode(probes))
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("cv")
-    ).withColumn("bucket", signbit_bucket(F.col("cv"), bits))
-    scored = (
-        c.join(F.broadcast(q), ["bucket"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cosine", cosine_sim(F.col("qv"), F.col("cv")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "bucket",
-                F.round("cosine", 6).alias("cosine"), "rank")
-    )
+    q = multiprobe_buckets(_vectors(queries, id_col, vec_col, "query_id", "qv"), bits, multiprobe)
+    c = _vectors(corpus, id_col, vec_col, "neighbor_id", "cv") \
+        .withColumn("bucket", signbit_bucket(F.col("cv"), bits))
+    return _rank_by_cosine(c.join(F.broadcast(q), ["bucket"]), k, "bucket")
 
 
 def ivf_topk(
@@ -157,51 +238,19 @@ def ivf_topk(
     check; recall vs `brute_force_topk` is asserted in tests.
     """
     from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-    from pyspark.sql import Window
+    from pyspark.ml.functions import array_to_vector
 
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("cv"))
+    c = _vectors(corpus, id_col, vec_col, "neighbor_id", "cv")
     train = c.withColumn("features", array_to_vector("cv"))
     model = KMeans(k=n_cells, seed=seed, maxIter=max_iter, initMode="k-means||") \
         .fit(train)
-    assigned = model.transform(train).withColumnRenamed("prediction", "cell") \
-        .select("neighbor_id", "cv", "cell")
+    assigned = model.transform(train).select("neighbor_id", "cv", F.col("prediction").alias("cell"))
 
     # centroid table (tiny) for query-side probe assignment
     cents = [(i, [float(x) for x in ctr]) for i, ctr in enumerate(model.clusterCenters())]
     cent_df = corpus.sparkSession.createDataFrame(cents, "cell int, centroid array<double>")
-
-    q = queries.select(F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv"))
-    # nprobe nearest centroids per query (cross join with the tiny centroid table)
-    qc = (
-        q.crossJoin(F.broadcast(cent_df))
-        .withColumn(
-            "dist",
-            F.aggregate(
-                F.zip_with(F.col("qv"), F.col("centroid"), lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0), lambda acc, v: acc + v,
-            ),
-        )
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.col("dist"), F.col("cell"))
-    probes = (
-        qc.withColumn("pr", F.row_number().over(wq))
-        .filter(F.col("pr") <= nprobe)
-        .select("query_id", "qv", "cell")
-    )
-
-    scored = (
-        assigned.join(F.broadcast(probes), ["cell"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cosine", cosine_sim(F.col("qv"), F.col("cv")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cell",
-                F.round("cosine", 6).alias("cosine"), "rank")
-    )
+    q = _vectors(queries, id_col, vec_col, "query_id", "qv")
+    return _ivf_search(assigned, q, cent_df, k, nprobe)
 
 
 def ivf_topk_det(
@@ -228,60 +277,10 @@ def ivf_topk_det(
     a broadcast equi-join on cell id — cost ~ corpus * nprobe / n_cells,
     identical to `lsh_topk` with a data-dependent bucketer.
     """
-    from pyspark.sql import Window
-
-    from change_data_capturer_ms_spark.functions.hashing import md5_long56
-
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("cv"))
-    # deterministic "sample": n_cells corpus vectors by smallest id-hash
-    hashed = c.withColumn("h", md5_long56(F.col("neighbor_id").cast("string")))
-    seeds = hashed.orderBy("h", "neighbor_id").limit(n_cells)
-    wc = Window.orderBy("h", "neighbor_id")
-    cent = seeds.select(
-        (F.row_number().over(wc) - 1).alias("cell"), F.col("cv").alias("centroid")
-    )
-
-    def _dist(a, b):
-        # sqrt, not squared distance: the DuckDB oracle orders by
-        # list_distance (euclidean) — near-tie squared distances can become
-        # EQUAL doubles after sqrt, flipping the (dist, cell) tiebreak between
-        # engines unless both order by the identical value
-        return F.sqrt(F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0), lambda acc, v: acc + v,
-        ))
-
-    # nearest-cell assignment: broadcast the tiny centroid table, argmin by
-    # (distance, cell) — ties break to the smaller cell id on both engines
-    assigned = (
-        c.crossJoin(F.broadcast(cent))
-        .withColumn("dist", _dist(F.col("cv"), F.col("centroid")))
-        .withColumn("rn", F.row_number().over(
-            Window.partitionBy("neighbor_id").orderBy("dist", "cell")))
-        .filter(F.col("rn") == 1)
-        .select("neighbor_id", "cv", "cell")
-    )
-    q = queries.select(F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv"))
-    probes = (
-        q.crossJoin(F.broadcast(cent))
-        .withColumn("dist", _dist(F.col("qv"), F.col("centroid")))
-        .withColumn("pr", F.row_number().over(
-            Window.partitionBy("query_id").orderBy("dist", "cell")))
-        .filter(F.col("pr") <= nprobe)
-        .select("query_id", "qv", "cell")
-    )
-    scored = (
-        assigned.join(F.broadcast(probes), ["cell"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cosine", cosine_sim(F.col("qv"), F.col("cv")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cell",
-                F.round("cosine", 6).alias("cosine"), "rank")
-    )
+    c = _vectors(corpus, id_col, vec_col, "neighbor_id", "cv")
+    cent = _hash_seeds(c, "neighbor_id", "cv", n_cells)
+    q = _vectors(queries, id_col, vec_col, "query_id", "qv")
+    return _ivf_search(_nearest_cell(c, "neighbor_id", "cv", cent), q, cent, k, nprobe)
 
 
 def pq_topk(
@@ -313,80 +312,40 @@ def pq_topk(
     the LUT sum runs as an Arrow `mapInPandas` over packed code arrays instead
     of the join formulation — same algebra, fewer shuffled rows; the join form
     keeps this sandbox implementation 100% JVM-side.
+
+    An empty corpus has no neighbours: the result is empty, with the usual
+    columns. `m` must divide the embedding dimension (ValueError otherwise).
     """
-    from pyspark.sql import Window
-
-    from change_data_capturer_ms_spark.functions.hashing import md5_long56
-
-    c = corpus.select(F.col(id_col).alias("vec"), _as_double(vec_col).alias("v"))
     # L2-normalize before quantization: ADC ranks by euclidean distance, and
     # only on unit vectors is that monotone in the cosine objective (the exact
-    # re-rank below uses the original vectors, where cosine is norm-invariant)
-    c = (
-        c.withColumn("_n", _norm(F.col("v")))
-        .withColumn("v", F.when(F.col("_n") == 0.0, F.col("v"))
-                    .otherwise(F.transform("v", lambda x: x / F.col("_n"))))
-        .drop("_n")
-    )
-    dim = len(c.first()["v"])
-    assert dim % m == 0, "m must divide the embedding dimension"
+    # re-rank below is norm-invariant)
+    c = _vectors(corpus, id_col, vec_col, "vec", "v")
+    c = _with_unit(c, F.col("v"), "v")
+    first = c.first()
+    if first is None:
+        return brute_force_topk(corpus, queries, k, id_col, vec_col)
+    dim = len(first["v"])
+    if m < 1 or dim % m:
+        raise ValueError(f"pq_topk: m={m} must divide the embedding dimension dim={dim}")
     w = dim // m
 
-    # exploded sub-vectors: (vec, sub, sv)
-    subs = c.select(
-        "vec",
-        F.explode(F.array(*[
-            F.struct(F.lit(s).alias("sub"),
-                     F.slice("v", s * w + 1, w).alias("sv"))
-            for s in range(m)
-        ])).alias("x"),
-    ).select("vec", F.col("x.sub").alias("sub"), F.col("x.sv").alias("sv"))
-
-    # deterministic codebooks: per subspace, the n_codes sub-vectors of the
-    # smallest-id-hash corpus rows, code ids in hash order
-    hashed = subs.withColumn("h", md5_long56(F.col("vec").cast("string")))
-    wcb = Window.partitionBy("sub").orderBy("h", "vec")
-    codebook = (
-        hashed.withColumn("rn", F.row_number().over(wcb))
-        .filter(F.col("rn") <= n_codes)
-        .select("sub", (F.col("rn") - 1).alias("code"), F.col("sv").alias("centroid"))
-    )
-
-    def _sqd(a, b):
-        return F.aggregate(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-                           F.lit(0.0), lambda acc, v: acc + v)
+    # deterministic codebooks: the smallest-id-hash corpus rows, code ids in
+    # hash order; the hash ignores the subspace, so one sample split per
+    # subspace is every subspace's codebook
+    codebook = _subvectors(_hash_seeds(c, "vec", "v", n_codes), "centroid", m, w, "cell") \
+        .select("sub", F.col("cell").alias("code"), F.col("sv").alias("centroid"))
 
     # encode: argmin centroid per (vec, sub) — broadcast m*n_codes codebook
-    codes = (
-        subs.join(F.broadcast(codebook), "sub")
-        .withColumn("d", _sqd(F.col("sv"), F.col("centroid")))
-        .withColumn("rn", F.row_number().over(
-            Window.partitionBy("vec", "sub").orderBy("d", "code")))
-        .filter(F.col("rn") == 1)
-        .select("vec", "sub", "code")
-    )
+    subs = _subvectors(c, "v", m, w, "vec").join(F.broadcast(codebook), "sub")
+    codes = _argmin(subs.withColumn("d", _sqdist(F.col("sv"), F.col("centroid"))),
+                    ["vec", "sub"], ["code"], ["d", "code"])
 
     # per-query LUT: partial distance query-subvector -> every (sub, code)
-    q = queries.select(F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv"))
-    q = (
-        q.withColumn("_n", _norm(F.col("qv")))
-        .withColumn("qv", F.when(F.col("_n") == 0.0, F.col("qv"))
-                    .otherwise(F.transform("qv", lambda x: x / F.col("_n"))))
-        .drop("_n")
-    )
-    qsubs = q.select(
-        "query_id", "qv",
-        F.explode(F.array(*[
-            F.struct(F.lit(s).alias("sub"),
-                     F.slice("qv", s * w + 1, w).alias("qsv"))
-            for s in range(m)
-        ])).alias("x"),
-    ).select("query_id", F.col("x.sub").alias("sub"), F.col("x.qsv").alias("qsv"))
-    lut = (
-        qsubs.join(F.broadcast(codebook), "sub")
-        .select("query_id", "sub", "code",
-                _sqd(F.col("qsv"), F.col("centroid")).alias("pd"))
-    )
+    q = _vectors(queries, id_col, vec_col, "query_id", "qv")
+    q = _with_unit(q, F.col("qv"), "qv")
+    qsubs = _subvectors(q, "qv", m, w, "query_id").join(F.broadcast(codebook), "sub")
+    lut = qsubs.select("query_id", "sub", "code",
+                       _sqdist(F.col("sv"), F.col("centroid")).alias("pd"))
 
     # ADC: sum the m lookups per (query, vec); partial aggregation map-side
     approx = (
@@ -395,25 +354,12 @@ def pq_topk(
         .agg(F.sum("pd").alias("adist"))
         .filter(F.col("query_id") != F.col("vec"))
     )
-    cand = (
-        approx.withColumn("rn", F.row_number().over(
-            Window.partitionBy("query_id").orderBy("adist", "vec")))
-        .filter(F.col("rn") <= rerank)
+    cand = _top_n(approx, "query_id", ["adist", "vec"], rerank, "rn") \
         .select("query_id", F.col("vec").alias("neighbor_id"))
-    )
 
     # exact re-rank of the small candidate set
-    scored = (
-        cand.join(c.withColumnRenamed("vec", "neighbor_id"), "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .withColumn("cosine", cosine_sim(F.col("qv"), F.col("v")))
-    )
-    wr = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rank")
-    )
+    vecs = c.select(F.col("vec").alias("neighbor_id"), F.col("v").alias("cv"))
+    return _rank_by_cosine(cand.join(vecs, "neighbor_id").join(F.broadcast(q), "query_id"), k)
 
 
 def normalize_embeddings(df: DataFrame, vec_col: str = "embedding",
@@ -423,16 +369,8 @@ def normalize_embeddings(df: DataFrame, vec_col: str = "embedding",
     The norm is projected ONCE as a column before the transform (aggregate
     expressions get no CSE; a per-element lambda referencing _norm(vec) would
     recompute the norm dim times). Zero vectors pass through unchanged."""
-    v = _as_double(vec_col)
-    return (
-        df.withColumn("_nrm", _norm(v))
-        .withColumn(
-            "unit",
-            F.when(F.col("_nrm") == 0.0, v)
-            .otherwise(F.transform(v, lambda x: x / F.col("_nrm"))),
-        )
-        .select(F.col(id_col), "unit", F.col("_nrm").alias("norm"))
-    )
+    return _with_unit(df, _as_double(vec_col), "unit") \
+        .select(F.col(id_col), "unit", F.col("_n").alias("norm"))
 
 
 def quantize_embeddings_int8(df: DataFrame, vec_col: str = "embedding",
@@ -468,6 +406,22 @@ def dequantize_embeddings(df: DataFrame, q_col: str = "q",
     )
 
 
+def _cosine_pairs(c: DataFrame, keys: list, threshold: float) -> DataFrame:
+    """(id_a, id_b, cosine): pairs of `c` (id, v, *keys) that agree on every
+    key, id_a < id_b, with cosine rounded to 6 places >= threshold — a
+    self-equi-join on the keys, so pairs only meet inside a key group."""
+    a, b = c.alias("a"), c.alias("b")
+    cond = F.col("a.id") < F.col("b.id")
+    for key in reversed(keys):
+        cond = (F.col(f"a.{key}") == F.col(f"b.{key}")) & cond
+    return (
+        a.join(b, cond)
+        .withColumn("cosine", F.round(cosine_sim(F.col("a.v"), F.col("b.v")), 6))
+        .filter(F.col("cosine") >= threshold)
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"), "cosine")
+    )
+
+
 def semdedup(
     df: DataFrame,
     tau: float = 0.95,
@@ -497,7 +451,10 @@ def semdedup(
       clamp(ceil(rows/1024), 8, 4096) — cells average ≤ ~1k members until the
       4096-centroid ceiling, which keeps the assignment crossJoin O(rows ×
       n_cells) with a bounded broadcast (≤ 4096 centroid rows). Costs one
-      count() job; pass an int to skip it.
+      count() job; pass an int to skip it. With `n_cells=None` the cell
+      assignment, and so which near-duplicates can meet, depends on the
+      corpus size: pass `n_cells` when results must stay stable as the
+      corpus grows.
     - `cell_cap` bounds the residual quadratic term when auto-scaling hits
       the centroid ceiling or the assignment is skewed: any cell with more
       than `cell_cap` members is sub-split by a `sub_bits`-bit sign-bit LSH
@@ -516,35 +473,14 @@ def semdedup(
     loser set is dup-rate-proportional — at extreme dup rates pass False and
     let AQE pick from measured size, the `dedup_keep_canonical` contract).
     """
-    from pyspark.sql import Window
-
-    from change_data_capturer_ms_spark.functions.hashing import md5_long56
     from change_data_capturer_ms_spark.operators.dedup_docs import (
         duplicate_clusters,
     )
 
-    c = df.select(F.col(id_col).alias("id"), _as_double(vec_col).alias("v"))
+    c = _vectors(df, id_col, vec_col, "id", "v")
     if n_cells is None:
         n_cells = min(4096, max(8, -(-c.count() // 1024)))
-    hashed = c.withColumn("h", md5_long56(F.col("id").cast("string")))
-    wc = Window.orderBy("h", "id")
-    cent = (
-        hashed.orderBy("h", "id").limit(n_cells)
-        .select((F.row_number().over(wc) - 1).alias("cell"),
-                F.col("v").alias("centroid"))
-    )
-    dist = F.sqrt(F.aggregate(
-        F.zip_with(F.col("v"), F.col("centroid"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0), lambda acc, x: acc + x,
-    ))
-    assigned = (
-        c.crossJoin(F.broadcast(cent))
-        .withColumn("dist", dist)
-        .withColumn("rn", F.row_number().over(
-            Window.partitionBy("id").orderBy("dist", "cell")))
-        .filter(F.col("rn") == 1)
-        .select("id", "v", "cell")
-    )
+    assigned = _nearest_cell(c, "id", "v", _hash_seeds(c, "id", "v", n_cells))
     if cell_cap is not None:
         # sub-split oversize cells by a sign-bit LSH bucket so the self-join
         # KEY (cell, sub) bounds the largest join group; cells within the cap
@@ -563,15 +499,7 @@ def semdedup(
         )
     else:
         assigned = assigned.withColumn("sub", F.lit(-1))
-    a, b = assigned.alias("a"), assigned.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.cell") == F.col("b.cell"))
-               & (F.col("a.sub") == F.col("b.sub"))
-               & (F.col("a.id") < F.col("b.id")))
-        .withColumn("cosine", F.round(cosine_sim(F.col("a.v"), F.col("b.v")), 6))
-        .filter(F.col("cosine") >= tau)
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-    )
+    pairs = _cosine_pairs(assigned, ["cell", "sub"], tau)
     clusters = duplicate_clusters(pairs, max_iter=max_iter)
     losers = clusters.filter(F.col("id") != F.col("cluster_id")).select("id")
     if broadcast_losers:
@@ -588,13 +516,6 @@ def embedding_near_dup_pairs(
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, LSH-bucketed (pairs only meet inside a
     bucket; exact-threshold check on the survivors)."""
-    c = df.select(F.col(id_col).alias("id"), _as_double(vec_col).alias("v")).withColumn(
-        "bucket", signbit_bucket(F.col("v"), bits)
-    )
-    a, b = c.alias("a"), c.alias("b")
-    return (
-        a.join(b, (F.col("a.bucket") == F.col("b.bucket")) & (F.col("a.id") < F.col("b.id")))
-        .withColumn("cosine", F.round(cosine_sim(F.col("a.v"), F.col("b.v")), 6))
-        .filter(F.col("cosine") >= threshold)
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"), "cosine")
-    )
+    c = _vectors(df, id_col, vec_col, "id", "v") \
+        .withColumn("bucket", signbit_bucket(F.col("v"), bits))
+    return _cosine_pairs(c, ["bucket"], threshold)

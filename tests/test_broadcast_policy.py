@@ -25,31 +25,28 @@ PKG = os.path.join(os.path.dirname(__file__), "..", "change_data_capturer_ms_spa
 # (relative file, normalized source line) -> why the broadcast side is bounded.
 ALLOWED = {
     # --- bounded query/probe/key sets (caller-provided, small by contract) ---
-    ("operators/similarity.py", "c.join(F.broadcast(q), F.col(\"neighbor_id\") != F.col(\"query_id\"))"):
+    ("operators/similarity.py", "return _rank_by_cosine(c.crossJoin(F.broadcast(q)), k)"):
         "brute-force baseline: broadcast = the query batch",
-    ("operators/similarity.py", "c.join(F.broadcast(q), [\"bucket\"])"):
+    ("operators/similarity.py", "return _rank_by_cosine(c.join(F.broadcast(q), [\"bucket\"]), k, \"bucket\")"):
         "LSH probe: broadcast = the query batch",
-    ("operators/similarity.py", ".join(F.broadcast(q), \"query_id\")"):
+    ("operators/similarity.py", "return _rank_by_cosine(cand.join(vecs, \"neighbor_id\").join(F.broadcast(q), \"query_id\"), k)"):
         "PQ re-rank: broadcast = the query batch",
-    ("operators/embed_index.py", "idx.join(F.broadcast(q), [\"bucket\"])"):
+    ("operators/embed_index.py", "return _rank_by_cosine(idx.join(F.broadcast(q), [\"bucket\"]), k)"):
         "index probe: broadcast = the query batch",
     ("lake/table.py", "return base.join(F.broadcast(key_df), m.key_cols, \"inner\")"):
         "lookup_many: broadcast = the caller's key list",
     # --- centroid / probe tables bounded by n_cells / K ---
-    ("operators/similarity.py", "q.crossJoin(F.broadcast(cent_df))"):
-        "IVF assignment: K centroid rows",
-    ("operators/similarity.py", "assigned.join(F.broadcast(probes), [\"cell\"])"):
+    ("operators/similarity.py", "return _rank_by_cosine(assigned.join(F.broadcast(probes), [\"cell\"]), k, \"cell\")"):
         "IVF probe list: nprobe rows per query",
-    ("operators/similarity.py", "c.crossJoin(F.broadcast(cent))"):
-        "IVF/semdedup assignment: n_cells centroid rows (n_cells clamped <= 4096)",
-    ("operators/similarity.py", "q.crossJoin(F.broadcast(cent))"):
-        "IVF query assignment: K centroid rows",
+    ("operators/similarity.py", "return df.crossJoin(F.broadcast(cent)).withColumn(\"dist\", dist)"):
+        "IVF/semdedup corpus and query assignment: K / n_cells centroid rows "
+        "(semdedup clamps n_cells <= 4096)",
     ("operators/similarity.py", "assigned.join(F.broadcast(cell_sizes), \"cell\")"):
         "semdedup cell sizes: n_cells rows",
     # --- codebooks / LUTs (256 codes x n_sub) ---
-    ("operators/similarity.py", "subs.join(F.broadcast(codebook), \"sub\")"):
+    ("operators/similarity.py", "subs = _subvectors(c, \"v\", m, w, \"vec\").join(F.broadcast(codebook), \"sub\")"):
         "PQ codebook: 256 x n_sub rows",
-    ("operators/similarity.py", "qsubs.join(F.broadcast(codebook), \"sub\")"):
+    ("operators/similarity.py", "qsubs = _subvectors(q, \"qv\", m, w, \"query_id\").join(F.broadcast(codebook), \"sub\")"):
         "PQ codebook: 256 x n_sub rows",
     ("operators/similarity.py", "codes.join(F.broadcast(lut), [\"sub\", \"code\"])"):
         "PQ ADC lookup table: 256 x n_sub x queries rows",

@@ -10,6 +10,7 @@ visible in `explain` output, not assumed (SURVEY.md §4).
 """
 
 import os
+import re
 
 from pyspark.sql import functions as F
 
@@ -128,6 +129,38 @@ def test_lsh_multiprobe_stays_bucket_equijoin(spark, sf_dir):
     plan = _plan(lsh_topk(emb, q, k=5, bits=4, multiprobe=True))
     assert "BroadcastHashJoin" in plan
     assert "BroadcastNestedLoopJoin" not in plan and "CartesianProduct" not in plan
+
+
+def _window_partitions(plan: str) -> set:
+    """Partition-by columns (expression ids stripped) of every window function
+    in a plan: the windowspecdefinition arguments before the first ordering."""
+    parts = set()
+    for spec in re.findall(r"windowspecdefinition\(([^)]*)", plan):
+        keys = []
+        for arg in spec.split(", "):
+            if " ASC " in arg or " DESC " in arg:
+                break
+            keys.append(re.sub(r"#\d+L?$", "", arg))
+        parts.add(tuple(keys))
+    return parts
+
+
+def test_vector_argmins_use_partial_min_by(spark, sf_dir):
+    """Nearest-cell assignment (ivf_topk_det) and PQ encoding are argmins:
+    a min_by with a map-side partial aggregate, never a row_number window per
+    vector (or per (vec, sub)) that shuffles every candidate row; the PQ
+    codebook is one hash-ordered sample, not a window per subspace."""
+    from change_data_capturer_ms_spark.operators import ivf_topk_det, pq_topk
+
+    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    q = emb.filter(F.col("vec_id") < 3)
+    ivf = _plan(ivf_topk_det(emb, q, k=5, n_cells=8, nprobe=3))
+    assert "partial_min_by" in ivf
+    assert ("neighbor_id",) not in _window_partitions(ivf)
+    pq = _plan(pq_topk(emb, q, k=5, m=4, n_codes=16, rerank=20))
+    assert "partial_min_by" in pq
+    parts = _window_partitions(pq)
+    assert ("vec", "sub") not in parts and ("sub",) not in parts, parts
 
 
 def test_ngram_df_cap_is_broadcast_anti_join(spark, sf_dir):
