@@ -263,7 +263,7 @@ def apply_once(spark, n_events: int, log_dir: str, n_files: int, workdir: str,
     from change_data_capturer_ms_spark.config import EngineConfig
     from change_data_capturer_ms_spark.lake.table import LakeTable
     from change_data_capturer_ms_spark.streaming import CDCPipeline
-    from change_data_capturer_ms_spark.streaming.pipeline import _hist_batch_id
+    from change_data_capturer_ms_spark.streaming.pipeline import _hist_version
 
     shutil.rmtree(workdir, ignore_errors=True)
     mft = max(1, math.ceil(n_files / n_batches))
@@ -284,7 +284,7 @@ def apply_once(spark, n_events: int, log_dir: str, n_files: int, workdir: str,
     # reads these directly. Ring names parse like the ring pruner's; a
     # malformed batch_*.json is skipped, not fatal to the finished run.
     hist = sorted((p for p in glob.glob(f"{workdir}/table/_lease/batch_*.json")
-                   if _hist_batch_id(p) >= 0), key=_hist_batch_id)
+                   if _hist_version(p) >= 0), key=_hist_version)
     mt = [os.path.getmtime(p) for p in hist]
     batch_walls = ([round(mt[0] - t0, 2)] if mt else []) + [
         round(b - a, 2) for a, b in zip(mt, mt[1:])]

@@ -27,11 +27,9 @@ class EngineConfig:
 
     # lake layout
     n_buckets: int = 16
-    target_file_bytes: int = 128 * 1024 * 1024
     # dedupe / skew
     salt_buckets: int = 8
     # streaming
-    max_events_per_trigger: int = 1_000_000
     lease_prefix: str = "cdc-data-lease"  # reference default lease container name
     # per-batch lease-history ring size: _lease/batch_*.json is the audit /
     # drift-monitor trail; a 10^10-event deployment runs millions of
@@ -51,7 +49,6 @@ class EngineConfig:
 
         problems = []
         for name in ("n_buckets", "salt_buckets", "shuffle_partitions",
-                     "max_events_per_trigger", "target_file_bytes",
                      "lease_history_keep"):
             v = getattr(self, name)
             if not isinstance(v, int) or v <= 0:

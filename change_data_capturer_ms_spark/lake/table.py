@@ -411,8 +411,8 @@ class LakeTable:
         that handle move the branch ref, never `_current`, so main readers see
         nothing until `fast_forward` publishes the head. This is Iceberg's
         branch WAP layout (write to branch `audit` → validate → fast-forward
-        main); the pipeline's audit_fn gate composes the same primitives via
-        rollback instead — both are supported shapes.
+        main), the shape of the pipeline's audit_fn gate (CDCPipeline stages
+        each audited batch on the branch `wap-<source_id>`).
         """
         import re
 

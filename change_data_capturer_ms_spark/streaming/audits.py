@@ -1,8 +1,9 @@
 """Ready-made write-audit-publish checks for `CDCPipeline(audit_fn=...)`.
 
 Each factory returns an audit callable `(table, merge_result) -> True | str`;
-a string is the rejection reason (the pipeline rolls back to the parent
-snapshot and quarantines the batch — see pipeline.py). All checks here are
+a string is the rejection reason (the pipeline drops the staging branch the
+merge was written to, so main never sees the batch, and quarantines its rows
+— see pipeline.py). `table` is that branch-bound handle. All checks here are
 METADATA-ONLY: they read the merge metrics and manifest file statistics,
 never scheduling a Spark job — an audit that rescans the table would double
 the cost of every commit at 100 TB. Data-content audits (checksums, nulls)

@@ -20,6 +20,7 @@ batch_id, per-partition lineage and metrics (north_star).
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 
@@ -48,14 +49,16 @@ from change_data_capturer_ms_spark.sources.changelog import ChangeLogReader
 APPLY_SEMVER = "r3c"
 
 
-def _hist_batch_id(p: str) -> int:
-    """Commit order of a lease-history ring file (batch_<id>.json) from its
-    PARSED batch id — the single ordering key shared by the ring pruner and
-    monitor_drift, so retention and PSI pairing can never disagree.
-    Malformed names sort first (pruned first, skipped as non-monitor
-    payloads by readers)."""
+def _hist_version(p: str) -> int:
+    """Commit order of a lease-history ring file (batch_<version>_<id>.json):
+    the manifest version of the commit that wrote it, monotone on main — the
+    single ordering key shared by the ring pruner and monitor_drift, so
+    retention and PSI pairing can never disagree. Batch ids cannot order the
+    ring: run_batch (`manual-<cursor>`) and DLQ replay (`dlq-replay-<id>`)
+    ids are not numbers. Malformed names sort first (pruned first, skipped
+    as non-monitor payloads by readers)."""
     try:
-        return int(os.path.basename(p)[len("batch_"):-len(".json")])
+        return int(os.path.basename(p)[len("batch_"):].split("_", 1)[0])
     except ValueError:
         return -1
 
@@ -118,7 +121,6 @@ class CDCPipeline:
         monitor_cols: list[str] | None = None,
         monitor_top_k: int = 20,
         audit_fn=None,
-        wap_branch: str | None = None,
         event_dedup_watermark: str | None = None,
     ):
         self.spark = spark
@@ -142,24 +144,15 @@ class CDCPipeline:
         # column per batch — opt in for low-cardinality columns (lang, op).
         self.monitor_cols = list(monitor_cols or [])
         self.monitor_top_k = monitor_top_k
-        # write-audit-publish gate: audit_fn(table, merge_result) runs AFTER the
-        # merge commit but BEFORE the lease advances or the queue produces;
-        # returning False / a reason string rolls the table back to the parent
-        # snapshot (manifest-only — no data rewrite, and the rollback restores
-        # the exactly-once ledger so the batch can legally re-apply later) and
-        # quarantines the batch rows for replay_quarantine. Iceberg's
-        # WAP / branch-validate-publish pattern on the engine's own primitives.
+        # write-audit-publish gate (Iceberg's branch WAP layout): each
+        # micro-batch's MERGE stages on the branch `wap-<source_id>` cut at the
+        # main head; audit_fn(staged_table, merge_result) runs on the branch
+        # BEFORE main, the lease or the queue move. A pass publishes by
+        # metadata-only fast_forward; False / a reason string drops the branch
+        # and quarantines the batch rows for replay_quarantine. Main never
+        # exposes an unaudited snapshot, and the ref is derived from the
+        # source id so fan-in pipelines sharing one table never clash.
         self.audit_fn = audit_fn
-        # wap_branch (requires audit_fn): stage each micro-batch's MERGE on a
-        # BRANCH cut at the main head, audit the branch, and publish via
-        # metadata-only fast_forward — main never exposes an unaudited
-        # snapshot, not even transiently (the rollback-shaped gate above
-        # commits to main first, so a concurrent reader could glimpse the
-        # rejected snapshot between commit and rollback). Iceberg's
-        # branch-WAP layout proper; a failed audit just drops the branch.
-        if wap_branch is not None and audit_fn is None:
-            raise ValueError("wap_branch requires audit_fn")
-        self.wap_branch = wap_branch
         # at-least-once transport guard (operators/dedupe.py
         # streaming_dedupe_within_watermark): drop events whose identity
         # (`seq`) was already observed within the window, BEFORE the batch
@@ -170,14 +163,16 @@ class CDCPipeline:
 
     # -- lease (inspectable resume state) ------------------------------------
 
-    def _write_lease(self, lease: dict) -> None:
+    def _write_lease(self, lease: dict, version: int) -> None:
         """Mirror of the reference lease upsert: one doc per source id, LWW
         (cosmos.ts:91-105), plus a bounded per-batch history RING for audit
         and drift scoring (cfg.lease_history_keep): millions of micro-batches
         must not mean millions of sidecar files — boundedness is a soak
-        invariant (tests/test_soak.py)."""
+        invariant (tests/test_soak.py). Ring entries are named by the
+        commit's manifest `version`, the ring's order (_hist_version)."""
         os.makedirs(self.lease_dir, exist_ok=True)
-        hist = os.path.join(self.lease_dir, f"batch_{lease['batch_id']}.json")
+        hist = os.path.join(self.lease_dir,
+                            f"batch_{version}_{lease['batch_id']}.json")
         cur_tmp = os.path.join(self.lease_dir, "_current.tmp")
         cur = os.path.join(self.lease_dir, f"{self.cfg.lease_prefix}.json")
         payload = json.dumps(lease, default=str, indent=1)
@@ -188,17 +183,16 @@ class CDCPipeline:
         os.replace(cur_tmp, cur)  # atomic LWW upsert on id
         self._prune_lease_history()
 
+    def _lease_ring(self) -> list[str]:
+        """The lease-history ring's files in commit order (_hist_version)."""
+        return sorted(glob.glob(os.path.join(self.lease_dir, "batch_*.json")),
+                      key=_hist_version)
+
     def _prune_lease_history(self) -> None:
         """Drop history entries beyond the newest cfg.lease_history_keep
-        batches (by batch id — resume-safe: ids are the stream's global
-        micro-batch counter, monotone across restarts)."""
-        import glob as _glob
-
-        hist_files = _glob.glob(os.path.join(self.lease_dir, "batch_*.json"))
-        keep = self.cfg.lease_history_keep
-        if len(hist_files) <= keep:
-            return
-        for p in sorted(hist_files, key=_hist_batch_id)[:-keep]:
+        commits (by commit version — resume-safe: versions are monotone on
+        main across restarts, whatever shape the batch ids have)."""
+        for p in self._lease_ring()[:-self.cfg.lease_history_keep]:
             try:
                 os.remove(p)
             except OSError:
@@ -225,21 +219,15 @@ class CDCPipeline:
         jobs (the counts were folded during each batch's own commit; enable
         with `monitor_cols=[col]`). Returns `[{batch_id, psi}]` in commit
         order; alert on the conventional psi > 0.2 threshold."""
-        import glob as _glob
-
         from change_data_capturer_ms_spark.operators.drift import psi_from_counts
 
-        # order by PARSED batch id — the same key the ring pruner uses —
+        # order by commit version — the same key the ring pruner uses —
         # never file mtime: after a prune + restore/copy (or coarse mtime
         # granularity) mtime order can diverge from commit order and pair
         # non-consecutive batches in the PSI
-        files = sorted(
-            _glob.glob(os.path.join(self.lease_dir, "batch_*.json")),
-            key=_hist_batch_id,
-        )
         out: list[dict] = []
         prev = None
-        for p in files:
+        for p in self._lease_ring():
             try:
                 with open(p) as f:
                     payload = json.load(f)
@@ -256,12 +244,11 @@ class CDCPipeline:
 
     # -- apply ----------------------------------------------------------------
 
-    def _quarantine_audit_reject(self, batch_df: DataFrame, batch_id,
+    def _quarantine_audit_reject(self, captured: DataFrame, batch_id,
                                  reason: str) -> None:
         """Audit-rejected batch rows go to the DLQ for replay_quarantine; with
         no DLQ configured, refuse loudly rather than drop the batch silently."""
         if self.quarantine_dir:
-            captured = batch_df.filter(F.col("op").isin(*self.cfg.captured_ops))
             (captured
              .withColumn("_reasons", F.array(F.lit(f"audit:{reason}")))
              .withColumn("_batch_id", F.lit(batch_id))
@@ -299,6 +286,17 @@ class CDCPipeline:
             (quarantine.observe(quarantined, F.max(F.col("seq").cast("long")).alias("hi"))
              .withColumn("_batch_id", F.lit(batch_id))
              .write.mode("append").parquet(self.quarantine_dir))
+        return self._apply(batch_df, batch_id, m, quarantined, self.audit_fn)
+
+    def _apply(self, batch_df: DataFrame, batch_id, m, quarantined=None,
+               audit_fn=None) -> dict:
+        """The commit core every batch goes through — stream and run_batch
+        micro-batches via apply_batch, DLQ replays via replay_quarantine:
+        prepare [→ create] → planning job → merge [→ audit on the staging
+        branch → fast-forward] → lease (+ monitor) → queue sink. `m` is the
+        main manifest the caller read (None ⇒ the table does not exist yet);
+        `quarantined` observes the max seq the DLQ append diverted."""
+        captured = batch_df.filter(F.col("op").isin(*self.cfg.captured_ops))
         prepared = prepare_batch(batch_df, self.cfg, self.use_pandas_udfs,
                                  flatten_props=self.flatten_props)
         if m is None:
@@ -321,8 +319,7 @@ class CDCPipeline:
 
         keys = m.key_cols  # bucket layout is the manifest's, not cfg's
         pre = (
-            batch_df.filter(F.col("op").isin(*self.cfg.captured_ops))
-            .select(*keys, "seq")
+            captured.select(*keys, "seq")
             .withColumn("_bucket", bucket_expr(m.bucket_key, m.n_buckets))
             .withColumn("p", F.spark_partition_id())
         )
@@ -349,7 +346,18 @@ class CDCPipeline:
         # planning job, by when they have landed, so get() does not block
         hi = None if quarantined is None else quarantined.get["hi"]
 
-        merge_kwargs = dict(
+        # audited: stage the merge on a branch cut at the main head (dropping
+        # any stale ref a previously rejected batch left), audit the BRANCH,
+        # publish metadata-only via fast_forward. A failed audit costs one
+        # dropped ref. A crash after fast_forward redelivers the batch, which
+        # no-ops on the published ledger.
+        target, staging = self.table, f"wap-{self.source_id}"
+        if audit_fn is not None:
+            self.table.drop_branch(staging)
+            self.table.create_branch(staging)
+            target = self.table.branch(staging)
+        result = target.merge(
+            prepared,
             seq_col="seq",
             op_col="op",
             batch_id=batch_id,
@@ -359,61 +367,27 @@ class CDCPipeline:
             lineage=lineage,
             planning_stats=planning_stats,
         )
-        if self.wap_branch is not None:
-            # branch-WAP proper: stage the merge on a branch cut at the main
-            # head (dropping any stale ref a previously rejected batch left),
-            # audit the BRANCH, publish metadata-only via fast_forward. Main
-            # never exposes an unaudited snapshot, not even transiently; a
-            # failed audit costs one dropped ref, no rollback commit. A crash
-            # after fast_forward redelivers the batch, which no-ops on the
-            # published ledger (exactly-once preserved).
-            self.table.drop_branch(self.wap_branch)
-            self.table.create_branch(self.wap_branch)
-            staged = self.table.branch(self.wap_branch)
-            result = staged.merge(prepared, **merge_kwargs)
-            if not result.get("skipped"):
-                verdict = self.audit_fn(staged, result)
-                if verdict is not None and verdict is not True:
-                    reason = ("audit rejected batch" if verdict is False
-                              else str(verdict))
-                    main_v = self.table.manifest().version
-                    self.table.drop_branch(self.wap_branch)
-                    self._quarantine_audit_reject(batch_df, batch_id, reason)
-                    return {"skipped": False, "audit_failed": True,
-                            "reason": reason, "version": main_v,
-                            "batch_id": batch_id,
-                            "metrics": {"rows": 0, "upserts": 0, "deletes": 0}}
-            self.table.fast_forward(self.wap_branch)
-            self.table.drop_branch(self.wap_branch)
-        else:
-            result = self.table.merge(prepared, **merge_kwargs)
-        if (self.wap_branch is None and self.audit_fn is not None
-                and not result.get("skipped")):
-            verdict = self.audit_fn(self.table, result)
+        if audit_fn is not None:
+            verdict = None if result.get("skipped") else audit_fn(target, result)
             if verdict is not None and verdict is not True:
                 reason = "audit rejected batch" if verdict is False else str(verdict)
-                # the merge's parent from the manifest ancestry, NOT version-1:
-                # versions allocate from a global counter once branches exist
-                parent = self.table.manifest(int(result["version"])).parent
-                self.table.rollback(version=parent)
-                restored = self.table.lease()
-                if restored:  # empty ⇒ rolled back to the pre-first-batch table
-                    self._write_lease(restored)  # sidecar follows the table
-                self._quarantine_audit_reject(batch_df, batch_id, reason)
+                self.table.drop_branch(staging)
+                self._quarantine_audit_reject(captured, batch_id, reason)
                 return {"skipped": False, "audit_failed": True, "reason": reason,
-                        "version": parent, "batch_id": batch_id,
+                        "version": self.table.manifest().version,
+                        "batch_id": batch_id,
                         "metrics": {"rows": 0, "upserts": 0, "deletes": 0}}
+            self.table.fast_forward(staging)
+            self.table.drop_branch(staging)
         if not result.get("skipped"):
             lease = dict(result["lease"])
             if self.monitor_cols:
-                captured = batch_df.filter(F.col("op").isin(*self.cfg.captured_ops))
                 lease["monitor"] = self._monitor_summary(captured)
-            self._write_lease(lease)
+            self._write_lease(lease, result["version"])
         if self.queue_sink is not None:
             # produce the RAW captured rows (the reference queues the change
             # documents themselves) — no UDF columns, so this extra pass stays
             # a cheap scan; the sink's marker makes replays no-ops
-            captured = batch_df.filter(F.col("op").isin(*self.cfg.captured_ops))
             result["queue"] = self.queue_sink.produce(
                 captured, batch_id=batch_id, source_id=self.source_id
             )
@@ -472,7 +446,9 @@ class CDCPipeline:
         Exactly-once + crash safety, in commit order:
           1. the surviving (still-invalid) rows are STAGED to a sibling tmp
              dir — nothing destructive yet;
-          2. the repaired rows merge under batch_id `dlq-replay-{replay_id}`
+          2. the repaired rows go through the stream's commit core (_apply:
+             lineage, lease, monitor counts and queue envelopes like any
+             batch, no audit) under batch_id `dlq-replay-{replay_id}`
              through the table ledger — a crashed or re-run replay never
              double-applies, and the resume cursor cannot regress (the lake's
              max_seq watermark is monotone);
@@ -506,17 +482,9 @@ class CDCPipeline:
          .write.mode("overwrite").parquet(tmp))
         n_bad = self.spark.read.parquet(tmp).count()
 
-        prepared = prepare_batch(valid, self.cfg, self.use_pandas_udfs,
-                                 flatten_props=self.flatten_props)
-        if not self.table.exists():
-            from pyspark.sql import types as T
-            payload = [f for f in prepared.schema.fields if f.name not in ("seq", "op")]
-            self.table.create(T.StructType(payload))
-        result = self.table.merge(
-            prepared, seq_col="seq", op_col="op",
-            batch_id=f"dlq-replay-{replay_id}", source_id=self.source_id,
-            tiebreakers=["token"],
-        )
+        # the operator's explicit decision: a replay is not audited
+        m = self.table.manifest() if self.table.exists() else None
+        result = self._apply(valid, f"dlq-replay-{replay_id}", m)
         if result.get("skipped"):
             # the ledger already holds this replay_id (an earlier replay used
             # it): NOTHING was applied, so swapping the DLQ now would delete
@@ -529,7 +497,6 @@ class CDCPipeline:
                     "reason": f"replay_id {replay_id!r} already committed — "
                               "pass a fresh replay_id to replay the current "
                               "quarantine"}
-        self._write_lease(result["lease"])
 
         shutil.rmtree(old, ignore_errors=True)
         os.rename(qdir, old)

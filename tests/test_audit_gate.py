@@ -1,6 +1,8 @@
-"""Write-audit-publish gate (CDCPipeline audit_fn): post-merge audit with
-automatic rollback-to-parent + DLQ capture on failure — Iceberg's WAP pattern
-composed from the engine's own rollback/ledger/quarantine primitives."""
+"""Write-audit-publish gate (CDCPipeline audit_fn): each batch's merge stages
+on the branch `wap-<source_id>`, the audit runs on the branch, a pass
+publishes by fast-forward and a failure drops the branch and captures the
+batch in the DLQ — Iceberg's branch WAP layout composed from the engine's own
+branch/ledger/quarantine primitives."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -12,14 +14,14 @@ from change_data_capturer_ms_spark.streaming.pipeline import CDCPipeline
 from tests.test_invariants import _state
 
 
-def _pipe_audit(spark, tmpdir_path, audit_fn, quarantine=True, wap_branch=None):
+def _pipe_audit(spark, tmpdir_path, audit_fn, quarantine=True):
     table = LakeTable(spark, f"{tmpdir_path}/table", key_cols=["repo", "path"],
                       n_buckets=8)
     return CDCPipeline(
         spark, f"{tmpdir_path}/log", table, f"{tmpdir_path}/ckpt",
         cfg=EngineConfig(n_buckets=8), use_pandas_udfs=False,
         quarantine_dir=f"{tmpdir_path}/dlq" if quarantine else None,
-        audit_fn=audit_fn, wap_branch=wap_branch,
+        audit_fn=audit_fn,
     )
 
 
@@ -47,10 +49,10 @@ def test_failed_audit_rolls_back_quarantines_and_stream_continues(
 
     r1 = pipe.apply_batch(b1, batch_id=1)
     assert r1.get("audit_failed") and "incident-window" in r1["reason"]
-    # table state and lease rolled back to post-batch-0
+    # table state and lease stay at post-batch-0
     assert _state(pipe.table).equals(s_after_b0)
     assert pipe.table.lease()["lease"] == lease_after_b0
-    # ledger restored: batch 1 is NOT recorded committed
+    # ledger unchanged: batch 1 is NOT recorded committed
     assert not pipe.table.is_batch_committed("changelog", 1)
     # batch rows are in the DLQ with the audit reason
     dlq = spark.read.parquet(f"{tmpdir_path}/dlq")
@@ -69,7 +71,7 @@ def test_audit_failure_without_dlq_raises(spark, tmpdir_path):
     pipe = _pipe_audit(spark, tmpdir_path, lambda t, r: False, quarantine=False)
     with pytest.raises(RuntimeError, match="audit failed"):
         pipe.apply_batch(full, batch_id=0)
-    # the merge was rolled back: the table reads empty
+    # the merge never published: the table reads empty
     assert pipe.table.read().count() == 0
 
 
@@ -107,35 +109,38 @@ def test_passing_audit_is_transparent(spark, tmpdir_path):
     assert _state(audited.table).equals(_state(plain.table))
 
 
-# -- branch-WAP mode (wap_branch): stage on a branch, publish by fast-forward --
+# -- branch staging: main never holds the rejected snapshot --------------------
 
-def test_wap_branch_mode_converges_with_rollback_mode(spark, tmpdir_path):
-    """Same batches, same audit: the branch-staged gate must end in the same
-    table state and lease as the rollback-shaped gate — pass and fail alike.
-    Difference under the hood: main's snapshot history never contains the
-    rejected merge at all (no transient unaudited snapshot)."""
+def test_rejected_batch_never_reaches_main_history(spark, tmpdir_path):
+    """Same batches, same audit, with and without a failing middle batch in
+    between: the audited pipeline ends in the state of a plain pipeline fed
+    only the passing batches, main's snapshot history never contains the
+    rejected merge (no transient unaudited snapshot) and no staging ref is
+    left behind."""
     full = gen_changelog(spark, 3000, seed=55, n_repos=10, paths_per_repo=5)
     b0 = full.filter(F.col("seq") < 1000)
     b1 = full.filter((F.col("seq") >= 1000) & (F.col("seq") < 2000))  # bad
     b2 = full.filter(F.col("seq") >= 2000)
 
-    wap = _pipe_audit(spark, tmpdir_path, _bad_window_audit, wap_branch="audit")
-    rb = _pipe_audit(spark, f"{tmpdir_path}/rb", _bad_window_audit)
-    for pipe in (wap, rb):
-        r0 = pipe.apply_batch(b0, batch_id=0)
-        assert not r0.get("audit_failed")
-        r1 = pipe.apply_batch(b1, batch_id=1)
-        assert r1.get("audit_failed") and "incident-window" in r1["reason"]
-        assert not pipe.table.is_batch_committed("changelog", 1)
-        r2 = pipe.apply_batch(b2, batch_id=2)
-        assert not r2.get("audit_failed")
-    s_w, s_r = _state(wap.table), _state(rb.table)
+    wap = _pipe_audit(spark, tmpdir_path, _bad_window_audit)
+    r0 = wap.apply_batch(b0, batch_id=0)
+    assert not r0.get("audit_failed")
+    r1 = wap.apply_batch(b1, batch_id=1)
+    assert r1.get("audit_failed") and "incident-window" in r1["reason"]
+    assert not wap.table.is_batch_committed("changelog", 1)
+    r2 = wap.apply_batch(b2, batch_id=2)
+    assert not r2.get("audit_failed")
+
+    ref = _pipe_audit(spark, f"{tmpdir_path}/ref", audit_fn=None)
+    ref.apply_batch(b0, batch_id=0)
+    ref.apply_batch(b2, batch_id=2)
+    s_w, s_r = _state(wap.table), _state(ref.table)
     assert list(s_w["content_sha256"]) == list(s_r["content_sha256"])
-    assert wap.table.lease()["lease"] == rb.table.lease()["lease"]
-    # both DLQs captured the rejected batch
+    assert wap.table.lease()["lease"] == ref.table.lease()["lease"]
+    # the DLQ captured the rejected batch
     assert spark.read.parquet(f"{tmpdir_path}/dlq").count() > 0
     # no stale staging ref left behind
-    assert "audit" not in wap.table.branches()
+    assert wap.table.branches() == {}
     # main history never saw the rejected snapshot: every retained main
     # ancestor passes the audit window check
     v = wap.table.manifest().version
@@ -144,13 +149,6 @@ def test_wap_branch_mode_converges_with_rollback_mode(spark, tmpdir_path):
         ms = m.lease.get("metrics", {}).get("max_seq")
         assert ms is None or not (1000 <= int(ms) < 2000)
         v = m.parent
-
-
-def test_wap_branch_requires_audit_fn(spark, tmpdir_path):
-    table = LakeTable(spark, f"{tmpdir_path}/t2", key_cols=["repo", "path"])
-    with pytest.raises(ValueError, match="wap_branch requires audit_fn"):
-        CDCPipeline(spark, f"{tmpdir_path}/log", table, f"{tmpdir_path}/ck",
-                    wap_branch="audit")
 
 
 # -- ready-made audit helpers (streaming/audits.py) — metadata-only, no Spark --
@@ -203,7 +201,7 @@ def test_audit_helpers_metadata_only():
 
 def test_audit_helper_drives_pipeline_gate(spark, tmpdir_path):
     """row_bounds plugged into the real pipeline gate: an over-sized batch is
-    rolled back and quarantined, a normal one publishes."""
+    dropped and quarantined, a normal one publishes."""
     from change_data_capturer_ms_spark.streaming import audits
 
     full = gen_changelog(spark, 1200, seed=52, n_repos=6, paths_per_repo=4)

@@ -1,5 +1,9 @@
 """Pipeline resume cursor and per-batch manifest traffic."""
 
+import glob
+import json
+import os
+
 from pyspark.sql import functions as F
 
 from change_data_capturer_ms_spark.config import EngineConfig
@@ -62,3 +66,30 @@ def test_apply_batch_loads_the_manifest_at_most_twice(spark, tmpdir_path,
     assert len(loads) <= 2, loads
     assert pipe.current_lease()["lease"] == "399"
     assert pipe.current_lease() == pipe.table.lease()
+
+
+def test_lease_ring_keeps_newest_commits_for_string_batch_ids(spark,
+                                                              tmpdir_path):
+    """run_batch ids (`manual-<cursor>`) are not numbers: the lease-history
+    ring must still keep the newest commits and monitor_drift must pair
+    them in commit order."""
+    table = LakeTable(spark, f"{tmpdir_path}/t", key_cols=["repo", "path"],
+                      n_buckets=4)
+    pipe = CDCPipeline(spark, f"{tmpdir_path}/log", table, f"{tmpdir_path}/ckpt",
+                       cfg=EngineConfig(n_buckets=4, lease_history_keep=3),
+                       use_pandas_udfs=False, monitor_cols=["op"])
+    ids = []
+    for w in range(6):
+        write_changelog(gen_changelog(spark, 100, seed=40 + w, n_repos=5,
+                                      paths_per_repo=3, start_seq=100 * w),
+                        f"{tmpdir_path}/log", files_per_bucket=1)
+        ids.append(pipe.run_batch()["batch_id"])
+    assert ids == ["manual--1", "manual-99", "manual-199", "manual-299",
+                   "manual-399", "manual-499"]
+
+    kept = set()
+    for p in glob.glob(os.path.join(table.path, "_lease", "batch_*.json")):
+        with open(p) as f:
+            kept.add(json.load(f)["batch_id"])
+    assert kept == set(ids[-3:])
+    assert [d["batch_id"] for d in pipe.monitor_drift("op")] == ids[-2:]

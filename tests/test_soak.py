@@ -200,7 +200,7 @@ def _mk_wap_pipe(spark, base):
         cfg=EngineConfig(n_buckets=8, lease_history_keep=40),
         use_pandas_udfs=False,
         quarantine_dir=f"{base}/dlq",
-        audit_fn=_wap_audit, wap_branch="audit",
+        audit_fn=_wap_audit,
         monitor_cols=["op"],
     )
 
