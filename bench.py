@@ -1,15 +1,22 @@
-"""Benchmark harness (driver contract + BENCH/BASELINE.md scaling evidence).
+"""Benchmark harness: query-suite timings and the N→4N scaling guard.
+
+The repository benchmark is perfbench/ (BENCHMARK.json). This harness keeps
+what perfbench does not measure: the eight-query suite timings, the apply
+throughput at local[CPUS] and the N→4N parallelism pairs behind
+BENCH/BASELINE.md. Findings of retired probes (hot-key skew, write mode,
+pruning, index maintenance, input linearity, codecs, Arrow batch size) are
+frozen in BENCH/FINDINGS.md, which no code writes.
 
 Default mode: runs the headline suite at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default 32) and prints ONE JSON
 line:  {"metric": ..., "value": <total sec>, "unit": "sec",
         "queries": {...per-query sec...}, "sf": ..., "extra": {...}}
 
-The headline number for the north rule is `extra.apply_events_per_sec`: sustained
-change-events/sec through the full pipeline (salted pandas-UDF classify+sha256 →
-JSON flatten → LWW dedupe → bucketed tombstone-correct MERGE commit) on a synthetic
-change log scaled to the sf dir. A warm-up apply runs first so the number reflects
-steady state, not JVM/codegen/Python-worker cold start.
+`extra.apply_events_per_sec` is sustained change-events/sec through the full
+pipeline (salted pandas-UDF classify+sha256 → JSON flatten → LWW dedupe →
+bucketed tombstone-correct MERGE commit) on a synthetic change log scaled to
+the sf dir. A warm-up apply runs first so the number reflects steady state,
+not JVM/codegen/Python-worker cold start.
 
 Modes (each probe runs in its OWN fresh process, strictly one at a time — a
 shared JVM would hand the second config warmed codegen and rig the ratio):
@@ -17,16 +24,12 @@ shared JVM would hand the second config warmed codegen and rig the ratio):
   [--scaling]             headline JSON; --scaling then runs `--campaign pairs`
   --consolidate           rebuild BENCH/BASELINE.md from BENCH/*.jsonl (no Spark)
   --campaign PIECE [N]    N rounds (default 1) of one piece, consolidating after
-                          each: pairs (2,8 then 1,4 @16M), full (pairs + 32@16M
-                          + 32@64M), big (32@128M), writemode (cow/mor @16M),
-                          pruning, skew (salted 16 vs unsalted 1, rows asserted
-                          equal); `--skew` is `--campaign skew`
-  workers, one JSON line each (the campaign records it):
-    --apply-probe CORES N_EVENTS WORKDIR [REPEATS]
-    --skew-probe CORES N_EVENTS SALT_BUCKETS LOG_DIR WORKDIR [REPEATS]
-    --writemode-probe CORES N_EVENTS cow|mor WORKDIR [REPEATS]
-    --pruning-probe CORES N_EVENTS WORKDIR
-    --index-scale-probe CORES WORKDIR   (records its own history)
+                          each: pairs (2,8 then 1,4 @16M), full (32@16M
+                          + pairs)
+  --apply-probe CORES N_EVENTS WORKDIR [REPEATS]
+                          worker: one JSON line (the campaign records it)
+
+Any other argument exits with the list of modes.
 """
 
 from __future__ import annotations
@@ -103,7 +106,7 @@ def _stamp_ok(rec: dict) -> bool:
     """True iff a history record measured the CURRENT pipeline semantics
     (engine stamp) under the CURRENT bench protocol (Arrow batch size,
     micro-batch cap) — the two preconditions for folding its walls into
-    minima / pair ratios / linearity."""
+    minima and pair ratios."""
     return rec.get("engine") == _engine_stamp() and _proto_of(rec) == BENCH_PROTO
 
 
@@ -121,10 +124,6 @@ def _sf_tag(sf_dir: str) -> float:
 # can land entirely inside a noise wave.
 BENCH_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH")
 PROBE_HISTORY = "probes.jsonl"
-SKEW_HISTORY = "skew_probes.jsonl"
-WRITEMODE_HISTORY = "writemode_probes.jsonl"
-PRUNING_HISTORY = "pruning_probes.jsonl"
-INDEX_SCALE_HISTORY = "index_scale_probes.jsonl"
 QUERY_HISTORY = "query_probes.jsonl"
 
 
@@ -209,7 +208,7 @@ def _session(cores: int, app: str):
 
 
 def gen_log(spark, n_events: int, log_dir: str, body_repeat: int = 1,
-            n_files: int = 16, hot_repo_fraction: float = 0.2) -> int:
+            n_files: int = 16) -> int:
     """Write the deterministic bench log once; returns actual file count.
 
     An existing log is kept IF its param stamp matches (same seed =>
@@ -228,7 +227,7 @@ def gen_log(spark, n_events: int, log_dir: str, body_repeat: int = 1,
     gen_src = hashlib.sha256(
         inspect.getsource(gen_changelog).encode()).hexdigest()[:16]
     params = {"n_events": n_events, "body_repeat": body_repeat,
-              "n_files": n_files, "hot_repo_fraction": hot_repo_fraction,
+              "n_files": n_files, "hot_repo_fraction": 0.2,
               "seed": 42, "paths_per_repo": 50, "gen_src": gen_src}
     stamp = f"{log_dir}/_gen_params.json"
     if os.path.exists(stamp):
@@ -242,7 +241,7 @@ def gen_log(spark, n_events: int, log_dir: str, body_repeat: int = 1,
     shutil.rmtree(log_dir, ignore_errors=True)
     n_repos = max(200, n_events // 1000)
     log = gen_changelog(spark, n_events, seed=42, n_repos=n_repos, paths_per_repo=50,
-                        hot_repo_fraction=hot_repo_fraction, body_repeat=body_repeat)
+                        hot_repo_fraction=0.2, body_repeat=body_repeat)
     (log.repartition(n_files)
         .write.mode("overwrite").partitionBy("seq_bucket").parquet(log_dir))
     with open(stamp, "w") as f:
@@ -251,25 +250,18 @@ def gen_log(spark, n_events: int, log_dir: str, body_repeat: int = 1,
 
 
 def apply_once(spark, n_events: int, log_dir: str, n_files: int, workdir: str,
-               n_batches: int = 2, salt_buckets: int = 16,
-               write_mode: str = "cow", n_buckets: int = 32) -> dict:
-    """One timed apply of the full pipeline over an existing log.
-
-    salt_buckets=1 disables skew salting (the salt column is constantly 0, so
-    the pre-UDF repartition degenerates to repartition-by-repo — every hot-repo
-    row lands in ONE partition). Used by the skew benchmark as the unsalted
-    control; semantics are unchanged either way (salt is a pure function of
-    the key, E17)."""
+               n_batches: int = 2) -> dict:
+    """One timed apply of the full pipeline over an existing log (32 buckets,
+    16 salt buckets, copy-on-write)."""
     from change_data_capturer_ms_spark.config import EngineConfig
     from change_data_capturer_ms_spark.lake.table import LakeTable
     from change_data_capturer_ms_spark.streaming import CDCPipeline
-    from change_data_capturer_ms_spark.streaming.pipeline import _hist_version
 
     shutil.rmtree(workdir, ignore_errors=True)
     mft = max(1, math.ceil(n_files / n_batches))
-    cfg = EngineConfig(n_buckets=n_buckets, salt_buckets=salt_buckets)
+    cfg = EngineConfig(n_buckets=32, salt_buckets=16)
     table = LakeTable(spark, f"{workdir}/table", key_cols=["repo", "path"],
-                      n_buckets=n_buckets, write_mode=write_mode)
+                      n_buckets=32)
     pipe = CDCPipeline(spark, log_dir, table, f"{workdir}/ckpt", cfg=cfg,
                        use_pandas_udfs=True, collect_lineage=True, flatten_props=True)
     t0 = time.time()
@@ -277,24 +269,12 @@ def apply_once(spark, n_events: int, log_dir: str, n_files: int, workdir: str,
     wall = time.time() - t0
     rows = table.read().count()
     lease = pipe.current_lease()
-    # per-micro-batch walls, derived AFTER timing from the lease ring's
-    # commit mtimes (each batch_<id>.json is written at its commit): batch i
-    # wall ~= mtime(i) - mtime(i-1), batch 0 from t0. Zero probe overhead;
-    # the droop diagnosis (is per-batch cost flat or growing across a replay?)
-    # reads these directly. Ring names parse like the ring pruner's; a
-    # malformed batch_*.json is skipped, not fatal to the finished run.
-    hist = sorted((p for p in glob.glob(f"{workdir}/table/_lease/batch_*.json")
-                   if _hist_version(p) >= 0), key=_hist_version)
-    mt = [os.path.getmtime(p) for p in hist]
-    batch_walls = ([round(mt[0] - t0, 2)] if mt else []) + [
-        round(b - a, 2) for a, b in zip(mt, mt[1:])]
     return {
         "events": n_events,
         "wall_sec": round(wall, 2),
         "events_per_sec": round(n_events / wall, 1),
         "final_rows": rows,
         "batches": int(lease["batch_id"]) + 1 if lease else None,
-        "batch_walls": batch_walls,
     }
 
 
@@ -382,577 +362,6 @@ def apply_probe(cores: int, n_events: int, workdir: str, repeats: int = 1) -> di
     return stats
 
 
-def skew_probe(cores: int, n_events: int, salt_buckets: int,
-               log_dir: str, workdir: str, repeats: int = 1) -> dict:
-    """Best-of-`repeats` timed apply over a HOT-SKEWED log (one repo = 50% of
-    all events) at the given salt_buckets; fresh process per probe, warm-up
-    first. repeats=2 puts the minimum in the steady-state regime — the first
-    16M-scale apply in a fresh JVM pays a fixed ~100 s warm-state cost that
-    the 1M-event warm-up does not fully absorb (r3 session-D finding), which
-    at repeats=1 is the same order as the skew effect being measured.
-
-    The E17 invariant (salted == unsalted result) is unit-tested; this probe
-    produces the SCALE evidence the north rule names: with 8M of 16M events on
-    a single repo key, the unsalted control (salt_buckets=1) funnels the whole
-    hot repo through one partition in the pre-UDF repartition, while the
-    salted run spreads it over 16. Identical final_rows, different wall.
-    The log is generated once and shared across probes (deterministic seed)."""
-    spark = _session(cores, f"cdc-skew-{salt_buckets}")
-    n_files = gen_log(spark, n_events, log_dir, body_repeat=1,
-                      n_files=SCALING_FILES, hot_repo_fraction=0.5)
-    stats = best_of(spark, cores, workdir, repeats, max(200_000, n_events // 16),
-                    lambda d: apply_once(spark, n_events, log_dir, n_files, d,
-                                         n_batches=2, salt_buckets=salt_buckets),
-                    n_files=8)
-    spark.stop()
-    stats["salt_buckets"] = salt_buckets
-    return stats
-
-
-def _du(path: str) -> int:
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for fn in files:
-            try:
-                total += os.path.getsize(os.path.join(root, fn))
-            except OSError:
-                pass
-    return total
-
-
-def writemode_probe(cores: int, n_events: int, mode: str, workdir: str,
-                    repeats: int = 2, n_inc: int = 8,
-                    inc_events: int = 250_000) -> dict:
-    """cow-vs-mor at the shape where the trade actually exists: INCREMENTAL
-    batches against a large base table. (A first cut of this probe timed the
-    2-batch base build itself — but full-coverage batches write ~identical
-    bytes under both modes by construction, since every bucket's content is
-    ~all new either way; those records stay in the history stamped
-    probe_ver=1, excluded from the section.)
-
-    Build the base table from the n_events scaling log (untimed), then apply
-    `n_inc` pre-materialized incremental batches of `inc_events` events each
-    (timed, best-of-`repeats` with a fresh base each repeat): cow rewrites
-    every affected bucket per batch — at the bench shape each small batch
-    touches all 32 buckets, so bytes/batch ≈ the whole table — while mor
-    appends only the batch's per-key winners, deferring the rewrite to
-    compact(). Records wall, du-delta of the data dir across the incremental
-    phase (== bytes written), warm read-back (mor pays per-bucket LWW until
-    compaction), and mor's compact()+read cost."""
-    from change_data_capturer_ms_spark.config import EngineConfig
-    from change_data_capturer_ms_spark.lake.table import LakeTable
-    from change_data_capturer_ms_spark.sources.changelog import gen_changelog
-    from change_data_capturer_ms_spark.streaming.pipeline import prepare_batch
-
-    spark = _session(cores, f"cdc-wm-{mode}")
-    n_files = gen_log(spark, n_events, f"{workdir}/log", SCALING_BODY_REPEAT,
-                      SCALING_FILES)
-    # pre-materialize the incremental waves once (untimed). The waves churn a
-    # ~2% hot subset of the base repos (ids are a prefix of the base id
-    # space, so every merge hits existing keys): a uniform wave over the
-    # whole key universe would touch ~every ROW — at which point cow and mor
-    # write the same bytes by construction and the probe measures nothing.
-    # Small-batch-vs-big-table is the steady-state CDC shape the write-mode
-    # knob exists for.
-    n_repos = max(200, n_events // 1000)
-    inc_repos = max(20, n_repos // 50)
-    inc_dirs = []
-    for i in range(n_inc):
-        p = f"{workdir}/inc{i}"
-        if not os.path.exists(f"{p}/_SUCCESS"):
-            (gen_changelog(spark, inc_events, seed=42, n_repos=inc_repos,
-                           paths_per_repo=50, body_repeat=SCALING_BODY_REPEAT,
-                           start_seq=n_events + i * inc_events)
-             .write.mode("overwrite").parquet(p))
-        inc_dirs.append(p)
-    cfg = EngineConfig(n_buckets=32, salt_buckets=16)
-    runs = []
-    for rep in range(repeats):
-        d = f"{workdir}/timed{rep}"
-        apply_once(spark, n_events, f"{workdir}/log", n_files, d,
-                   n_batches=2, write_mode=mode)  # untimed base build
-        tbl = LakeTable(spark, f"{d}/table", key_cols=["repo", "path"])
-        base_bytes = _du(f"{d}/table/data")
-        t0 = time.time()
-        for i, p in enumerate(inc_dirs):
-            prepared = prepare_batch(spark.read.parquet(p), cfg,
-                                     use_pandas_udfs=True)
-            tbl.merge(prepared, seq_col="seq", op_col="op",
-                      batch_id=f"inc-{i}", source_id="wm-probe")
-        inc_wall = round(time.time() - t0, 2)
-        r = {"inc_wall_sec": inc_wall,
-             "inc_bytes": _du(f"{d}/table/data") - base_bytes,
-             "base_bytes": base_bytes,
-             "final_rows": tbl.read().count()}
-        r["read_sec"] = round(_wall(lambda: tbl.read().count())[0], 2)
-        if mode == "mor":
-            r["compact_sec"] = round(_wall(tbl.compact)[0], 2)
-            t, r["post_compact_rows"] = _wall(lambda: tbl.read().count())
-            r["post_compact_read_sec"] = round(t, 2)
-        _drop_repeat(spark, d)
-        runs.append(r)
-    spark.stop()
-    stats = min(runs, key=lambda x: x["inc_wall_sec"])
-    stats.update({
-        "probe_ver": 2, "cores": cores, "write_mode": mode,
-        "n_inc": n_inc, "inc_events": inc_events,
-        "all_inc_wall_sec": [x["inc_wall_sec"] for x in runs],
-        "read_sec": min(x["read_sec"] for x in runs),
-        "wall_sec": stats["inc_wall_sec"],  # campaign log line
-        "events_per_sec": round(n_inc * inc_events / stats["inc_wall_sec"], 1),
-    })
-    if mode == "mor":
-        stats["compact_sec"] = min(x["compact_sec"] for x in runs)
-        stats["post_compact_read_sec"] = min(
-            x["post_compact_read_sec"] for x in runs)
-    return stats
-
-
-def _writemode_section() -> str:
-    """cow-vs-mor write-amplification evidence from BENCH/writemode_probes.jsonl
-    (probe_ver=2: incremental batches against a built base table — the v1
-    records timed the full-coverage base build, where both modes write
-    ~identical bytes by construction; they stay in history, excluded here)."""
-    per: dict[str, dict] = {}
-    for h in read_history(WRITEMODE_HISTORY, stamped=True):
-        if h.get("probe_ver") != 2:
-            continue
-        # fold keyed by (mode, probe shape): a future probe at a different
-        # (n_events, n_inc, inc_events) must not merge into these minima
-        md = (h["write_mode"], h["n_events"], h["n_inc"], h["inc_events"])
-        r = per.setdefault(md, {"walls": [], "reads": [], "compacts": [],
-                                "bytes": [], "final_rows": h["final_rows"],
-                                "n_events": h["n_events"],
-                                "n_inc": h["n_inc"],
-                                "inc_events": h["inc_events"],
-                                "base_bytes": h["base_bytes"]})
-        r["walls"] += h.get("all_inc_wall_sec") or [h["inc_wall_sec"]]
-        r["reads"].append(h["read_sec"])
-        r["bytes"].append(h["inc_bytes"])
-        if "compact_sec" in h:
-            r["compacts"].append(h["compact_sec"]
-                                 + h.get("post_compact_read_sec", 0.0))
-    # render the most-sampled shape that has BOTH modes
-    shapes = sorted(
-        {k[1:] for k in per if k[0] == "cow"} & {k[1:] for k in per if k[0] == "mor"},
-        key=lambda s: (len(per[("cow",) + s]["walls"])
-                       + len(per[("mor",) + s]["walls"]), s),
-        reverse=True,
-    )
-    if not shapes:
-        return ""
-    shape = shapes[0]
-    c, mor = per[("cow",) + shape], per[("mor",) + shape]
-    same = c["final_rows"] == mor["final_rows"]
-    gb = 1024 ** 3
-
-    def row(md, r):
-        extra = (f"{min(r['compacts']):.1f}" if r["compacts"] else "—")
-        return (f"| {md} | {min(r['walls'])} — all: {sorted(r['walls'])} "
-                f"| {min(r['bytes']) / gb:.2f} | {min(r['reads']):.2f} "
-                f"| {extra} | {r['final_rows']:,} |\n")
-
-    rows = row("cow", c) + row("mor", mor)
-    b_cow, b_mor = min(c["bytes"]), min(mor["bytes"])
-    w_cow, w_mor = min(c["walls"]), min(mor["walls"])
-    return (
-        f"\n**Write mode: copy-on-write vs merge-on-read** — base table "
-        f"built from the {c['n_events']:,}-event scaling log "
-        f"({c['base_bytes'] / gb:.2f} GB, untimed), then {c['n_inc']} "
-        f"incremental batches x {c['inc_events']:,} events TIMED through the "
-        "full prepare+MERGE path; local[32], fresh process per probe, modes "
-        "interleaved, fresh base per repeat. The data dir retains every "
-        "version's files until expiry, so its du-delta across the "
-        "incremental phase is the phase's TOTAL write volume:\n\n"
-        "| write_mode | incremental wall s (best — all) | GB written "
-        "(incremental) | warm read s | compact+read s | final rows |\n"
-        "|---|---|---|---|---|---|\n" + rows +
-        f"\ncow wrote **{b_cow / b_mor:.1f}x** the bytes and took "
-        f"**{w_cow / w_mor:.1f}x** the wall of mor for the identical "
-        "incremental change stream: each small batch touches every bucket "
-        "(hash-scattered keys), so cow rewrites ~the whole table per batch "
-        "while mor appends only the batch's per-key winners and defers the "
-        "rewrite to one compact(). `final_rows` is "
-        + ("**identical**" if same else "**DIFFERENT (BUG)**")
-        + " under both modes. At 100 TB this is the headline cost knob for "
-        "steady-state ingest: mor's O(batch) writes win whenever per-batch "
-        "change volume is small relative to the affected buckets, with "
-        "compact() amortizing the rewrite on a schedule; cow keeps scans "
-        "single-file-per-bucket (no read-side LWW, no compaction debt). "
-        "The engine default stays cow for read-optimized tables, with mor "
-        "the documented opt-in for write-dominated deployments "
-        "(lake/table.py write_mode) — the evidence above is what to size "
-        "the choice on.\n"
-    )
-
-
-def pruning_probe(cores: int, n_events: int, workdir: str,
-                  n_buckets: int = 1024) -> dict:
-    """Measure the metadata-pruning stack on a lake bucketed the way the 100 TB
-    config is (EngineConfig scale note: O(10k-100k) buckets; 1024 here): what
-    fraction of files the manifest opens for point lookups (driver-side
-    bucket + zone maps), for an incremental read after a small late batch
-    (max_seq file stats — the read_incremental shape: a batch touching few
-    keys leaves most buckets cold), and batched lookup_many(N) wall vs the
-    naive full-scan broadcast join at N=100 and N=1000. The lake is built by
-    the same scaling-shape apply as the throughput probes (untimed); reads
-    are timed best-of-2. At 32 buckets these numbers degenerate by
-    construction (1000 keys cover every bucket) — bucket count is WHY the
-    100 TB config is 10k+."""
-    from pyspark.sql import functions as F
-
-    from change_data_capturer_ms_spark.config import EngineConfig
-    from change_data_capturer_ms_spark.lake.table import LakeTable
-    from change_data_capturer_ms_spark.sources.changelog import gen_changelog
-    from change_data_capturer_ms_spark.streaming.pipeline import prepare_batch
-
-    spark = _session(cores, "cdc-pruning")
-    n_files = gen_log(spark, n_events, f"{workdir}/log", SCALING_BODY_REPEAT,
-                      SCALING_FILES)
-    d = f"{workdir}/lake"
-    apply_once(spark, n_events, f"{workdir}/log", n_files, d, n_batches=2,
-               n_buckets=n_buckets)
-    tbl = LakeTable(spark, f"{d}/table", key_cols=["repo", "path"])
-    v_pre = tbl.manifest().version
-
-    # small late batch: 100 keys => at 1024 buckets ~90% of buckets stay cold
-    small = gen_changelog(spark, 5_000, seed=7, n_repos=2, paths_per_repo=50,
-                          start_seq=n_events)
-    prepared = prepare_batch(small, EngineConfig(n_buckets=n_buckets),
-                             use_pandas_udfs=False)
-    tbl.merge(prepared, seq_col="seq", op_col="op", batch_id="late-batch",
-              source_id="pruning-probe")
-    m = tbl.manifest()
-    total_files = len(m.files)
-
-    # scatter the sample across the key space (a bare limit() takes the first
-    # scanned file's rows => all keys in a handful of buckets, which would
-    # flatter the ratios); hash-ordering is deterministic
-    keys = [{"repo": r["repo"], "path": r["path"]}
-            for r in (tbl.read().select("repo", "path")
-                      .orderBy(F.xxhash64("repo", "path"))
-                      .limit(1000).collect())]
-
-    # point-lookup pruning: driver-side bucket + zone maps, per key
-    from change_data_capturer_ms_spark.functions.xxh64 import xxhash64_cols
-    types = {f.name: f.dataType.simpleString() for f in m.schema.fields}
-
-    # bucket hashes MUST come from m.bucket_key (resolves [] -> key_cols),
-    # never m.key_cols: a bucket_cols table would hash the wrong columns
-    def bucket(kv):
-        return xxhash64_cols([kv[k] for k in m.bucket_key],
-                             [types[k] for k in m.bucket_key]) % m.n_buckets
-
-    cand_counts = [len(tbl.candidate_files(
-        [(k, "=", kv[k]) for k in m.key_cols], buckets={bucket(kv)}))
-        for kv in keys[:50]]
-    lookup_frac = (sum(cand_counts) / len(cand_counts)) / total_files
-
-    # incremental read after the small batch: max_seq stats leave cold
-    # buckets' files unopened (read_incremental's exact pruning rule)
-    old_ms = int(tbl.manifest(v_pre).lease["metrics"]["max_seq"])
-    inc_files = len(tbl.candidate_files([("_last_seq", ">", old_ms)]))
-    t_inc, inc_rows = _wall(lambda: tbl.read_incremental(v_pre).count(), 2)
-
-    # batched point lookups vs naive full-scan broadcast join
-    out_n: dict[int, dict] = {}
-    for n_k in (100, 1000):
-        sub = keys[:n_k]
-        bks = {bucket(kv) for kv in sub}
-        lm_files = len({f.path for f in m.files if f.bucket in bks})
-        t_lm, lm_rows = _wall(lambda: tbl.lookup_many(sub).count(), 2)
-        key_df = spark.createDataFrame(
-            [(kv["repo"], kv["path"]) for kv in sub],
-            "repo string, path string")
-        t_naive, naive_rows = _wall(lambda: tbl.read().join(
-            F.broadcast(key_df), ["repo", "path"], "inner").count(), 2)
-        assert lm_rows == naive_rows, (n_k, lm_rows, naive_rows)
-        out_n[n_k] = {"files": lm_files,
-                      "files_frac": round(lm_files / total_files, 4),
-                      "lookup_many_sec": round(t_lm, 2),
-                      "naive_scan_sec": round(t_naive, 2),
-                      "rows": lm_rows}
-    spark.stop()
-    shutil.rmtree(d, ignore_errors=True)
-    return {
-        "n_events": n_events, "cores": cores, "n_buckets": n_buckets,
-        "total_files": total_files,
-        "lookup_files_frac": round(lookup_frac, 6),
-        "incremental_files": inc_files,
-        "incremental_files_frac": round(inc_files / total_files, 4),
-        "incremental_rows": inc_rows, "incremental_sec": round(t_inc, 2),
-        "batched": {str(k): v for k, v in out_n.items()},
-    }
-
-
-def _pruning_section() -> str:
-    """Pruning-stack evidence from BENCH/pruning_probes.jsonl."""
-    best = None
-    for h in read_history(PRUNING_HISTORY, stamped=True):
-        if best is None:
-            best = dict(h)
-        else:  # fold timing minima; structural fields are deterministic
-            best["incremental_sec"] = min(best["incremental_sec"],
-                                          h["incremental_sec"])
-            for n_k, b in h.get("batched", {}).items():
-                tgt = best["batched"].get(n_k)
-                if tgt:
-                    for k in ("lookup_many_sec", "naive_scan_sec"):
-                        tgt[k] = min(tgt[k], b[k])
-    if best is None:
-        return ""
-    lines = []
-    for n_k, b in sorted(best["batched"].items(), key=lambda x: int(x[0])):
-        lines.append(
-            f"- `lookup_many(N={n_k})`: opens {b['files']}/"
-            f"{best['total_files']} files ({b['files_frac'] * 100:.1f}%); "
-            f"**{b['lookup_many_sec']} s** vs {b['naive_scan_sec']} s naive "
-            f"full-scan broadcast join (identical {b['rows']:,} rows, "
-            f"{b['naive_scan_sec'] / max(b['lookup_many_sec'], 0.01):.1f}x)")
-    return (
-        f"\n**Metadata pruning stack** — lake built by the same "
-        f"{best['n_events']:,}-event scaling-shape apply at the 100 TB-shaped "
-        f"bucket count ({best['n_buckets']} buckets, {best['total_files']} "
-        "live files; EngineConfig's scale note says O(10k-100k) buckets in "
-        "production — at the sandbox's 32-bucket default these ratios "
-        "degenerate by construction since 1000 keys cover every bucket), "
-        "then one small late batch (100 keys) merged on top; local[32], "
-        "timings best-of over probe history:\n\n"
-        f"- point lookup (driver-side xxh64 bucket + zone maps): opens "
-        f"**{best['lookup_files_frac'] * 100:.2f}%** of files (avg over 50 "
-        "keys) before any scan task exists\n"
-        f"- incremental read after the small batch "
-        f"(`read_incremental`, max_seq file stats): opens "
-        f"**{best['incremental_files']}/{best['total_files']}** files "
-        f"({best['incremental_files_frac'] * 100:.1f}%) for "
-        f"{best['incremental_rows']:,} changed rows in "
-        f"{best['incremental_sec']} s — cold buckets are never opened, so "
-        "tailing the lake costs O(changed), not O(table)\n"
-        + "\n".join(lines) +
-        "\n\nAt 100 TB the naive denominators grow with the table while the "
-        "pruned paths stay O(matching files + N); the bucket count is the "
-        "knob that keeps N point lookups from covering every bucket.\n"
-    )
-
-
-def _synth_docs(spark, n: int, id_offset: int = 0, salt: int = 0):
-    """Deterministic 40-token documents over a 500-word vocabulary, fully
-    JVM-side (xxhash64-derived tokens) — the corpus generator for the
-    index-scale probe. Same (id, salt) always yields the same text, so an
-    update's old_text is re-derivable exactly."""
-    from pyspark.sql import functions as F
-
-    idl = F.col("id") + F.lit(id_offset)
-    return spark.range(n).select(
-        idl.cast("string").alias("doc_id"),
-        F.concat_ws(" ", F.transform(
-            F.sequence(F.lit(1), F.lit(40)),
-            lambda i: F.concat(F.lit("w"), F.pmod(
-                F.xxhash64(idl * F.lit(997) + i.cast("long") * F.lit(1000003)
-                           + F.lit(salt * 7919)),
-                F.lit(500)).cast("string")))).alias("text"),
-        idl.alias("seq"))
-
-
-def _synth_vecs(spark, n: int, id_offset: int = 0, salt: int = 0, dim: int = 64):
-    """Deterministic pseudo-random embeddings in [-1, 1]^dim, JVM-side."""
-    from pyspark.sql import functions as F
-
-    idl = F.col("id") + F.lit(id_offset)
-    return spark.range(n).select(
-        idl.cast("string").alias("vec_id"),
-        F.transform(
-            F.sequence(F.lit(1), F.lit(dim)),
-            lambda j: (F.pmod(
-                F.xxhash64(idl * F.lit(64) + j.cast("long") + F.lit(salt * 7919)),
-                F.lit(2001)) - F.lit(1000)) / F.lit(1000.0)).alias("embedding"),
-        idl.alias("seq"))
-
-
-def index_scale_probe(cores: int, workdir: str,
-                      lsh_sizes=(5_000, 50_000), lsh_batch: int = 500,
-                      ann_sizes=(2_000, 20_000), ann_batch: int = 200,
-                      n_batches: int = 6) -> list[dict]:
-    """The O(changed) claim for the incremental indexes, measured at 10x the
-    unit scale (round-4 verdict #4): bootstrap each index at a SMALL and a
-    10x corpus, then apply `n_batches` identical-size maintenance batches
-    (80% inserts / 20% updates with exact old values, monotone seqs) to each
-    and probe 200 items after every merge. If maintenance is O(batch) the
-    per-batch wall is ~flat across the two corpus sizes; if it secretly
-    rescans the corpus it grows ~10x. Probe walls while merges run land in
-    the same records. One history record per (kind, corpus), written here:
-    the worker is run directly, not through a campaign piece."""
-    from pyspark.sql import functions as F
-
-    from change_data_capturer_ms_spark.operators import (
-        EmbeddingANNIndex,
-        MinHashLSHIndex,
-    )
-
-    spark = _session(cores, "cdc-index-scale")
-
-    def run(kind, corpus_n, batch_size):
-        d = f"{workdir}/{kind}_{corpus_n}"
-        shutil.rmtree(d, ignore_errors=True)
-        if kind == "lsh":
-            idx = MinHashLSHIndex(spark, f"{d}/idx", n_buckets=64)
-            gen, id_c, old_c, new_c, val_c = (
-                _synth_docs, "doc_id", "old_text", "new_text", "text")
-            null_t, probe_kw = "string", {}
-        else:
-            idx = EmbeddingANNIndex(spark, f"{d}/idx", bits=4, n_buckets=32)
-            gen, id_c, old_c, new_c, val_c = (
-                _synth_vecs, "vec_id", "old_vec", "new_vec", "embedding")
-            null_t, probe_kw = "array<double>", {"k": 5}
-        base = gen(spark, corpus_n)
-        boot = base.select(
-            id_c, F.lit(None).cast(null_t).alias(old_c),
-            F.col(val_c).alias(new_c), "seq")
-        boot_sec = _wall(lambda: idx.update(boot, batch_id=0))[0]
-        probe_src = gen(spark, 200)
-        n_upd = batch_size // 5
-        n_ins = batch_size - n_upd
-        batch_walls, probe_walls = [], []
-        for b in range(n_batches):
-            seq_base = 10_000_000 * (b + 1)
-            ins = gen(spark, n_ins, id_offset=corpus_n + b * n_ins).select(
-                id_c, F.lit(None).cast(null_t).alias(old_c),
-                F.col(val_c).alias(new_c),
-                (F.col("seq") + seq_base).alias("seq"))
-            # update ids disjoint across batches, so old value is always the
-            # bootstrap (salt 0) value — index_delta retracts exact old rows
-            old = gen(spark, n_upd, id_offset=b * n_upd)
-            new = gen(spark, n_upd, id_offset=b * n_upd, salt=b + 1)
-            upd = old.select(
-                id_c, F.col(val_c).alias(old_c), "seq").join(
-                new.select(id_c, F.col(val_c).alias(new_c)), id_c).select(
-                id_c, old_c, new_c, (F.col("seq") + seq_base).alias("seq"))
-            changes = ins.unionByName(upd)
-            batch_walls.append(round(_wall(
-                lambda: idx.update(changes, batch_id=b + 1))[0], 3))
-            probe_walls.append(round(_wall(
-                lambda: idx.probe(probe_src, **probe_kw).count())[0], 3))
-        shutil.rmtree(d, ignore_errors=True)
-        return {"probe_ver": 1, "kind": kind, "cores": cores,
-                "corpus": corpus_n, "batch_size": batch_size,
-                "n_batches": n_batches,
-                "bootstrap_sec": round(boot_sec, 3),
-                "items_per_sec": round(corpus_n / boot_sec, 1),
-                "batch_walls": batch_walls, "probe_walls": probe_walls}
-
-    # interleave sizes (small, big, small, big) so a host-noise wave cannot
-    # land entirely on one corpus size
-    recs = ([run("lsh", c, lsh_batch) for c in lsh_sizes]
-            + [run("ann", c, ann_batch) for c in ann_sizes])
-    spark.stop()
-    for r in recs:
-        record(INDEX_SCALE_HISTORY, r)
-    return recs
-
-
-def _index_scale_section() -> str:
-    """O(changed)-maintenance evidence from BENCH/index_scale_probes.jsonl:
-    per (kind, corpus, batch_size), fold batch/probe walls across history and
-    report medians; the flatness ratio compares the largest vs smallest
-    corpus at the same batch size."""
-    per: dict[tuple, dict] = {}
-    for h in read_history(INDEX_SCALE_HISTORY, stamped=True):
-        if h.get("probe_ver") != 1:
-            continue
-        key = (h["kind"], h["corpus"], h["batch_size"])
-        r = per.setdefault(key, {"batch_walls": [], "probe_walls": [],
-                                 "boot": float("inf")})
-        r["batch_walls"] += h["batch_walls"]
-        r["probe_walls"] += h["probe_walls"]
-        r["boot"] = min(r["boot"], h["bootstrap_sec"])
-    if not per:
-        return ""
-    lines = ["| index | corpus | batch size | bootstrap s | batch wall s "
-             "(median, n) | probe-200 s (median) |",
-             "| --- | --- | --- | --- | --- | --- |"]
-    flat = []
-    for kind in ("lsh", "ann"):
-        for (k, c, bs), r in sorted(per.items()):
-            if k != kind:
-                continue
-            lines.append(
-                f"| {k} | {c:,} | {bs} | {r['boot']:.1f} "
-                f"| {statistics.median(r['batch_walls']):.2f} "
-                f"(n={len(r['batch_walls'])}) "
-                f"| {statistics.median(r['probe_walls']):.2f} |")
-        # flatness compares corpus sizes within ONE batch size: a ratio
-        # across batch sizes would price the batch, not the corpus
-        batch_sizes = sorted({bs for k, _c, bs in per if k == kind})
-        for bs in batch_sizes:
-            sizes = sorted(c for k, c, b in per if k == kind and b == bs)
-            if len(sizes) < 2:
-                continue
-            lo, hi = per[kind, sizes[0], bs], per[kind, sizes[-1], bs]
-            label = f"{kind} (batch {bs})" if len(batch_sizes) > 1 else kind
-            ratio = (statistics.median(hi["batch_walls"])
-                     / statistics.median(lo["batch_walls"]))
-            flat.append(f"{label}: {ratio:.2f}x batch wall at "
-                        f"{sizes[-1] // sizes[0]}x corpus")
-    return (
-        "\n**Incremental-index maintenance at 10x corpus** — each index "
-        "bootstrapped at two corpus sizes (deterministic synthetic docs/"
-        "vectors), then identical-size maintenance batches (80% insert / "
-        "20% update-with-exact-old, monotone seqs) merged exactly-once, "
-        "probe-200 timed after every merge; fresh process, sizes "
-        "interleaved, medians over probe history:\n\n"
-        + "\n".join(lines) +
-        "\n\nFlatness (batch wall vs corpus size): " + "; ".join(flat) +
-        " — maintenance cost tracks BATCH size, not corpus size (the "
-        "O(changed) claim); a corpus-rescanning implementation would show "
-        "~10x. Probe latency is measured between live merges on the same "
-        "session. The ANN probe wall DOES grow with corpus (~3x at 10x): at "
-        "fixed bits=4 each query scans ~(bits+1)/2^bits of the corpus "
-        "(hamming-1 multiprobe over 16 sign-bit buckets) — sublinear needs "
-        "bits to grow with log(corpus), an operator knob, not a plan flaw; "
-        "the LSH probe stays flat because its candidate set is bounded by "
-        "true near-dups (band buckets), not a corpus fraction.\n"
-    )
-
-
-def _skew_section() -> str:
-    """Hot-key skew evidence folded from BENCH/skew_probes.jsonl."""
-    per: dict[int, dict] = {}
-    for h in read_history(SKEW_HISTORY, stamped=True):
-        s = int(h["salt_buckets"])
-        r = per.setdefault(s, {"walls": [], "final_rows": h["final_rows"],
-                               "n_events": h["n_events"]})
-        r["walls"] += h.get("all_wall_sec") or [h["wall_sec"]]
-    # the rendered comparison is salted-16 vs unsalted-1; other salt values
-    # may exist in history (the CLI accepts any) — require the pair, don't
-    # crash every consolidate over an experimental sample
-    if 16 not in per or 1 not in per:
-        return ""
-    n = per[16]["n_events"]
-    b16, b1 = min(per[16]["walls"]), min(per[1]["walls"])
-    same = per[16]["final_rows"] == per[1]["final_rows"]
-    rows = "".join(
-        f"| salt_buckets={s} ({'salted' if s > 1 else 'unsalted control'}) "
-        f"| {min(r['walls'])} — all: {sorted(r['walls'])} "
-        f"| {n / min(r['walls']):,.0f} | {r['final_rows']:,} |\n"
-        for s, r in sorted(per.items(), reverse=True)
-    )
-    return (
-        f"\n**Hot-key skew (E17 at bench scale)** — {n:,} events with ONE repo "
-        "carrying 50% of all events (north-rule hot-repo scenario), full "
-        "pipeline, local[32], fresh process per probe, interleaved "
-        "salted/unsalted:\n\n"
-        "| config | wall s (best — all) | events/s (best) | final rows |\n"
-        "|---|---|---|---|\n" + rows +
-        f"\nSalting the pre-UDF repartition is **{b1 / b16:.2f}x** faster under "
-        "50% hot-key skew; `final_rows` is " +
-        ("**identical**" if same else "**DIFFERENT (BUG)**") +
-        " in both configs (the salt is a pure function of the key, so "
-        "semantics cannot change — operators/dedupe.py salted_repartition). "
-        "At 10^10 events the unsalted shape is not merely slow: one partition "
-        "holds the hot repo's entire history, which no executor can hold.\n"
-    )
-
-
 def bench_queries(spark, sf_dir: str) -> tuple[dict[str, float], dict[str, float]]:
     """Returns (folded best-of-history per query, this run's best-of-2).
 
@@ -1003,96 +412,11 @@ def _fold_queries(sf: float, best: dict[str, float],
     return folded
 
 
-def bench_merge_cold(spark, sf_dir: str) -> dict:
-    """Cold-build MERGE timing — the honest counterpart to the HEADLINE
-    `merge_upsert` number.
-
-    `q_merge_upsert` caches its two-batch lake under /tmp keyed by _VER, so
-    the HEADLINE sample measures warm READ-BACK once the lake exists (r2's
-    0.196 s was that artifact, not a merge speedup). This benchmark tears the
-    lake down and times create + two MERGE batches + final read, best-of-2
-    with teardown between samples, folded against history like every other
-    query. Both numbers are reported, labeled, so round-over-round totals
-    compare like-for-like."""
-    import __spark_entry__ as entrymod
-
-    sf = _sf_tag(sf_dir)
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    path = f"/tmp/cdc_q_merge_{entrymod._VER}_{tag}"
-    fn = entrymod.queries()["merge_upsert"]
-    samples = []
-    for _ in range(2):
-        shutil.rmtree(path, ignore_errors=True)
-        t, rows = _wall(lambda: fn(spark, sf_dir).count())
-        samples.append(round(t, 3))
-    folded = _fold_queries(sf, {"merge_upsert_cold": min(samples)},
-                           {"merge_upsert_cold": rows})["merge_upsert_cold"]
-    return {"cold_build_sec": folded, "this_run": samples, "rows": rows,
-            "note": "teardown + create + 2 MERGE batches + read; the "
-                    "HEADLINE merge_upsert is the warm read-back"}
-
-
-def bench_indexes(spark, sf_dir: str) -> dict:
-    """Incremental-index throughput at the sf dir: bootstrap the full
-    documents/embeddings tables into fresh indexes (update cost includes the
-    exactly-once MERGE commit) and probe a 200-row batch — the per-micro-batch
-    question the indexes exist to answer. Best-of-2 on fresh index dirs."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from change_data_capturer_ms_spark.operators import (
-        EmbeddingANNIndex,
-        MinHashLSHIndex,
-    )
-
-    def table(name, id_col, val_col):
-        return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet")).select(
-            F.col(id_col).cast("string").alias(id_col), val_col,
-            F.col(id_col).cast("long").alias("seq"))
-
-    docs = table("documents", "doc_id", "text")
-    vecs = table("embeddings", "vec_id", "embedding")
-    # name: (items, count/rate keys, index factory, bootstrap changes, probe)
-    specs = {
-        "lsh_text": (
-            docs, "docs", "docs_per_sec",
-            lambda d: MinHashLSHIndex(spark, d, n_buckets=32),
-            docs.select("doc_id", F.lit(None).cast("string").alias("old_text"),
-                        F.col("text").alias("new_text"), "seq"),
-            lambda idx: idx.probe(docs.limit(200))),
-        "ann_embed": (
-            vecs, "vectors", "vecs_per_sec",
-            lambda d: EmbeddingANNIndex(spark, d, bits=4, n_buckets=16),
-            vecs.select("vec_id",
-                        F.lit(None).cast("array<double>").alias("old_vec"),
-                        F.col("embedding").cast("array<double>").alias("new_vec"),
-                        "seq"),
-            lambda idx: idx.probe(vecs.limit(200), k=5)),
-    }
-    out: dict = {}
-    for name, (items, n_key, rate_key, make, changes, probe) in specs.items():
-        n = items.count()
-        best_u = best_p = float("inf")
-        for _ in range(2):
-            d = tempfile.mkdtemp(prefix=f"cdc_bench_{name}_")
-            idx = make(f"{d}/idx")
-            best_u = min(best_u, _wall(lambda: idx.update(changes, batch_id=0))[0])
-            best_p = min(best_p, _wall(lambda: probe(idx).count())[0])
-            shutil.rmtree(d, ignore_errors=True)
-        out[name] = {n_key: n, "bootstrap_sec": round(best_u, 3),
-                     rate_key: round(n / best_u, 1),
-                     "probe200_sec": round(best_p, 3)}
-    return out
-
-
 def _apply_record(r: dict, n_events: int) -> None:
     """Record one apply probe's walls (and its host-CPU stamp, when it ran
     through run_probe) in BENCH/probes.jsonl."""
     rec = {"n_events": n_events, "cores": r["cores"],
            "walls": r["all_wall_sec"], "final_rows": r["final_rows"]}
-    if r.get("batch_walls"):
-        rec["batch_walls"] = r["batch_walls"]  # best run's per-micro-batch walls
     rec.update({k: r[k] for k in ("steal_pct", "sys_pct", "user_pct") if k in r})
     record(PROBE_HISTORY, rec)
 
@@ -1130,143 +454,6 @@ def _pair_effs(walls: dict[int, float]) -> dict[tuple[int, int], float]:
     config's speed-up over N, divided by 4 (1.0 = linear)."""
     return {(lo, hi): walls[lo] / (4 * walls[hi])
             for lo, hi in N4N_PAIRS if lo in walls and hi in walls}
-
-
-def _input_linearity_section(base_events: int) -> str:
-    """Input-scaling evidence from the probe history: best local[32] wall per
-    input size at the SCALING shape (n_events >= 16M — the 2M headline probes
-    use a different log shape and are not comparable). Flat events/s as the
-    input grows 4x is the profile a 10^10-event ingest extrapolation needs."""
-    per: dict[int, float] = {}
-    counts: dict[int, int] = {}
-    bwalls: dict[int, list] = {}  # best record's per-micro-batch walls
-    for h in read_history(PROBE_HISTORY, stamped=True):
-        if int(h.get("cores", 0)) != 32 or h.get("n_events", 0) < 16_000_000:
-            continue
-        if len(h.get("walls", [])) < 2:
-            # crashed probe (empty) or a single-repeat record: the first
-            # apply in a fresh JVM pays a fixed ~100 s warm-state cost,
-            # so a repeats=1 wall is a first-run sample — folding it into
-            # the steady-state minima would contradict the table's stated
-            # methodology (ADVICE r4: the 128M 167.05 single-wall record)
-            continue
-        n = int(h["n_events"])
-        if h.get("batch_walls"):
-            bwalls.setdefault(n, []).append(
-                (min(h["walls"]), h["batch_walls"]))
-        per[n] = min(per.get(n, float("inf")), *h["walls"])
-        counts[n] = counts.get(n, 0) + len(h["walls"])
-    if len(per) < 2:
-        return ""
-    rows = "".join(
-        f"| {n:,} | {per[n]} | {n / per[n]:,.0f} | {counts[n]} |\n"
-        for n in sorted(per)
-    )
-    ns = sorted(per)
-    lo, hi = ns[0], ns[-1]
-    ratio = (hi / per[hi]) / (lo / per[lo])
-    return (
-        "\n**Input linearity (local[32], same scaling-shape job, growing "
-        "input)** — throughput must hold as the LOG grows, or no cluster "
-        "size rescues a 10^10-event ingest. Minima compare steady-state to "
-        "steady-state: every size folds repeats>=2 probes, because the FIRST "
-        "apply in a fresh JVM pays a fixed ~100 s warm-state cost (JIT/heap "
-        "ramp — /proc/diskstats shows zero disk reads during probes, so it "
-        "is not paging) that a long-running service's later micro-batches "
-        "never see; first-run-only sampling at large sizes would misread "
-        "that fixed cost as sub-linearity:\n\n"
-        "| events | best wall s | events/s (best) | samples |\n|---|---|---|---|\n"
-        + rows +
-        f"\nThroughput at {hi // 1_000_000}M events is **{ratio:.2f}x** the "
-        f"{lo // 1_000_000}M-event rate (1.0 = perfectly flat; >1 = fixed "
-        "per-run costs amortizing away, the expected direction).\n"
-        + _droop_attribution(bwalls)
-    )
-
-
-def _droop_attribution(bwalls: dict[int, list]) -> str:
-    """Attribute sub-linearity at the largest input from per-micro-batch
-    walls (recorded from lease-ring commit mtimes since r5): a CONSISTENT
-    rise across every replay = accumulation cost (cow MERGE re-unions each
-    affected bucket's accumulated rows as the lake grows); no consistent
-    gradient = per-batch fixed cost + host weather. The verdict is computed
-    from ALL instrumented runs, not asserted — a single run's gradient flips
-    sign with host weather on this box."""
-    biggest = max(bwalls) if bwalls else 0
-    runs = [(w, bw) for w, bw in bwalls.get(biggest, []) if len(bw) >= 3]
-    if not runs:
-        return ""
-    shown = "; ".join(f"run wall {w:.0f}s -> batches {bw}"
-                      for w, bw in sorted(runs))
-    # steady-state gradient per run: last batch vs batch 1 (batch 0 carries
-    # stream-start ramp)
-    rising = [bw[-1] > bw[1] * 1.15 for _w, bw in runs]
-    if all(rising) and len(runs) >= 2:
-        verdict = (
-            "Later batches run consistently slower in EVERY replay: each "
-            "copy-on-write MERGE unions the incoming batch with the affected "
-            "buckets' ACCUMULATED rows, so with full-coverage batches "
-            "per-batch cost grows with lake size — the droop is "
-            "accumulation. Merge-on-read (write-mode section) bounds "
-            "per-batch write work by the BATCH and is the knob for this.")
-    elif not any(rising):
-        verdict = (
-            "Per-batch walls show no rise across any replay — the droop is "
-            "per-batch fixed overhead (trigger/planning/commit cycles: more "
-            "batches at larger input under the 32M cap) plus cross-era host "
-            "noise, not state accumulation.")
-    else:
-        verdict = (
-            "The gradient's SIGN flips between replays (rising in some, "
-            "falling in others) — per-batch walls track host weather, not "
-            "lake growth, so the droop cannot be attributed to state "
-            "accumulation; the residual is per-batch fixed overhead (twice "
-            "as many trigger/planning/commit cycles as 64M under the 32M "
-            "micro-batch cap) plus cross-era noise. The accumulation axis "
-            "is separately priced by the write-mode section (merge-on-read "
-            "bounds per-batch work by the batch).")
-    return (f"\nPer-micro-batch walls at {biggest // 1_000_000}M (derived "
-            "from lease-ring commit mtimes, zero timing overhead): "
-            + shown + ". " + verdict + "\n")
-
-
-def _steal_section(n_events: int) -> str:
-    """Measured host-weather evidence: probes recorded since r3-session-D
-    carry the /proc/stat steal%% observed across that probe's subprocess
-    (run_probe). This turns the 'the 8→32 pair collapses under
-    hypervisor noise' inference into a measurement: pair efficiencies are
-    recomputed over QUIET samples only (steal < 5%%) and reported next to the
-    all-weather numbers."""
-    per: dict[int, list[tuple[float, float]]] = {}
-    for h in read_history(PROBE_HISTORY, stamped=True):
-        if (h.get("n_events") == n_events and h.get("walls")
-                and "steal_pct" in h):
-            per.setdefault(int(h["cores"]), []).append(
-                (h["steal_pct"], min(h["walls"])))
-    if not per:
-        return ""
-    quiet = {c: [w for s, w in v if s < 5.0] for c, v in per.items()}
-    rows = "".join(
-        f"| local[{c}] | {len(v)} | "
-        + ", ".join(f"{s:.1f}%→{w:.1f}s" for s, w in sorted(v)[:8])
-        + (" …" if len(v) > 8 else "")
-        + (f" | {min(quiet[c]):.2f} |" if quiet[c] else " | — |") + "\n"
-        for c, v in sorted(per.items())
-    )
-    pair_lines = [
-        f"- local[{lo}] → local[{hi}] (quiet samples only): **{e:.3f}**"
-        for (lo, hi), e in _pair_effs(
-            {c: min(w) for c, w in quiet.items() if w}).items()]
-    return (
-        "\n**Measured host weather per probe** — each probe subprocess "
-        "records the hypervisor steal% across its own run (/proc/stat "
-        "delta, `bench.py --campaign`). 'Quiet' = steal < 5%:\n\n"
-        "| config | samples w/ steal | (steal → best wall) samples | "
-        "quiet best wall s |\n|---|---|---|---|\n" + rows +
-        ("\nQuiet-window N→4N efficiencies (same minima rule, quiet "
-         "samples only):\n\n" + "\n".join(pair_lines) + "\n"
-         if pair_lines else "")
-    )
 
 
 def _same_window_pairs_section(n_events: int) -> str:
@@ -1383,8 +570,8 @@ def write_baseline_md(n_events: int, results: dict[int, dict]) -> None:
             "runs went 2→4 micro-batches — same per-event work, different "
             "run configuration — so r3c-stamped records from before that "
             "boundary (inferred by timestamp at the config commit) are "
-            "likewise provenance-only and excluded from minima, pair ratios "
-            "and the linearity table.\n\n"
+            "likewise provenance-only and excluded from minima and pair "
+            "ratios.\n\n"
             "| config | events/s (best) | wall sec (best — all observed) | final rows |\n"
             "|---|---|---|---|\n"
             + rows +
@@ -1412,63 +599,16 @@ def write_baseline_md(n_events: int, results: dict[int, dict]) -> None:
             "per kernel, so per-node IPC contention stays constant where "
             "this single-host proxy compounds it.\n\n"
             + headline32 +
-            _steal_section(n_events) +
             _same_window_pairs_section(n_events) +
-            _input_linearity_section(n_events) +
-            "\n**Shuffle sizing at growing batch size** (r3 A/B, "
-            "interleaved fresh-process runs; measured under "
-            "the pre-r3c pipeline — the classify UDF was dead-code-pruned "
-            "there, so the COMPARATIVE conclusion carries, not the absolute "
-            "walls): with a flat "
-            "shuffle partition count (cores·2 = 64) a 64M-event run pushes "
-            "~600 MB per shuffle partition and spills; AQE "
-            "`initialPartitionNum = 8×shuffle` (engine default since r3, "
-            "session.py) measured 17–23% faster inside the same host-weather "
-            "window (112.9 vs 136.4 s; 93.6 vs 120.9 s), identical "
-            "`final_rows`. A flat raise to 256 was NOT equivalent (155.2/89.2 "
-            "s — unstable): the split must come with AQE coalescing or small "
-            "stages pay the fan-out. At cluster scale this is the difference "
-            "between re-tuning `spark.sql.shuffle.partitions` per input and "
-            "letting the engine size reducers from actual map output.\n"
-            "\n**Compression codecs** (r3 A/B/C/D, 64M "
-            "events, interleaved fresh-process runs kept out of official "
-            "history; pre-r3c pipeline — "
-            "comparative result only, absolute walls are the lighter plan's): "
-            "parquet-zstd (B), "
-            "shuffle-io-zstd (C), and both (D) vs Spark defaults (A: snappy "
-            "parquet, lz4 shuffle). In the two QUIET host windows the "
-            "ordering was consistent and monotone in compression CPU added — "
-            "A 73.4/76.6 s, B 77.1/82.5, C 77.6/81.7, D 81.5/81.0 — so the "
-            "engine KEEPS the defaults: this bench's 9.6 GB lake is fully "
-            "page-cache-resident (125 GB RAM), making local IO nearly free "
-            "and zstd pure CPU cost. Apparent 10-13% zstd wins in earlier "
-            "noisy windows did not survive the quiet-window replication. The "
-            "at-scale story differs: parquet-zstd shrank the same lake 41% "
-            "(5.7 vs 9.6 GB), which wins when the lake lives on object "
-            "storage and shuffles cross a network — cluster profiles opt in "
-            "via `get_spark(extra_conf={'spark.sql.parquet.compression."
-            "codec': 'zstd'})`; identical `final_rows` under every codec.\n"
-            "\n**Arrow batch size** (r3 A/B, 16M "
-            "events on the CURRENT r3c pipeline, 3 interleaved fresh-process "
-            "rounds, steady-state repeats, results in "
-            "BENCH/ab_arrow_results.jsonl): 64k rows per Arrow batch beat "
-            "the 10k default in EVERY round — 33.28 vs 35.97 s, 28.01 vs "
-            "35.15 s, 27.00 vs 31.74 s (8-20% faster, identical "
-            "`final_rows`) — confirming the pandas-UDF stage is bounded by "
-            "IPC round-trip count (kernel time per socket write/read under "
-            "nested virt), not pandas compute. 256k was erratic (29.6-80.7 "
-            "s): ~256 MB Arrow chunks per worker spike peak memory. 64k "
-            "(~64 MB per batch per worker) is the engine default since this "
-            "A/B (session.py maxRecordsPerBatch).\n" +
-            _skew_section() +
-            _writemode_section() +
-            _pruning_section() +
-            _index_scale_section() +
             "\nDeterminism check: `final_rows` is identical at every parallelism "
             "level and every repeat (tombstone-correct LWW MERGE is "
             "batch-boundary- and partitioning-independent).\n\n"
             "Reference throughput: none published (see BASELINE.md); the reference "
-            "is single-threaded Node with change-feed page size 1.\n"
+            "is single-threaded Node with change-feed page size 1.\n\n"
+            "Findings of retired probes (host weather per probe, input "
+            "linearity, shuffle sizing, codecs, Arrow batch size, hot-key "
+            "skew, write mode, metadata pruning, incremental-index "
+            "maintenance) are frozen in BENCH/FINDINGS.md.\n"
         )
 
 
@@ -1485,9 +625,9 @@ def consolidate(n_events: int = 16_000_000) -> None:
 
 def step(tag: str, fn) -> None:
     """Run one campaign step. An AssertionError is a violated correctness
-    invariant (salted == unsalted final_rows): downgrading it to a printed
-    line would let the campaign consolidate as if healthy, so it propagates
-    and kills the campaign. Any other failure (host weather, disk pressure)
+    invariant (fold_apply_history: every probe of one config must reach the
+    same final_rows): downgrading it to a printed line would let the
+    campaign go on as if healthy, so it propagates and kills the campaign. Any other failure (host weather, disk pressure)
     costs only this step: the round's remaining shapes and the consolidate
     are worth more than the lost sample."""
     try:
@@ -1547,48 +687,11 @@ def _pairs_round(i: int, full: bool = False) -> None:
     share_log([f"/tmp/cdc_camp_{c}_16000000" for c in (1, 2, 4, 8)])
     for c in (2, 8, 1, 4):
         step(f"r{i} {c}@16M x2", lambda c=c: _campaign_apply(c, 16_000_000))
-    if full:
-        step(f"r{i} 32@64M x2", lambda: _campaign_apply(32, 64_000_000))
-
-
-def _writemode_round(i: int) -> None:
-    for mode in ("cow", "mor"):
-        def run(wd=f"/tmp/cdc_wm_{mode}", mode=mode):
-            share_log([wd])
-            r = run_probe(["--writemode-probe", 32, 16_000_000, mode, wd])
-            record(WRITEMODE_HISTORY, {**r, "n_events": 16_000_000})
-            return r
-        step(f"r{i} writemode {mode}", run)
-
-
-def _campaign_pruning() -> dict:
-    r = run_probe(["--pruning-probe", 32, 16_000_000, "/tmp/cdc_pruning"])
-    record(PRUNING_HISTORY, r)
-    return r
-
-
-def _skew_round(i: int) -> None:
-    def run():
-        rows = []
-        for salt in (16, 1):
-            r = run_probe(["--skew-probe", 32, 16_000_000, salt,
-                           "/tmp/cdc_skew_log_16000000",
-                           f"/tmp/cdc_skew_r3d_{salt}", 2])
-            record(SKEW_HISTORY, {**r, "n_events": 16_000_000})
-            rows.append(r["final_rows"])
-        assert rows[0] == rows[1], f"salted != unsalted rows: {rows}"
-        return r
-    step(f"r{i} skew", run)
 
 
 CAMPAIGN = {
     "pairs": _pairs_round,
     "full": lambda i: _pairs_round(i, full=True),
-    "big": lambda i: step(f"b{i} 32@128M x2",
-                          lambda: _campaign_apply(32, 128_000_000)),
-    "writemode": _writemode_round,
-    "pruning": lambda i: step("pruning", _campaign_pruning),
-    "skew": _skew_round,
 }
 
 
@@ -1607,16 +710,13 @@ def campaign(piece: str, n: int = 1) -> None:
 
 
 def headline() -> None:
-    """The default mode: headline queries, cold MERGE, index throughput and
-    the warm-up + best-of-2 apply at local[CPUS], each folded with history;
-    prints the one JSON line."""
+    """The default mode: headline queries and the warm-up + best-of-2 apply
+    at local[CPUS], each folded with history; prints the one JSON line."""
     sf = _sf_tag(SF_DIR)
     n_events = max(200_000, int(20_000_000 * sf))
 
     spark = _session(CPUS, "cdc-bench")
     queries, queries_this_run = bench_queries(spark, SF_DIR)
-    merge_cold = bench_merge_cold(spark, SF_DIR)
-    index_stats = bench_indexes(spark, SF_DIR)
     workdir = f"/tmp/cdc_bench_{CPUS}"
     n_files = gen_log(spark, n_events, f"{workdir}/log")
     this_run = best_of(spark, CPUS, workdir, 2, max(100_000, n_events // 8),
@@ -1640,35 +740,27 @@ def headline() -> None:
         "sf": sf,
         "extra": {"apply": apply_stats,
                   "apply_events_per_sec": apply_stats["events_per_sec"],
-                  "cpus": CPUS, "queries_this_run": queries_this_run,
-                  "merge_upsert_cold": merge_cold,
-                  "incremental_index": index_stats},
+                  "cpus": CPUS, "queries_this_run": queries_this_run},
     }))
 
 
-# worker mode -> (function, argument types); trailing arguments are optional
-WORKERS = {
-    "--apply-probe": (apply_probe, (int, int, str, int)),
-    "--skew-probe": (skew_probe, (int, int, int, str, str, int)),
-    "--writemode-probe": (writemode_probe, (int, int, str, str, int)),
-    "--pruning-probe": (pruning_probe, (int, int, str)),
-    "--index-scale-probe": (index_scale_probe, (int, str)),
-}
+MODES = ("", "--scaling", "--consolidate", "--campaign", "--apply-probe")
 
 
 def main(argv: list[str] | None = None) -> None:
     args = sys.argv[1:] if argv is None else argv
     mode = args[0] if args else ""
+    if mode not in MODES:
+        raise SystemExit(f"unknown mode {mode!r}; one of (none), "
+                         + ", ".join(MODES[1:]))
     if mode == "--consolidate":
         consolidate()
     elif mode == "--campaign":
         campaign(args[1] if len(args) > 1 else "pairs",
                  int(args[2]) if len(args) > 2 else 1)
-    elif mode == "--skew":
-        campaign("skew")
-    elif mode in WORKERS:
-        fn, types = WORKERS[mode]
-        print(json.dumps(fn(*(t(a) for t, a in zip(types, args[1:])))))
+    elif mode == "--apply-probe":
+        types = (int, int, str, int)  # trailing REPEATS is optional
+        print(json.dumps(apply_probe(*(t(a) for t, a in zip(types, args[1:])))))
     else:
         headline()
         if mode == "--scaling":

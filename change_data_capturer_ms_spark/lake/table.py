@@ -1444,7 +1444,7 @@ class LakeTable:
         # bucket -> files index built ONCE: the per-key candidate scan then
         # touches only the key's bucket (O(files/bucket)), not the whole
         # manifest (O(files) x N keys was seconds of driver time at 1024
-        # files x 1000 keys — measured by bench.py pruning_probe)
+        # files x 1000 keys in the pruning probe behind BENCH/FINDINGS.md)
         by_bucket: dict[int, list[FileEntry]] = {}
         for f in m.files:
             by_bucket.setdefault(f.bucket, []).append(f)

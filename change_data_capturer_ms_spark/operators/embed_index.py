@@ -86,7 +86,7 @@ class EmbeddingANNIndex:
     stays sublinear only if bits grows ~log2(corpus) (e.g. 4 bits for 1e3-1e4
     vectors, 8 for 1e5, 12+ for 1e7). Maintenance cost is independent of
     bits and of corpus size — O(changed) projection + bucketed MERGE,
-    measured flat (1.06x) at 10x corpus in BENCH/BASELINE.md's index-scale
+    measured flat (1.06x) at 10x corpus in BENCH/FINDINGS.md's index-scale
     section. The default is the unit-scale setting; raise it for real
     corpora (rebuilding the index re-buckets — there is no in-place rebit)."""
 

@@ -163,13 +163,17 @@ class CDCPipeline:
 
     # -- lease (inspectable resume state) ------------------------------------
 
-    def _write_lease(self, lease: dict, version: int) -> None:
+    def _write_lease(self, lease: dict, version: int,
+                     captured: DataFrame) -> None:
         """Mirror of the reference lease upsert: one doc per source id, LWW
         (cosmos.ts:91-105), plus a bounded per-batch history RING for audit
         and drift scoring (cfg.lease_history_keep): millions of micro-batches
         must not mean millions of sidecar files — boundedness is a soak
         invariant (tests/test_soak.py). Ring entries are named by the
-        commit's manifest `version`, the ring's order (_hist_version)."""
+        commit's manifest `version`, the ring's order (_hist_version). The
+        committed `lease` gains the monitor counts of the `captured` rows."""
+        if self.monitor_cols:
+            lease = {**lease, "monitor": self._monitor_summary(captured)}
         os.makedirs(self.lease_dir, exist_ok=True)
         hist = os.path.join(self.lease_dir,
                             f"batch_{version}_{lease['batch_id']}.json")
@@ -268,9 +272,11 @@ class CDCPipeline:
         # (b) burn the full validate + planning scan before merge() no-ops.
         # The manifest is read ONCE here (ledger check, bucket layout); merge
         # re-reads it for its optimistic-concurrency check and returns the
-        # lease it committed.
+        # lease it committed. The lease and queue writes a crash after the
+        # commit lost are redone on the way out (_heal_head).
         m = self.table.manifest() if self.table.exists() else None
         if m is not None and m.is_committed(self.source_id, batch_id):
+            self._heal_head(batch_df, batch_id, m)
             return {"skipped": True, "version": m.version, "batch_id": batch_id}
         quarantined = None
         if self.quarantine_dir:
@@ -287,6 +293,34 @@ class CDCPipeline:
              .withColumn("_batch_id", F.lit(batch_id))
              .write.mode("append").parquet(self.quarantine_dir))
         return self._apply(batch_df, batch_id, m, quarantined, self.audit_fn)
+
+    def _heal_head(self, batch_df: DataFrame, batch_id, m) -> None:
+        """Redelivery of the head commit's batch: redo the post-commit side
+        effects a crash between the manifest commit and the end of _apply
+        may have lost. The reference acknowledges its lease only after
+        processing (cosmos.ts:91-105), so redelivery must leave the lease
+        and the queue as a clean run would. The lease sidecar and its ring
+        entry are rewritten from the committed lease only when one is
+        missing or stale; the queue produce is idempotent on its marker.
+        With nothing missing this costs file-existence checks, no Spark job."""
+        lease = m.lease or {}
+        if (lease.get("id") != self.source_id
+                or str(lease.get("batch_id")) != str(batch_id)):
+            return
+        if self.quarantine_dir:
+            # the DLQ append already ran before the crash: keep only the
+            # valid rows, as the first delivery did, without appending again
+            from change_data_capturer_ms_spark.functions.validate import validate_batch
+
+            batch_df = validate_batch(batch_df)[0]
+        captured = batch_df.filter(F.col("op").isin(*self.cfg.captured_ops))
+        ring = os.path.join(self.lease_dir, f"batch_{m.version}_{batch_id}.json")
+        cur = self.current_lease() or {}
+        if not os.path.exists(ring) or str(cur.get("batch_id")) != str(batch_id):
+            self._write_lease(lease, m.version, captured)
+        if self.queue_sink is not None:
+            self.queue_sink.produce(captured, batch_id=batch_id,
+                                    source_id=self.source_id)
 
     def _apply(self, batch_df: DataFrame, batch_id, m, quarantined=None,
                audit_fn=None) -> dict:
@@ -380,10 +414,7 @@ class CDCPipeline:
             self.table.fast_forward(staging)
             self.table.drop_branch(staging)
         if not result.get("skipped"):
-            lease = dict(result["lease"])
-            if self.monitor_cols:
-                lease["monitor"] = self._monitor_summary(captured)
-            self._write_lease(lease, result["version"])
+            self._write_lease(result["lease"], result["version"], captured)
         if self.queue_sink is not None:
             # produce the RAW captured rows (the reference queues the change
             # documents themselves) — no UDF columns, so this extra pass stays

@@ -4,7 +4,8 @@
 from the committed BENCH/*.jsonl histories, write it next to them whatever
 the cwd, and campaign steps must stamp every record while keeping the error
 policy (AssertionError kills the campaign, any other failure costs only the
-step). The probe subprocess is stubbed.
+step). An unknown mode exits with the list of modes instead of starting
+the Spark headline run. The probe subprocess is stubbed.
 """
 
 import json
@@ -79,77 +80,78 @@ def _stub_probes(monkeypatch, make_result):
     return calls
 
 
-def _apply_result(rows):
+def _apply_result(rows, cores=32):
     return {"events": 16_000_000, "wall_sec": 30.0, "events_per_sec": 5e5,
-            "final_rows": rows, "batches": 4, "batch_walls": [8.0, 7.0, 7.5, 7.5],
-            "cores": 32, "all_wall_sec": [31.0, 30.0]}
+            "final_rows": rows, "batches": 2, "cores": cores,
+            "all_wall_sec": [31.0, 30.0]}
 
 
 STAMPS = ("engine", "proto", "ts", "steal_pct", "sys_pct", "user_pct")
 
 
+def _probe_cores(argv):
+    assert argv[0] == "--apply-probe"
+    return int(argv[1])
+
+
 def test_campaign_records_are_stamped(tmp_path, monkeypatch):
     monkeypatch.setattr(bench, "BENCH_DIR", str(tmp_path))
-    calls = _stub_probes(
-        monkeypatch,
-        lambda a: {**_apply_result(7), "salt_buckets": int(a[3])}
-        if a[0] == "--skew-probe" else _apply_result(7))
-    bench.main(["--campaign", "skew"])
-    assert [c[2:4] + [c[5]] for c in calls] == [
-        ["--skew-probe", "32", "16"], ["--skew-probe", "32", "1"]]
-    recs = [json.loads(x) for x in (tmp_path / "skew_probes.jsonl").open()]
-    assert [r["salt_buckets"] for r in recs] == [16, 1]
+    monkeypatch.setattr(bench, "SHARED_LOG", str(tmp_path / "no_shared_log"))
+    calls = _stub_probes(monkeypatch,
+                         lambda a: _apply_result(7, _probe_cores(a)))
+    bench.main(["--campaign", "pairs"])
+    assert [c[2:4] + [c[-1]] for c in calls] == [
+        ["--apply-probe", str(c), "2"] for c in (2, 8, 1, 4)]
+    recs = [json.loads(x) for x in (tmp_path / "probes.jsonl").open()]
+    assert [r["cores"] for r in recs] == [2, 8, 1, 4]
     for r in recs:
         assert all(k in r for k in STAMPS) and bench._stamp_ok(r)
-        assert r["n_events"] == 16_000_000
-    assert "Hot-key skew" in (tmp_path / "BASELINE.md").read_text()
-
-    bench.main(["--campaign", "big"])
-    (rec,) = [json.loads(x) for x in (tmp_path / "probes.jsonl").open()]
-    assert {k: rec[k] for k in ("n_events", "cores", "walls", "final_rows",
-                                "batch_walls")} == {
-        "n_events": 128_000_000, "cores": 32, "walls": [31.0, 30.0],
-        "final_rows": 7, "batch_walls": [8.0, 7.0, 7.5, 7.5]}
-    assert all(k in rec for k in STAMPS) and bench._stamp_ok(rec)
+        assert {k: r[k] for k in ("n_events", "walls", "final_rows")} == {
+            "n_events": 16_000_000, "walls": [31.0, 30.0], "final_rows": 7}
+    assert "local[1] → local[4]" in (tmp_path / "BASELINE.md").read_text()
 
 
 def test_campaign_assertion_kills_other_errors_skip(tmp_path, monkeypatch,
                                                    capsys):
     monkeypatch.setattr(bench, "BENCH_DIR", str(tmp_path))
-    # salted and unsalted disagree: a correctness invariant, not weather
-    _stub_probes(monkeypatch, lambda a: {**_apply_result(int(a[3])),
-                                         "salt_buckets": int(a[3])})
-    with pytest.raises(AssertionError, match="salted != unsalted"):
-        bench.campaign("skew")
+    monkeypatch.setattr(bench, "SHARED_LOG", str(tmp_path / "no_shared_log"))
+    # the second round reaches different final rows: the consolidate fold
+    # asserts one engine semantics per config, a correctness invariant, not
+    # weather
+    rounds = []
+
+    def result(a):
+        rounds.append(a)
+        return _apply_result(7 if len(rounds) <= 4 else 8, _probe_cores(a))
+
+    _stub_probes(monkeypatch, result)
+    with pytest.raises(AssertionError, match="mixed engine semantics"):
+        bench.campaign("pairs", 3)
+    assert len(rounds) == 8  # the third round never ran
 
     # a worker without a result line raises RuntimeError: only that step is
     # lost, the campaign goes on and still consolidates
+    (tmp_path / "probes.jsonl").unlink()
     _stub_probes(monkeypatch, lambda a: None)
-    bench.campaign("big", 2)
+    bench.campaign("pairs", 2)
     out = capsys.readouterr().out
-    assert out.count("FAILED: probe failed") == 2
-    assert "campaign piece=big done" in out
+    assert out.count("FAILED: probe failed") == 8
+    assert "campaign piece=pairs done" in out
     assert not (tmp_path / "probes.jsonl").exists()
     assert (tmp_path / "BASELINE.md").exists()
 
 
-def test_index_scale_flatness_compares_within_one_batch_size(tmp_path,
-                                                             monkeypatch):
-    monkeypatch.setattr(bench, "BENCH_DIR", str(tmp_path))
-    stamp = {"engine": bench._engine_stamp(), "proto": bench.BENCH_PROTO,
-             "probe_ver": 1, "bootstrap_sec": 1.0, "probe_walls": [0.5]}
-    # per kind: batch 100 costs 0.2 s, batch 500 costs 1.0 s, and 10x the
-    # corpus costs 10% more at either batch size
-    recs = [(100, 5_000, 0.2), (500, 50_000, 1.1), (500, 5_000, 1.0),
-            (100, 50_000, 0.22)]
-    with open(tmp_path / "index_scale_probes.jsonl", "w") as f:
-        for kind in ("lsh", "ann"):
-            for bs, corpus, wall in recs:
-                f.write(json.dumps({**stamp, "kind": kind, "corpus": corpus,
-                                    "batch_size": bs,
-                                    "batch_walls": [wall] * 3}) + "\n")
-    flat = bench._index_scale_section().split("Flatness")[1]
-    for kind in ("lsh", "ann"):
-        for bs in (100, 500):
-            assert f"{kind} (batch {bs}): 1.10x batch wall at 10x corpus" in flat
-    assert "5.50x" not in flat
+@pytest.mark.parametrize("argv", [["--skew"], ["--writemode-probe"],
+                                  ["--index-scale-probe", "32", "wd"],
+                                  ["--campaign-pairs"]])
+def test_unknown_mode_exits_listing_the_modes(argv, monkeypatch):
+    def no_run():
+        raise AssertionError("an unknown mode must not start the headline")
+
+    monkeypatch.setattr(bench, "headline", no_run)
+    with pytest.raises(SystemExit) as exc:
+        bench.main(argv)
+    msg = str(exc.value)
+    assert repr(argv[0]) in msg
+    for mode in ("--scaling", "--consolidate", "--campaign", "--apply-probe"):
+        assert mode in msg

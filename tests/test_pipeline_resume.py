@@ -1,14 +1,17 @@
-"""Pipeline resume cursor and per-batch manifest traffic."""
+"""Pipeline resume cursor, per-batch manifest traffic and redelivery after
+a crash that followed the commit."""
 
 import glob
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from change_data_capturer_ms_spark.config import EngineConfig
 from change_data_capturer_ms_spark.lake.manifest import ManifestStore
 from change_data_capturer_ms_spark.lake.table import LakeTable
+from change_data_capturer_ms_spark.queue import JsonQueueSink
 from change_data_capturer_ms_spark.sources import gen_changelog, write_changelog
 from change_data_capturer_ms_spark.streaming import CDCPipeline
 
@@ -93,3 +96,62 @@ def test_lease_ring_keeps_newest_commits_for_string_batch_ids(spark,
             kept.add(json.load(f)["batch_id"])
     assert kept == set(ids[-3:])
     assert [d["batch_id"] for d in pipe.monitor_drift("op")] == ids[-2:]
+
+
+def _crash_once(monkeypatch, cls, name):
+    real = getattr(cls, name)
+    calls = []
+
+    def once(self, *a, **kw):
+        calls.append(name)
+        if len(calls) == 1:
+            raise RuntimeError(f"crash in {name}")
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(cls, name, once)
+
+
+def _redelivery_heals_head(spark, d, monkeypatch, cls, name):
+    """Crash once in `cls.name` after batch 1's manifest commit, redeliver
+    batch 1: the ledger skips the merge, and the lease sidecar, its ring
+    entry and the queue end up as a clean run leaves them."""
+    sink = JsonQueueSink(spark, f"{d}/queue")
+    pipe = _pipe(spark, d, quarantine_dir=f"{d}/dlq", queue_sink=sink,
+                 monitor_cols=["op"])
+    log = gen_changelog(spark, 200, seed=34, n_repos=5, paths_per_repo=3)
+    pipe.apply_batch(log.filter(F.col("seq") < 100), batch_id=0)
+    batch = log.filter(F.col("seq") >= 100).withColumn(
+        "op", F.when(F.col("seq") == 150, F.lit("upsert-typo"))
+        .otherwise(F.col("op")))
+
+    _crash_once(monkeypatch, cls, name)
+    with pytest.raises(RuntimeError, match="crash in"):
+        pipe.apply_batch(batch, batch_id=1)
+    assert pipe.table.is_batch_committed("changelog", 1)
+    assert pipe.apply_batch(batch, batch_id=1)["skipped"] is True
+
+    lease = pipe.current_lease()
+    assert set(lease.pop("monitor")) == {"op"}
+    assert lease == pipe.table.lease()
+    version = pipe.table.manifest().version
+    assert os.path.exists(os.path.join(pipe.lease_dir,
+                                       f"batch_{version}_1.json"))
+    captured = EngineConfig().captured_ops
+    expect = sorted(r["seq"] for r in batch.collect()
+                    if r["op"] in captured)
+    queued = sink.consume().filter(F.col("batch_id") == "1")
+    assert sorted(r["seq"] for r in queued.collect()) == expect
+    dlq = spark.read.parquet(f"{d}/dlq")
+    assert [r["seq"] for r in dlq.collect()] == [150]
+
+
+def test_redelivery_heals_a_crashed_queue_produce(spark, tmpdir_path,
+                                                  monkeypatch):
+    _redelivery_heals_head(spark, tmpdir_path, monkeypatch,
+                           JsonQueueSink, "produce")
+
+
+def test_redelivery_heals_a_crashed_lease_write(spark, tmpdir_path,
+                                                monkeypatch):
+    _redelivery_heals_head(spark, tmpdir_path, monkeypatch,
+                           CDCPipeline, "_write_lease")
