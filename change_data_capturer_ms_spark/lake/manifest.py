@@ -123,9 +123,10 @@ class Manifest:
     committed_at: float = 0.0
     # per-source high watermark: every numeric batch id ≤ hw is committed
     batch_watermarks: dict = field(default_factory=dict)
-    # "cow" (copy-on-write: MERGE rewrites affected buckets) or "mor"
-    # (merge-on-read: MERGE appends per-bucket delta files; readers resolve
-    # per-key LWW; compact() folds deltas). Default keeps old manifests valid.
+    # "cow" (copy-on-write: a data commit replaces the buckets it touches) or
+    # "mor" (merge-on-read: it appends delta files to them). Readers and
+    # maintenance go by each bucket's file count (`by_bucket`), never by
+    # this field. Default keeps old manifests valid.
     write_mode: str = "cow"
     # columns carrying per-file equality bloom filters (lake/bloom.py); a
     # table property fixed at create, like write_mode. [] ⇒ feature off.
@@ -142,6 +143,25 @@ class Manifest:
     def bucket_key(self) -> list[str]:
         """The columns the bucket function actually hashes."""
         return self.bucket_cols or self.key_cols
+
+    @property
+    def by_bucket(self) -> dict[int, list[FileEntry]]:
+        """bucket → its files, in manifest order. Built once per file list
+        (rebuilt only when `files` is reassigned), so per-key callers such
+        as lookup_many pay one pass over the manifest, not one per key. A
+        bucket's file count is the table's only layout rule: one file ⇒
+        resolved (at most one row per key), more ⇒ per-key LWW pending."""
+        cached = self.__dict__.get("_by_bucket")
+        if cached is None or cached[0] is not self.files:
+            idx: dict[int, list[FileEntry]] = {}
+            for f in self.files:
+                idx.setdefault(f.bucket, []).append(f)
+            cached = self.__dict__["_by_bucket"] = (self.files, idx)
+        return cached[1]
+
+    def files_in(self, buckets: set[int]) -> list[FileEntry]:
+        """The files of `buckets`, grouped by bucket."""
+        return [f for b, fs in self.by_bucket.items() if b in buckets for f in fs]
 
     def is_committed(self, source_id: str, batch_id) -> bool:
         """Exactly-once check: ledger entry OR covered by the source watermark.

@@ -12,13 +12,17 @@ Physical layout and why it scales (SURVEY.md §4):
   the micro-batch* (copy-on-write at bucket granularity); unaffected buckets' files
   carry over into the new snapshot untouched. At 100 TB with O(10^4) buckets a
   typical batch rewrites a small fraction of the table.
-- Two write modes (Iceberg v1/v2 parity, `write_mode` at create): **cow** rewrites
-  each affected bucket (scan-cheap reads); **mor** appends only the batch's per-key
-  winners as delta files — write cost O(batch) — and readers of a multi-file bucket
-  resolve per-key LWW on `_last_seq` (one aggregation) until `compact()` folds the
-  deltas back to one base file per bucket. Tombstone rules are mode-aware:
-  `expire_tombstones` on a mor table touches only fully-compacted buckets, since a
-  delta tombstone may be suppressing an older base-file row.
+- One layout rule: a bucket's FILE COUNT. A bucket holding one file is resolved
+  (at most one row per key); a bucket holding more carries delta files whose
+  per-key LWW on `_last_seq` is still pending. Reads resolve LWW exactly when a
+  scanned bucket holds several files; non-key zone maps prune only single-file
+  buckets (a delta may have moved a key out of a range); `compact()` folds every
+  multi-file bucket back to one file; `expire_tombstones` touches only
+  single-file buckets (a delta tombstone may be suppressing an older row).
+- The create-time `write_mode` (Iceberg v1/v2 parity) makes one decision: which
+  touched buckets a data commit replaces. **cow** replaces them all (so every
+  bucket keeps one file and reads stay plain scans); **mor** replaces none and
+  appends the batch's per-key winners as delta files — write cost O(batch).
 - Because existing rows and batch rows hash-agree on bucket, MERGE needs **no join at
   all**: union(existing-in-affected-buckets, deduped-batch) → per-key LWW max_by →
   drop delete-winners → rewrite those buckets. The only shuffle is the max_by
@@ -59,9 +63,10 @@ from __future__ import annotations
 
 import dataclasses
 import glob
+import itertools
 import os
 import uuid
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -236,6 +241,13 @@ def _data_lease(source_id: str, batch_id, token: str, metrics: dict,
             "lineage": lineage or [], "metrics": metrics}
 
 
+def _replaced_buckets(m: Manifest, touched: set[int]) -> set[int]:
+    """The one decision `write_mode` makes: which buckets a data commit
+    touches it REPLACES — all of them under copy-on-write, none under
+    merge-on-read (the commit appends delta files to them instead)."""
+    return touched if m.write_mode == "cow" else set()
+
+
 def bucket_expr(key_cols: list[str], n_buckets: int):
     """Deterministic bucket id — pure function of the key (never random), so dedupe
     and co-location survive any repartitioning (SURVEY.md §7.3 salting note)."""
@@ -253,19 +265,21 @@ class LakeTable:
         bloom_cols: list[str] | None = None,
         bucket_cols: list[str] | None = None,
     ):
-        """`write_mode` picks the write-vs-read amplification tradeoff:
+        """`write_mode` picks which touched buckets a data commit (merge,
+        merge_into) replaces — the write-vs-read amplification tradeoff:
 
-        - "cow" (default): MERGE rewrites every affected bucket — reads are a
-          plain scan, writes cost O(bucket size). Right when batches are large
-          relative to buckets or reads dominate.
-        - "mor": MERGE appends only the batch's per-key winners as delta files
-          in the affected buckets — writes cost O(batch), reads of a
-          multi-file bucket add one per-key LWW aggregation until `compact()`
-          folds the deltas (Iceberg v2 merge-on-read re-expressed). Right for
-          high-frequency small batches over huge buckets at 100 TB.
+        - "cow" (default): all of them — every bucket keeps one file, reads
+          are a plain scan, writes cost O(bucket size). Right when batches
+          are large relative to buckets or reads dominate.
+        - "mor": none — the batch's per-key winners append as delta files,
+          writes cost O(batch) (Iceberg v2 merge-on-read re-expressed). Right
+          for high-frequency small batches over huge buckets at 100 TB.
 
-        The mode is recorded in the manifest at create() and is a property of
-        the table, not the writer session.
+        Everything else follows from each bucket's file count, not the mode:
+        a read of a multi-file bucket adds one per-key LWW aggregation, and
+        `compact()` folds it back to one file. The mode is recorded in the
+        manifest at create() and is a property of the table, not the writer
+        session.
 
         `bloom_cols`: columns that get a per-file equality bloom filter in
         every manifest entry (lake/bloom.py) — point lookups and `=` filters
@@ -377,7 +391,7 @@ class LakeTable:
                 raise ValueError("read: pass version or tag, not both")
             version = self.store.get_tag(tag)
         m = self.manifest(version)
-        files = m.files if buckets is None else [f for f in m.files if f.bucket in buckets]
+        files = m.files if buckets is None else m.files_in(buckets)
         return self._frame(m, files, include_deleted)
 
     # -- named refs + rollback (Iceberg tag/rollback parity) ------------------
@@ -453,13 +467,7 @@ class LakeTable:
         from the branch's watermark."""
         head = self.store.get_branch(name)
         cur = self.store.current_version()
-        v: int | None = head
-        while v is not None and v != cur:
-            try:
-                v = self.manifest(v).parent
-            except FileNotFoundError:
-                v = None
-        if v != cur:
+        if not any(a.version == cur for a in self._ancestry(head)):
             raise RuntimeError(
                 f"fast_forward: main v{cur} is not an ancestor of branch "
                 f"{name!r} head v{head} — main advanced since the branch was "
@@ -522,13 +530,9 @@ class LakeTable:
         # tombstone) of a key whose older row sits in the same bucket's base
         # file — per-key LWW on _last_seq BEFORE any tombstone filtering, so a
         # delta delete suppresses its base row. Skipped entirely when every
-        # scanned bucket holds one file (fully compacted ⇒ no duplicates).
-        if m.write_mode == "mor" and files:
-            per_bucket: dict[int, int] = {}
-            for f in files:
-                per_bucket[f.bucket] = per_bucket.get(f.bucket, 0) + 1
-            if any(v > 1 for v in per_bucket.values()):
-                df = lww_dedupe(df, m.key_cols, seq_col=SEQ_META_COL)
+        # scanned bucket holds one file (resolved ⇒ no duplicates).
+        if any(len(m.by_bucket[f.bucket]) > 1 for f in files):
+            df = lww_dedupe(df, m.key_cols, seq_col=SEQ_META_COL)
         if not include_deleted and OP_META_COL in schema.fieldNames():
             df = df.filter(
                 F.col(OP_META_COL).isNull() | (F.col(OP_META_COL) != "delete")
@@ -586,17 +590,18 @@ class LakeTable:
     ) -> list[FileEntry]:
         """The manifest entries that can contain a match for `filters` —
         zone-map ([min,max]) plus bloom (equality membership) skipping, all
-        driver-side, before any scan task exists. Under write_mode='mor' only
-        key columns participate (see read_where).
+        driver-side, before any scan task exists. Key columns prune every
+        file; other columns prune only a file that is its bucket's one file
+        (see read_where).
 
         `file_pool` restricts the candidate scan to a pre-filtered entry list
         and `manifest` reuses an already-loaded snapshot: callers batching
-        many lookups index files by bucket and load the manifest ONCE instead
-        of re-reading+parsing it per key (lookup_many; measured 15 s of
-        driver time at 1000 keys x 1024 files before these seams)."""
+        many lookups take files from the bucket index and load the manifest
+        ONCE instead of re-reading+parsing it per key (lookup_many; measured
+        15 s of driver time at 1000 keys x 1024 files before these seams)."""
         m = manifest if manifest is not None else self.manifest(version)
         pool = m.files if file_pool is None else file_pool
-        prunable = set(m.key_cols) if m.write_mode == "mor" else None
+        keys, idx = set(m.key_cols), m.by_bucket
         eq_hashes: dict[str, int | None] = {}
         if m.bloom_cols:
             from change_data_capturer_ms_spark.lake.bloom import value_hash
@@ -613,7 +618,7 @@ class LakeTable:
             and all(
                 _file_may_match(f, c, op, v, eq_hash=eq_hashes.get(c))
                 for (c, op, v) in filters
-                if prunable is None or c in prunable
+                if c in keys or len(idx[f.bucket]) == 1
             )
         ]
 
@@ -634,15 +639,16 @@ class LakeTable:
         row-group pushdown then prunes WITHIN the surviving files (the same
         filters are also applied exactly on the frame).
 
-        Merge-on-read safety: non-key columns are mutable across delta files,
-        so pruning on them could drop the delta row that moved a key OUT of
-        the predicate range and resurface its stale base row. Under
-        write_mode='mor' only key columns (immutable row identity) and only
-        equality/range on them participate in pruning; other filters still
-        apply post-scan.
+        Merge-on-read safety: in a bucket holding several files, non-key
+        columns are mutable across its delta files, so pruning on them could
+        drop the delta row that moved a key OUT of the predicate range and
+        resurface its stale base row. There only key columns (immutable row
+        identity) participate in pruning; a bucket's one file is resolved and
+        prunes on every column. Filters that did not prune still apply
+        post-scan.
         """
         m = self.manifest(version)
-        files = self.candidate_files(filters, version=version, buckets=buckets)
+        files = self.candidate_files(filters, buckets=buckets, manifest=m)
         df = self._frame(m, files, include_deleted)
         for c, op, v in filters:
             col = F.col(c)
@@ -706,13 +712,10 @@ class LakeTable:
         m_old = self.manifest(old_version)
         m_new = self.manifest(new_version)
 
-        def by_bucket(m: Manifest) -> dict[int, frozenset]:
-            out: dict[int, set] = {}
-            for f in m.files:
-                out.setdefault(f.bucket, set()).add(f.path)
-            return {b: frozenset(s) for b, s in out.items()}
+        def paths(m: Manifest) -> dict[int, set[str]]:
+            return {b: {f.path for f in fs} for b, fs in m.by_bucket.items()}
 
-        ob, nb = by_bucket(m_old), by_bucket(m_new)
+        ob, nb = paths(m_old), paths(m_new)
         changed = {b for b in set(ob) | set(nb) if ob.get(b) != nb.get(b)}
         old = self.read(version=old_version, buckets=changed, include_deleted=True)
         new = self.read(version=new_version, buckets=changed, include_deleted=True)
@@ -830,17 +833,18 @@ class LakeTable:
             return {"skipped": False, "version": new.version,
                     "batch_id": batch_id, "metrics": metrics, "lease": lease}
         affected = {int(r["_bucket"]) for r in agg}
+        replaced = _replaced_buckets(m, affected)
 
-        # 2) existing rows in affected buckets only (bucket-pruned snapshot scan),
-        #    INCLUDING tombstones — a stored delete must keep outranking older seqs.
-        #    merge-on-read: skip this read entirely — the batch's own winners are
-        #    appended as delta files and readers/compaction resolve LWW later, so
-        #    the write job is O(batch) instead of O(affected bucket contents)
-        mor = m.write_mode == "mor"
+        # 2) existing rows of the REPLACED buckets only (bucket-pruned snapshot
+        #    scan), INCLUDING tombstones — a stored delete must keep outranking
+        #    older seqs. Buckets the commit appends to are not read at all: the
+        #    batch's own winners land as delta files and readers/compaction
+        #    resolve LWW later, so the write job is O(batch) for them
         incoming = batch.withColumn("_prio", F.lit(1))
-        if not mor and any(f.bucket in affected for f in m.files):
+        existing_files = m.files_in(replaced)
+        if existing_files:
             existing = (
-                self._frame(m, [f for f in m.files if f.bucket in affected], True)
+                self._frame(m, existing_files, True)
                 .withColumn(seq_col, F.col(SEQ_META_COL))
                 .withColumn(op_col, F.col(OP_META_COL))
                 .withColumn("_prio", F.lit(0))
@@ -875,7 +879,7 @@ class LakeTable:
         )
         # delete-winners are KEPT as tombstones (see read() docstring); they leave
         # the table only via expire_tombstones() once the low-watermark passes.
-        # Null-fill columns the batch does not carry (merge-on-read appends the
+        # Null-fill columns the batch does not carry (an appended delta is the
         # batch alone, which may lack pre-evolution payload columns).
         aligned = (
             winners.withColumn(SEQ_META_COL, F.col(seq_col))
@@ -885,7 +889,7 @@ class LakeTable:
             if c not in aligned.columns:
                 return F.lit(None).cast(schema[c].dataType).alias(c)
             if aligned.schema[c].dataType != schema[c].dataType:
-                # widened column where the union resolved narrow (e.g. mor
+                # widened column where the union resolved narrow (e.g. a delta
                 # append of an int batch into a bigint column): files written
                 # now must carry the manifest's physical type
                 return F.col(c).cast(schema[c].dataType).alias(c)
@@ -893,10 +897,10 @@ class LakeTable:
 
         final = aligned.select(*[_out(c) for c in schema.fieldNames()])
 
-        # 4) cow: rewrite affected buckets; mor: append the deltas, keep all
-        #    files. The lease's metrics fill in once the write job has run.
+        # 4) write the affected buckets' new files, replacing the replaced
+        #    ones. The lease's metrics fill in once the write job has run.
         def write(snap: Manifest) -> list[FileEntry]:
-            files = self._rewrite(m, snap, final, affected, append=mor)
+            files = self._rewrite(m, snap, final, affected, replaced)
             seen = obs.get
             deletes = int(seen.get("delete_winners") or 0)
             metrics.update(
@@ -1030,8 +1034,8 @@ class LakeTable:
                     "batch_id": batch_id, "metrics": metrics}
         affected = {int(r["_bucket"]) for r in agg}
 
-        existing = self._frame(m, [f for f in m.files if f.bucket in affected],
-                               include_deleted=True)
+        replaced = _replaced_buckets(m, affected)
+        existing = self._frame(m, m.files_in(affected), include_deleted=True)
         t = existing.withColumn("_t", F.lit(1)).alias("t")
         s = source.withColumn("_s", F.lit(1)).alias("s")
         joined = t.join(s, keys, "full_outer")
@@ -1100,9 +1104,11 @@ class LakeTable:
              .otherwise(act).alias(OP_META_COL),
             act.alias("_action"),
         )
-        mor = m.write_mode == "mor"
-        if mor:
-            out = out.filter(F.col("_action") != "carry")  # deltas: O(changed)
+        if replaced != affected:
+            # carried rows stay in the files of the buckets not replaced: the
+            # appended deltas hold only changed rows, O(changed)
+            out = out.filter((F.col("_action") != "carry") | bucket_expr(
+                m.bucket_key, m.n_buckets).isin(*replaced))
         obs = Observation()
         out = out.observe(
             obs,
@@ -1112,7 +1118,7 @@ class LakeTable:
         final = out.drop("_action").select(*[f.name for f in schema.fields])
 
         def write(snap: Manifest) -> list[FileEntry]:
-            files = self._rewrite(m, snap, final, affected, append=mor)
+            files = self._rewrite(m, snap, final, affected, replaced)
             got = obs.get
             inserts = int(got.get("inserts") or 0)
             updates = int(got.get("updates") or 0)
@@ -1245,11 +1251,13 @@ class LakeTable:
                 min_files_per_bucket: int = 2,
                 sort_cols: list[str] | None = None,
                 zorder_cols: list[str] | None = None) -> dict:
-        """Bin-pack small files: rewrite every bucket holding ≥ min_files_per_bucket
-        files whose combined size is under target_file_bytes.
+        """Fold buckets back to one file: rewrite every bucket holding ≥
+        min_files_per_bucket files that either holds several files (delta
+        files with per-key LWW pending, whatever their size) or is one file
+        under target_file_bytes.
 
-        Steady-state MERGE leaves one file per touched bucket, but schema-evolution
-        carry-over and tiny micro-batches accumulate small files; at 100 TB unmanaged
+        Copy-on-write commits leave one file per bucket; merge-on-read commits
+        append a delta file per touched bucket per batch, and at 100 TB unmanaged
         small files dominate scan planning cost (this is Iceberg's rewrite_data_files
         maintenance action re-expressed). Data content is row-identical after
         compaction — only the file layout changes; commit goes through the same
@@ -1273,17 +1281,13 @@ class LakeTable:
         if sort_cols and zorder_cols:
             raise ValueError("compact: sort_cols and zorder_cols are mutually exclusive")
         m = self.manifest()
-        by_bucket: dict[int, list[FileEntry]] = {}
-        for f in m.files:
-            by_bucket.setdefault(f.bucket, []).append(f)
-        # merge-on-read: every multi-file bucket is a victim regardless of size —
-        # the point is folding delta files back into one resolved base file
-        # (bounding read-side LWW work), not just bin-packing small files
-        mor = m.write_mode == "mor"
+        # a multi-file bucket is a victim regardless of size — the point is
+        # folding delta files back into one resolved file (bounding read-side
+        # LWW work), not just bin-packing small files
         victims = {
-            b: fs for b, fs in by_bucket.items()
+            b: fs for b, fs in m.by_bucket.items()
             if len(fs) >= min_files_per_bucket
-            and (mor or sum(f.bytes for f in fs) <= target_file_bytes)
+            and (len(fs) > 1 or fs[0].bytes <= target_file_bytes)
         }
         if not victims:
             return {"compacted_buckets": 0, "version": m.version}
@@ -1319,14 +1323,10 @@ class LakeTable:
         100 TB config that is O(10^4-10^5) entries).
         """
         m = self.manifest(version)
-        rows_b: dict[int, int] = {}
-        bytes_b: dict[int, int] = {}
-        files_b: dict[int, int] = {}
-        for f in m.files:
-            rows_b[f.bucket] = rows_b.get(f.bucket, 0) + f.rows
-            bytes_b[f.bucket] = bytes_b.get(f.bucket, 0) + f.bytes
-            files_b[f.bucket] = files_b.get(f.bucket, 0) + 1
-        n_used = len(files_b)
+        idx = m.by_bucket
+        rows_b = {b: sum(f.rows for f in fs) for b, fs in idx.items()}
+        bytes_b = {b: sum(f.bytes for f in fs) for b, fs in idx.items()}
+        n_used = len(idx)
         total_rows = sum(rows_b.values())
         total_bytes = sum(bytes_b.values())
         avg_rows = total_rows / n_used if n_used else 0.0
@@ -1347,10 +1347,10 @@ class LakeTable:
             # repos; only one key hashing huge can skew a bucket) — the
             # signal for salting or a finer bucket count
             "bucket_skew": (max_rows / avg_rows) if avg_rows else 0.0,
-            "multi_file_buckets": sum(1 for n in files_b.values() if n > 1),
+            "multi_file_buckets": sum(1 for fs in idx.values() if len(fs) > 1),
             "top_buckets": [
                 {"bucket": b, "rows": rows_b[b], "bytes": bytes_b[b],
-                 "files": files_b[b]} for b in heaviest
+                 "files": len(idx[b])} for b in heaviest
             ],
         }
 
@@ -1382,10 +1382,10 @@ class LakeTable:
         (exactly the retained history, like Iceberg)."""
         rows = []
         try:
-            m = self.manifest()
+            head = self.manifest().version
         except Exception:
-            m = None
-        while m is not None:
+            head = None
+        for m in self._ancestry(head):
             lease = m.lease or {}
             met = lease.get("metrics") or {}
             rows.append((
@@ -1400,12 +1400,6 @@ class LakeTable:
                 int(m.schema_version),
                 m.write_mode,
             ))
-            if m.parent is None:
-                break
-            try:
-                m = self.manifest(m.parent)
-            except (FileNotFoundError, OSError):
-                break  # expired below this point — retained history only
         schema = ("version int, parent int, committed_at double, "
                   "batch_id string, rows bigint, upserts bigint, "
                   "deletes bigint, max_seq bigint, schema_version int, "
@@ -1441,24 +1435,21 @@ class LakeTable:
         from change_data_capturer_ms_spark.functions.xxh64 import xxhash64_cols
 
         types = {f.name: f.dataType.simpleString() for f in m.schema.fields}
-        # bucket -> files index built ONCE: the per-key candidate scan then
-        # touches only the key's bucket (O(files/bucket)), not the whole
-        # manifest (O(files) x N keys was seconds of driver time at 1024
-        # files x 1000 keys in the pruning probe behind BENCH/FINDINGS.md)
-        by_bucket: dict[int, list[FileEntry]] = {}
-        for f in m.files:
-            by_bucket.setdefault(f.bucket, []).append(f)
+        # the manifest's bucket index: the per-key candidate scan touches
+        # only the key's bucket (O(files/bucket)), not the whole manifest
+        # (O(files) x N keys was seconds of driver time at 1024 files x 1000
+        # keys in the pruning probe behind BENCH/FINDINGS.md)
         entries: dict[str, FileEntry] = {}
         for kv in keys:
             try:
                 h = xxhash64_cols([kv[k] for k in m.bucket_key],
                                   [types[k] for k in m.bucket_key])
-                pool = by_bucket.get(h % m.n_buckets, [])
+                pool = m.by_bucket.get(h % m.n_buckets, [])
             except TypeError:
                 pool = None  # unsupported key type: zone/bloom pruning only
             for f in self.candidate_files(
                     [(k, "=", kv[k]) for k in m.key_cols],
-                    version=version, file_pool=pool, manifest=m):
+                    file_pool=pool, manifest=m):
                 entries[f.path] = f
         base = self._frame(m, list(entries.values()), False)
         key_df = self.spark.createDataFrame(
@@ -1476,9 +1467,9 @@ class LakeTable:
         multi-file buckets, then optionally expire tombstones below the
         source low-watermark, then optionally expire old snapshots.
 
-        Ordering matters and is fixed: compaction FIRST so merge-on-read
+        Ordering matters and is fixed: compaction FIRST so multi-file
         buckets become single-file and thus eligible for tombstone expiry
-        (expire_tombstones skips multi-file mor buckets by design); snapshot
+        (expire_tombstones skips multi-file buckets by design); snapshot
         expiry LAST so the versions the earlier steps replaced age out in
         the same pass. Each step is its own atomic commit — a crash between
         steps leaves a consistent table, and the next optimize() resumes the
@@ -1533,8 +1524,10 @@ class LakeTable:
 
         Safe once the source low-watermark guarantees no event with seq < min_seq
         can still arrive (the streaming checkpoint's committed offset). Rewrites
-        only buckets that actually hold expirable tombstones; same atomic commit,
-        lease untouched.
+        only single-file buckets that actually hold expirable tombstones; same
+        atomic commit, lease untouched. A multi-file bucket waits for compact():
+        a delta tombstone may be suppressing an older live row in the same
+        bucket's other file, and dropping it first would resurrect that row.
         """
         m = self.manifest()
         if OP_META_COL not in m.schema.fieldNames():
@@ -1546,19 +1539,11 @@ class LakeTable:
             F.col(OP_META_COL).eqNullSafe("delete") & (F.col(SEQ_META_COL) < min_seq),
             F.lit(False),
         )
-        # candidate files by min_seq stats, then exact bucket set in one small agg.
-        # merge-on-read: only fully-compacted (single-file) buckets are eligible —
-        # a delta tombstone may be suppressing an older live row in the same
-        # bucket's base file, and dropping it before compact() folds the bucket
-        # would resurrect that row. compact() first, then expire.
-        n_per_bucket: dict[int, int] = {}
-        for f in m.files:
-            n_per_bucket[f.bucket] = n_per_bucket.get(f.bucket, 0) + 1
-        mor = m.write_mode == "mor"
+        # candidate single-file buckets by min_seq stats, then the exact
+        # bucket set in one small agg
         cand = {
-            f.bucket for f in m.files
-            if (f.min_seq is None or f.min_seq < min_seq)
-            and not (mor and n_per_bucket[f.bucket] > 1)
+            b for b, fs in m.by_bucket.items()
+            if len(fs) == 1 and (fs[0].min_seq is None or fs[0].min_seq < min_seq)
         }
         if not cand:
             return {"expired": 0, "version": m.version}
@@ -1601,19 +1586,9 @@ class LakeTable:
         # this handle is branch-bound: expiry walking only the branch head
         # would delete main's recently retained history (time travel /
         # read_incremental(since_version=...) on main would start raising).
-        keep_versions: list[int] = []
-        heads = {cur.version, self.store.current_version()}
-        for head_v in heads:
-            n_kept = 0
-            v: int | None = head_v
-            while v is not None and n_kept < keep_last:
-                if v not in keep_versions:
-                    keep_versions.append(v)
-                n_kept += 1
-                try:
-                    v = self.store.load(v).parent
-                except FileNotFoundError:
-                    break
+        main_v = self.store.current_version()
+        pinned = {a.version for head in {cur.version, main_v}
+                  for a in itertools.islice(self._ancestry(head), keep_last)}
         # tagged versions AND branch heads are pinned (Iceberg ref retention).
         # A branch's UNPUBLISHED intermediate ancestry is pinned too: with 2+
         # unpublished commits on a branch, expiring the intermediate manifest
@@ -1623,26 +1598,14 @@ class LakeTable:
         # RETAINED main would walk a stale branch straight past its fork and
         # pin main's entire pre-fork history (nothing below keep_last would
         # ever be reclaimed); stopping at a tag could leave a gap below it.
-        main_keep = set(keep_versions) | {self.store.current_version()}
-        main_ancestry = set()
-        mv: int | None = self.store.current_version()
-        while mv is not None:
-            main_ancestry.add(mv)
-            try:
-                mv = self.store.load(mv).parent
-            except FileNotFoundError:
-                break
-        pinned = (main_keep
-                  | set(self.store.tags().values())
-                  | set(self.store.branches().values()))
+        main_ancestry = {a.version for a in self._ancestry(main_v)}
+        pinned |= ({main_v}
+                   | set(self.store.tags().values())
+                   | set(self.store.branches().values()))
         for head in self.store.branches().values():
-            bv: int | None = head
-            while bv is not None and bv not in main_ancestry:
-                pinned.add(bv)
-                try:
-                    bv = self.store.load(bv).parent
-                except FileNotFoundError:
-                    break
+            pinned.update(itertools.takewhile(
+                lambda v: v not in main_ancestry,
+                (a.version for a in self._ancestry(head))))
         keep_versions = sorted(pinned)
         live: set[str] = set()
         referenced: set[str] = set()  # referenced by ANY manifest, retained or not
@@ -1843,23 +1806,32 @@ class LakeTable:
                 e.bloom = blooms[e.bucket]
 
     def _rewrite(self, base: Manifest, new: Manifest, df: DataFrame,
-                 buckets: set[int], append: bool = False,
+                 buckets: set[int], replaced: set[int] | None = None,
                  **write_kw) -> list[FileEntry]:
         """The rewrite step of every data-writing commit: write `df` — the
         rows of `buckets` under `new`'s bucket layout — as fresh files under
-        data/v{new.version}-<uuid>/, and carry the untouched files: all of the
-        base's when `append` (merge-on-read deltas), none when the bucket
-        count changes (rebucket), else those outside `buckets`."""
+        data/v{new.version}-<uuid>/, and carry every base file outside
+        `replaced` (default: `buckets`; merge-on-read deltas replace none),
+        or none when the bucket count changes (rebucket)."""
         written = self._write_buckets(df, new.bucket_key, new.n_buckets,
                                       new.version, len(buckets),
                                       bloom_cols=new.bloom_cols, **write_kw)
-        if append:
-            carried = list(base.files)
-        elif new.n_buckets != base.n_buckets:
-            carried = []
-        else:
-            carried = [f for f in base.files if f.bucket not in buckets]
-        return carried + written
+        if new.n_buckets != base.n_buckets:
+            return written
+        replaced = buckets if replaced is None else replaced
+        return [f for f in base.files if f.bucket not in replaced] + written
+
+    def _ancestry(self, version: int | None) -> Iterator[Manifest]:
+        """`version`'s manifest, then its parent's, down the chain — ending
+        at the root or at the first expired manifest, so the walk covers
+        exactly the retained history."""
+        while version is not None:
+            try:
+                m = self.store.load(version)
+            except FileNotFoundError:
+                return
+            yield m
+            version = m.parent
 
     def _commit(self, parent: Manifest | None, base: Manifest | None = None,
                 lease: dict | None = None, ledger_key: str | None = None,

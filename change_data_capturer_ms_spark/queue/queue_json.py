@@ -83,12 +83,17 @@ class JsonQueueSink:
     def _marker(self, source_id: str, batch_id) -> str:
         return os.path.join(self.marker_dir, f"{source_id}__{batch_id}.json")
 
+    def has_batch(self, batch_id: int | str, source_id: str = "cdc") -> bool:
+        """Whether (source_id, batch_id) is committed: one file-existence
+        check, no Spark job."""
+        return os.path.exists(self._marker(source_id, batch_id))
+
     def produce(self, df: DataFrame, batch_id: int | str,
                 source_id: str = "cdc", seq_col: str | None = "seq") -> dict:
         """Envelope + append the batch; idempotent on (source_id, batch_id)."""
-        marker = self._marker(source_id, batch_id)
-        if os.path.exists(marker):
+        if self.has_batch(batch_id, source_id):
             return {"skipped": True, "batch_id": batch_id}
+        marker = self._marker(source_id, batch_id)
         if self.envelope == "debezium":
             data_cols = [c for c in df.columns if c != self.op_col]
             op = F.col(self.op_col)

@@ -23,6 +23,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -61,6 +62,17 @@ def _hist_version(p: str) -> int:
         return int(os.path.basename(p)[len("batch_"):].split("_", 1)[0])
     except ValueError:
         return -1
+
+
+def _cursor(lease: dict) -> int | None:
+    """A lease's resume cursor: the max seq read, None before the first
+    batch. Decode-or-None (reference cosmos/utils.ts:76-91): an undecodable
+    token restarts from the beginning, and the idempotent MERGE ledger makes
+    the replay exactly-once."""
+    try:
+        return int(lease["lease"]) if lease.get("lease") else None
+    except (TypeError, ValueError):
+        return None
 
 
 def prepare_batch(
@@ -276,7 +288,8 @@ class CDCPipeline:
         # commit lost are redone on the way out (_heal_head).
         m = self.table.manifest() if self.table.exists() else None
         if m is not None and m.is_committed(self.source_id, batch_id):
-            self._heal_head(batch_df, batch_id, m)
+            if str((m.lease or {}).get("batch_id")) == str(batch_id):
+                self._heal_head(m, lambda: batch_df)
             return {"skipped": True, "version": m.version, "batch_id": batch_id}
         quarantined = None
         if self.quarantine_dir:
@@ -294,18 +307,28 @@ class CDCPipeline:
              .write.mode("append").parquet(self.quarantine_dir))
         return self._apply(batch_df, batch_id, m, quarantined, self.audit_fn)
 
-    def _heal_head(self, batch_df: DataFrame, batch_id, m) -> None:
-        """Redelivery of the head commit's batch: redo the post-commit side
-        effects a crash between the manifest commit and the end of _apply
-        may have lost. The reference acknowledges its lease only after
-        processing (cosmos.ts:91-105), so redelivery must leave the lease
-        and the queue as a clean run would. The lease sidecar and its ring
-        entry are rewritten from the committed lease only when one is
-        missing or stale; the queue produce is idempotent on its marker.
-        With nothing missing this costs file-existence checks, no Spark job."""
+    def _heal_head(self, m, rows: Callable[[], DataFrame | None]) -> None:
+        """Redo the post-commit side effects of the head commit `m` that a
+        crash between its manifest commit and the end of _apply may have
+        lost. The reference acknowledges its lease only after processing
+        (cosmos.ts:91-105), so a retry must leave the lease and the queue as
+        a clean run would. The lease sidecar and its ring entry are
+        rewritten from the committed lease when one is missing or stale, and
+        the queue produce reruns when its marker is missing; only then is
+        `rows()` — the head batch's events, None when the head committed no
+        batch of this source — called. With nothing missing this costs
+        file-existence checks, no Spark job."""
         lease = m.lease or {}
-        if (lease.get("id") != self.source_id
-                or str(lease.get("batch_id")) != str(batch_id)):
+        if lease.get("id") != self.source_id:
+            return
+        batch_id = lease.get("batch_id")
+        ring = os.path.join(self.lease_dir, f"batch_{m.version}_{batch_id}.json")
+        stale = (not os.path.exists(ring) or str(
+            (self.current_lease() or {}).get("batch_id")) != str(batch_id))
+        unqueued = (self.queue_sink is not None and not
+                    self.queue_sink.has_batch(batch_id, self.source_id))
+        batch_df = rows() if stale or unqueued else None
+        if batch_df is None:
             return
         if self.quarantine_dir:
             # the DLQ append already ran before the crash: keep only the
@@ -314,11 +337,9 @@ class CDCPipeline:
 
             batch_df = validate_batch(batch_df)[0]
         captured = batch_df.filter(F.col("op").isin(*self.cfg.captured_ops))
-        ring = os.path.join(self.lease_dir, f"batch_{m.version}_{batch_id}.json")
-        cur = self.current_lease() or {}
-        if not os.path.exists(ring) or str(cur.get("batch_id")) != str(batch_id):
+        if stale:
             self._write_lease(lease, m.version, captured)
-        if self.queue_sink is not None:
+        if unqueued:
             self.queue_sink.produce(captured, batch_id=batch_id,
                                     source_id=self.source_id)
 
@@ -574,15 +595,31 @@ class CDCPipeline:
         would silently no-op all newly arrived events (the delete_where
         default-batch_id bug class). Distinct cursor ⇒ distinct id; same
         cursor ⇒ the events read are the same set, and the ledger no-op is
-        exactly the dedupe you want."""
-        lease = self.table.lease() if self.table.exists() else {}
-        try:
-            after = int(lease["lease"]) if lease.get("lease") else None
-        except (TypeError, ValueError):
-            # decode-or-None (reference cosmos/utils.ts:76-91): an undecodable
-            # lease token restarts from the beginning; the idempotent MERGE
-            # ledger makes the replay exactly-once
-            after = None
+        exactly the dedupe you want.
+
+        A crash after a commit leaves the cursor past that batch, so a retry
+        reads new events under a new id and never meets the ledger. Before
+        reading, the head commit is therefore healed from its own lease
+        whatever its id (_heal_head): its events are those with seq in
+        (parent cursor, head cursor]."""
+        m = self.table.manifest() if self.table.exists() else None
+        after = _cursor(m.lease if m is not None else {})
+
+        def head_rows() -> DataFrame | None:
+            try:
+                lo = _cursor(self.table.manifest(m.parent).lease)
+            except FileNotFoundError:
+                return None  # parent expired: the head's range is unknown
+            if lo is not None and lo >= after:
+                # the head read nothing past its parent's cursor: maintenance
+                # (it carries the parent's lease) or a DLQ replay, whose
+                # rows are not in the log (replay_quarantine heals its own)
+                return None
+            return (self.reader.read_batch(after_seq=lo)
+                    .filter(F.col("seq") <= after))
+
+        if m is not None:
+            self._heal_head(m, head_rows)
         if batch_id is None:
             batch_id = f"manual-{-1 if after is None else after}"
         batch = self.reader.read_batch(after_seq=after)

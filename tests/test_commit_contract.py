@@ -5,7 +5,8 @@ rebucket, expire_tombstones, rollback) must, on main and on a branch handle:
 parent the new manifest on the handle's previous head, advance only the
 handle's ref, write a new lease for data commits and carry the parent's lease
 byte-identical for maintenance (the target's for rollback), record its ledger
-entry, and carry the create-time table properties."""
+entry, carry the create-time table properties, and leave every bucket of the
+copy-on-write table holding exactly one file."""
 
 import json
 import os
@@ -136,6 +137,9 @@ def test_commit_contract(spark, base, tmp_path, op, on_branch):
     expect_buckets = 8 if op is _rebucket else parent.n_buckets
     assert new.n_buckets == expect_buckets
     assert new.write_mode == parent.write_mode == "cow"
+    # copy-on-write keeps every bucket at one file: the layout readers and
+    # maintenance treat as resolved
+    assert new.files and all(len(fs) == 1 for fs in new.by_bucket.values())
     assert new.bloom_cols == parent.bloom_cols == ["path"]
     assert new.bucket_cols == parent.bucket_cols == ["repo"]
     assert new.key_cols == parent.key_cols

@@ -478,10 +478,10 @@ class TestLakeReads:
         assert a == b > 0
         assert all((f.col_stats or {}).get("repo") for f in m.files)
 
-    def test_read_where_mor_never_prunes_mutable_columns(self, spark, tmpdir_path):
-        """Under merge-on-read, zone-pruning a NON-key column could drop the
-        delta file that moved a key out of the predicate range and resurface
-        its stale base row — the engine must only prune on key columns."""
+    @staticmethod
+    def _mor_key_moved_out_of_python(spark, tmpdir_path):
+        """A mor table over 2 buckets ('a' hashes to 0, 'b' to 1) where a
+        delta file in bucket 0 moves key 'a' from python to go."""
         from pyspark.sql import Row, types as T
 
         table = LakeTable(spark, f"{tmpdir_path}/mor_zone/table",
@@ -495,6 +495,13 @@ class TestLakeReads:
              Row(k="b", lang="python", seq=2, op="insert")]), batch_id=0)
         table.merge(spark.createDataFrame(
             [Row(k="a", lang="go", seq=10, op="update")]), batch_id=1)
+        return table
+
+    def test_read_where_mor_never_prunes_mutable_columns(self, spark, tmpdir_path):
+        """Under merge-on-read, zone-pruning a NON-key column could drop the
+        delta file that moved a key out of the predicate range and resurface
+        its stale base row — the engine must only prune on key columns."""
+        table = self._mor_key_moved_out_of_python(spark, tmpdir_path)
         got = {r["k"]: r["lang"]
                for r in table.read_where([("lang", "=", "python")]).collect()}
         assert got == {"b": "python"}  # 'a' moved to go: stale row must not leak
@@ -502,10 +509,28 @@ class TestLakeReads:
         assert {r["k"] for r in
                 table.read_where([("k", "=", "a")]).collect()} == {"a"}
 
+    def test_read_where_mor_prunes_mutable_columns_once_compacted(
+            self, spark, tmpdir_path):
+        """compact() folds bucket 0 back to one resolved file, so non-key
+        zone maps prune it again: its only row moved to 'go', and a
+        lang = 'python' read skips it."""
+        table = self._mor_key_moved_out_of_python(spark, tmpdir_path)
+        assert table.compact()["compacted_buckets"] == 1
+        assert sorted(f.bucket for f in table.manifest().files) == [0, 1]
+        assert [f.bucket for f in
+                table.candidate_files([("lang", "=", "python")])] == [1]
+        got = {r["k"]: r["lang"]
+               for r in table.read_where([("lang", "=", "python")]).collect()}
+        assert got == {"b": "python"}
+
 class TestMaintenance:
-    def test_compact_preserves_state_and_lease(self, spark, tmpdir_path):
-        pipe, log_dir = _pipe(spark, tmpdir_path)
-        # several tiny batches leave multiple files per bucket after evolution
+    @pytest.mark.parametrize("write_mode", ["cow", "mor"])
+    def test_compact_preserves_state_and_lease(self, spark, tmpdir_path,
+                                               write_mode):
+        pipe, log_dir = _pipe(spark, tmpdir_path, write_mode=write_mode)
+        # mor: two batches leave two files per touched bucket, which compact
+        # folds back to one; cow keeps one file per bucket, so it compacts
+        # single-file buckets (min_files_per_bucket=1)
         pipe.apply_batch(gen_changelog(spark, 600, seed=13), batch_id=0)
         pipe.apply_batch(
             gen_changelog(spark, 300, seed=13, start_seq=600, evolution_point=0),
@@ -516,7 +541,9 @@ class TestMaintenance:
         tomb_before = pipe.table.read(include_deleted=True).filter(
             F.col("_last_op") == "delete").count()
         assert tomb_before > 0, "fixture must leave tombstones to protect"
-        res = pipe.table.compact()
+        res = pipe.table.compact(
+            min_files_per_bucket=1 if write_mode == "cow" else 2)
+        assert res["compacted_buckets"] > 0
         after = _state(pipe.table)
         assert after.equals(before)
         assert pipe.table.lease() == lease
@@ -525,8 +552,7 @@ class TestMaintenance:
         tomb_after = pipe.table.read(include_deleted=True).filter(
             F.col("_last_op") == "delete").count()
         assert tomb_after == tomb_before
-        if res["compacted_buckets"]:
-            assert res["files_after"] <= res["files_before"]
+        assert res["files_after"] <= res["files_before"]
 
     def test_compact_sorted_clusters_files(self, spark, tmpdir_path):
         """compact(sort_cols=...) = Iceberg's SORT rewrite: same state, but each

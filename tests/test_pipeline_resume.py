@@ -155,3 +155,44 @@ def test_redelivery_heals_a_crashed_lease_write(spark, tmpdir_path,
                                                 monkeypatch):
     _redelivery_heals_head(spark, tmpdir_path, monkeypatch,
                            CDCPipeline, "_write_lease")
+
+
+def _run_batch_retry_heals_head(spark, d, monkeypatch, cls, name):
+    """Crash once in `cls.name` after run_batch()'s manifest commit, then
+    call run_batch() again: the retry reads from the advanced cursor under
+    a new id, so it must heal the crashed head from its lease first — the
+    queue holds that batch's rows exactly once and the lease sidecar
+    matches the table."""
+    sink = JsonQueueSink(spark, f"{d}/queue")
+    pipe = _pipe(spark, d, quarantine_dir=f"{d}/dlq", queue_sink=sink)
+    log = gen_changelog(spark, 200, seed=35, n_repos=5, paths_per_repo=3)
+    write_changelog(log.filter(F.col("seq") < 100), f"{d}/log",
+                    files_per_bucket=1)
+    pipe.run_batch()
+    write_changelog(log.filter(F.col("seq") >= 100), f"{d}/log",
+                    files_per_bucket=1)
+
+    _crash_once(monkeypatch, cls, name)
+    with pytest.raises(RuntimeError, match="crash in"):
+        pipe.run_batch()
+    assert pipe.table.lease()["lease"] == "199"
+    pipe.run_batch()
+
+    assert pipe.current_lease() == pipe.table.lease()
+    captured = EngineConfig().captured_ops
+    expect = sorted(r["seq"] for r in log.collect() if r["op"] in captured)
+    assert sorted(r["seq"] for r in sink.consume().collect()) == expect
+    assert sorted(r["batch_id"] for r in sink.committed_batches()) == [
+        "manual--1", "manual-199", "manual-99"]
+
+
+def test_run_batch_retry_heals_a_crashed_queue_produce(spark, tmpdir_path,
+                                                       monkeypatch):
+    _run_batch_retry_heals_head(spark, tmpdir_path, monkeypatch,
+                                JsonQueueSink, "produce")
+
+
+def test_run_batch_retry_heals_a_crashed_lease_write(spark, tmpdir_path,
+                                                     monkeypatch):
+    _run_batch_retry_heals_head(spark, tmpdir_path, monkeypatch,
+                                CDCPipeline, "_write_lease")
